@@ -76,6 +76,11 @@ object Crawler {
   private val WorkerStatsDdl =
     "round int, part_id int, processed bigint, completed bigint, links_found bigint"
 
+  /** Every status a fetch result can take (see the `results` frame in
+   * [[run]]); the round's counters are a histogram over them. */
+  private val FetchStatuses =
+    Seq("ok", "ok_non_html", "timeout", "failed", "skipped_robots", "quarantined")
+
   case class RoundStats(
       round: Int, dispatched: Long, completed: Long, failed: Long,
       requeued: Long, admitted: Long, frontierSize: Long, seenSize: Long)
@@ -335,6 +340,27 @@ object Crawler {
       Some(scala.concurrent.Await.result(p.future,
         scala.concurrent.duration.Duration(seconds, "s")))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** A round count observed on a checkpoint that already ran. These
+   * counts drive nextSeq and frontierSize, so unlike [[awaitObs]]'s
+   * callers a missing observation never falls back: it fails the round,
+   * naming it and the count. */
+  private def observedCounts(o: org.apache.spark.sql.Observation, round: Int,
+                             what: String): Map[String, Long] =
+    awaitObs(o, 60).map(_.map { case (k, v) => k -> v.asInstanceOf[Long] })
+      .getOrElse(throw new IllegalStateException(
+        s"round $round: observed count '$what' is missing"))
+
+  /** Row count of a checkpoint observed with [[countObs]]. */
+  private def observedCount(o: org.apache.spark.sql.Observation, round: Int,
+                            what: String): Long =
+    observedCounts(o, round, what)("n")
+
+  /** `df` observed for its row count (see [[observedCount]]). */
+  private def countObs(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
+    val o = new org.apache.spark.sql.Observation()
+    (df.observe(o, count(lit(1)).as("n")), o)
+  }
 
   /** Convert a legacy (pre-LSM) frontier — live rows only, `host_rank`
    * RELATIVE (per-host 1..k over the live set) or absent — to the absolute
@@ -622,14 +648,14 @@ object Crawler {
         val admitted = admit(spark, seedCand, emptySeen, emptyCounts, cfg, None)
         // the frontier starts empty, so admit's batch-local host_rank IS
         // the absolute host_rank (nothing enqueued before, nothing dispatched)
-        val f0 = assignSeq(spark,
+        val (f0Observed, f0Obs) = countObs(assignSeq(spark,
           admitted.select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank"),
           Seq(col("ord1"), col("ord2")), 0L)
-          .select("url", "host", "depth", "retry", "seq", "host_rank")
-          .localCheckpoint(true)
+          .select("url", "host", "depth", "retry", "seq", "host_rank"))
+        val f0 = f0Observed.localCheckpoint(true)
         val s0 = f0.select("url")
         val c0 = f0.groupBy("host").agg(count(lit(1)).as("cnt"))
-        val nSeed = f0.count()
+        val nSeed = observedCount(f0Obs, 0, "seed entries")
         sketch = graft.functions.SeenSketch.empty(cfg.seenSketch, cfg.sketchCapacity)
         graft.functions.SeenSketch.addAll(sketch, s0, "url", nSeed)
         pendingSeen = s0
@@ -740,13 +766,14 @@ object Crawler {
         // absolute rank = per-host enqueue total + admit's batch-local rank
         // (a broadcast join — the O(frontier) per-host count aggregation
         // the relative-rank design paid on injection rounds is gone)
-        val entries = assignSeq(spark, adm, Seq(col("ord1"), col("ord2")), nextSeq)
-          .select("url", "host", "depth", "retry", "seq", "host_rank")
-          .join(enqSide, Seq("host"), "left_outer")
-          .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
-          .drop("enq")
-          .localCheckpoint(true)
-        val nInj = entries.count()
+        val (entriesObserved, entriesObs) = countObs(
+          assignSeq(spark, adm, Seq(col("ord1"), col("ord2")), nextSeq)
+            .select("url", "host", "depth", "retry", "seq", "host_rank")
+            .join(enqSide, Seq("host"), "left_outer")
+            .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
+            .drop("enq"))
+        val entries = entriesObserved.localCheckpoint(true)
+        val nInj = observedCount(entriesObs, round, "injected entries")
         if (nInj > 0) {
           hostCountsDirty = true
           nextSeq += nInj
@@ -858,6 +885,7 @@ object Crawler {
           .otherwise(lit("ok")).as("status"),
         col("raw"), col("content_type"))
 
+      val resultsObs = new org.apache.spark.sql.Observation()
       val results = fetchedTyped.unionByName(
         missing.select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
           // same gate ORDER as the fetched branch: quarantine, then robots
@@ -871,6 +899,12 @@ object Crawler {
         .withColumn("spans",
           when(col("status") === "ok", gf.extract_spans(col("raw")))
             .otherwise(array().cast(graft.functions.SpanExtract.schema)))
+        // the round's counters: a per-status histogram plus the timeouts
+        // past maxRetries, observed on this checkpoint (no job of their own)
+        .observe(resultsObs, count(lit(1)).as("dispatched"),
+          FetchStatuses.map(st => count(when(col("status") === st, 1)).as(st)) :+
+            count(when(col("status") === "timeout" &&
+              col("retry") + 1 > cfg.maxRetries, 1)).as("timeout_exhausted"): _*)
         .localCheckpoint(true) // parse once; reused by links/doc_store/log
 
       // ---- timeout requeue (T2/T3): retry+1, terminal past maxRetries.
@@ -905,9 +939,10 @@ object Crawler {
 
       val prefilter =
         if (seenSize >= sketchThreshold && !sketch.saturated) Some(sketch) else None
-      val admitted = admit(spark, candidates, seen, hostCounts, cfg, prefilter, seenDeltas)
-        .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank")
-        .localCheckpoint(true)
+      val (admittedObserved, admittedObs) = countObs(
+        admit(spark, candidates, seen, hostCounts, cfg, prefilter, seenDeltas)
+          .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank"))
+      val admitted = admittedObserved.localCheckpoint(true)
 
       // ---- new sequence numbers: timeout requeues go to the back of the
       // queue first (gcloud_master.py:525-531), then children in
@@ -926,16 +961,16 @@ object Crawler {
       // the host ever enqueued — lrank_ + the per-host enqueue total (a
       // gated-broadcast join; equal to the old deferred-count offset plus
       // the dispatch history, which the liveness predicate subtracts back)
-      val newEntries = assignSeq(spark, adds,
-        Seq(col("bucket"), col("ord1"), col("ord2")), nextSeq)
-        .join(enqSide, Seq("host"), "left_outer")
-        .withColumn("host_rank", col("lrank_") + coalesce(col("enq"), lit(0L)))
-        .select("url", "host", "depth", "retry", "seq", "host_rank")
-        .localCheckpoint(true)
-      val addsCount = newEntries.count()
+      val (newEntriesObserved, newEntriesObs) = countObs(
+        assignSeq(spark, adds, Seq(col("bucket"), col("ord1"), col("ord2")), nextSeq)
+          .join(enqSide, Seq("host"), "left_outer")
+          .withColumn("host_rank", col("lrank_") + coalesce(col("enq"), lit(0L)))
+          .select("url", "host", "depth", "retry", "seq", "host_rank"))
+      val newEntries = newEntriesObserved.localCheckpoint(true)
+      val addsCount = observedCount(newEntriesObs, round, "new entries")
       nextSeq += addsCount
       // seen grows by admitted only (requeues are already-seen URLs)
-      val admittedCount = admitted.count() // cheap: checkpointed
+      val admittedCount = observedCount(admittedObs, round, "admitted")
 
       // ---- state updates (the deferred remainder needs NONE: its rows sit
       // untouched in the raw LSM view; next round's larger dispatch totals
@@ -1040,16 +1075,12 @@ object Crawler {
       // ---- round counters (CrawlState sizes, gcloud_master.py:686-688),
       // computed pre-commit so they ride in the SAME atomic snapshot and
       // /status projections (§3.3) read tables, never driver state.
-      // ONE aggregation job over the checkpointed results replaces five
-      // separate counts — per-round fixed driver cost is the crawl-round
-      // scaling bottleneck at sandbox scale (BENCH.md).
-      val byStatus = results.groupBy("status").agg(
-        count(lit(1)).as("n"),
-        count(when(col("retry") + 1 > cfg.maxRetries, 1)).as("n_exhausted"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      def n(s: String) = byStatus.get(s).map(_._1).getOrElse(0L)
-      val nDispatched = byStatus.values.map(_._1).sum
-      val timeoutExhausted = byStatus.get("timeout").map(_._2).getOrElse(0L)
+      // They are OBSERVED on the results checkpoint (per-status histogram
+      // plus exhausted timeouts): no aggregation job of their own, since
+      // per-round fixed job cost bounds the crawl round at this scale.
+      val n = observedCounts(resultsObs, round, "results by status")
+      val nDispatched = n("dispatched")
+      val timeoutExhausted = n("timeout_exhausted")
       val nFailed = n("failed") + n("skipped_robots") + n("quarantined") + timeoutExhausted
       val nCompleted = n("ok") + n("ok_non_html")
       val nRequeued = n("timeout") - timeoutExhausted

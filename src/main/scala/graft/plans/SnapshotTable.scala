@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
@@ -14,11 +15,29 @@ import scala.jdk.CollectionConverters._
  *
  * Layout:
  *   root/data/<table>/r00042/          parquet files for that round's version
+ *   root/data/<table>/r00042/_schema.json   the directory's schema (see below)
  *   root/_manifests/r00042.json        { round, meta{...}, tables{name→path} }
  *
- * Replaced tables (frontier, seen, host_counts) point at their r<round>
- * directory; append tables (fetch_log, counters) accumulate one directory
- * per round and are read as a glob of all rounds ≤ the loaded one.
+ * Three table kinds, by how a round's commit names them:
+ *  - replaced (host_counts, host_sched, host_enq, quarantined): the
+ *    manifest points at one r<round> directory, possibly an earlier
+ *    round's when the table is carried unchanged;
+ *  - hybrid (frontier, seen, failed): a replace base plus the append
+ *    deltas committed after it ([[loadHybrid]]);
+ *  - append (fetch_log, counters, pages, doc_store, postings,
+ *    worker_stats): one directory per round that wrote rows, read as the
+ *    union of all rounds ≤ the loaded one.
+ *
+ * Every directory a commit writes carries its schema in `_schema.json`
+ * (Spark's file listing skips `_`-prefixed names), written before the
+ * manifest rename and so covered by the same atomic commit. Loads read
+ * with that schema instead of inferring it — no per-directory footer job —
+ * and a zero-row bucketed write, which leaves no parquet file at all,
+ * still reads as an empty table. Directories without the sidecar
+ * (snapshots committed before it existed) fall back to inference.
+ *
+ * Manifest meta values are plain strings; `"` and `\` are rejected at
+ * commit (the manifest is written and parsed without escaping).
  *
  * No Iceberg runtime jar exists in this sandbox (offline resolution); the
  * interface is deliberately narrow so a real catalog could replace it.
@@ -38,7 +57,8 @@ class SnapshotTable(val root: String) {
    * CHANGED, not the accumulated table sizes. `metaLate` is evaluated
    * after the table writes but before the manifest rename — for metadata
    * only observable once the writes ran (e.g. `Observation` metrics
-   * collected during a write), still inside the atomic commit.
+   * collected during a write), still inside the atomic commit. Meta keys
+   * and values containing `"` or `\` are rejected (see the class doc).
    */
   def commit(spark: SparkSession, round: Int,
              replaced: Map[String, DataFrame],
@@ -48,6 +68,7 @@ class SnapshotTable(val root: String) {
              bucketed: Map[String, org.apache.spark.sql.Column] = Map.empty,
              carried: Map[String, Int] = Map.empty,
              metaLate: () => Map[String, String] = () => Map.empty): Unit = {
+    SnapshotTable.checkMeta(meta)
     Files.createDirectories(manifestDir)
     val all = replaced ++ appended
     // the tables are independent directories — submit their write jobs
@@ -63,19 +84,23 @@ class SnapshotTable(val root: String) {
       Future {
         val t0 = System.nanoTime()
         val path = s"$root/data/$name/${rid(round)}"
-        bucketed.get(name) match {
+        val written = bucketed.get(name) match {
           // physically bucket the table (Iceberg `bucket(N, …)` analog):
-          // one file per bucket dir, prunable and co-locatable. A zero-row
-          // partitioned write would leave no readable footer, so empty
-          // tables fall through to a plain (schema-carrying) write.
-          case Some(bucketExpr) if !df.isEmpty =>
-            df.withColumn("p_bucket", bucketExpr)
-              .repartition(SnapshotTable.Buckets,
-                org.apache.spark.sql.functions.col("p_bucket"))
+          // one file per non-empty bucket dir, prunable and co-locatable.
+          // Hash-partitioning on the bucket column keeps each bucket in one
+          // task while AQE sizes the task count to the data. A zero-row
+          // write leaves no parquet file; the schema sidecar makes it read
+          // back as an empty table.
+          case Some(bucketExpr) =>
+            val b = df.withColumn("p_bucket", bucketExpr)
+            b.repartition(org.apache.spark.sql.functions.col("p_bucket"))
               .write.mode("overwrite").partitionBy("p_bucket").parquet(path)
-          case _ =>
+            b
+          case None =>
             df.write.mode("overwrite").parquet(path)
+            df
         }
+        Files.writeString(Paths.get(path, SnapshotTable.SchemaFile), written.schema.json)
         if (trace) System.err.println(
           f"[commit-trace] r$round $name write=${(System.nanoTime() - t0) / 1e9}%.2f")
       }
@@ -97,6 +122,7 @@ class SnapshotTable(val root: String) {
     val kindJson = ((replaced.keys ++ carriedPaths.keys).map(n => s""""$n": "replace"""") ++
       appended.keys.map(n => s""""$n": "append"""")).mkString(",")
     val metaLateVals = metaLate()
+    SnapshotTable.checkMeta(metaLateVals)
     if (trace) System.err.println(
       f"[commit-trace] r$round metaLate=${(System.nanoTime() - tMetaLate) / 1e9}%.2f")
     val metaJson = (meta ++ metaLateVals)
@@ -179,7 +205,7 @@ class SnapshotTable(val root: String) {
    * holds their data. */
   def loadReplaced(spark: SparkSession, name: String, round: Int): DataFrame = {
     val path = tables(round).getOrElse(name, s"data/$name/${rid(round)}")
-    stripBuckets(spark.read.parquet(s"$root/$path"))
+    readDir(spark, s"$root/$path")
   }
 
   /** Binary sidecar committed with the round, if any. */
@@ -220,28 +246,53 @@ class SnapshotTable(val root: String) {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
-  private def stripBuckets(df: DataFrame): DataFrame =
+  /** One committed directory, read with its recorded schema when it has
+   * one (no inference job), by inference otherwise; bucket partition
+   * columns are dropped. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame = {
+    val sidecar = Paths.get(dir, SnapshotTable.SchemaFile)
+    val reader =
+      if (Files.exists(sidecar)) spark.read.schema(
+        DataType.fromJson(Files.readString(sidecar)).asInstanceOf[StructType])
+      else spark.read
+    val df = reader.parquet(dir)
     if (df.columns.contains("p_bucket")) df.drop("p_bucket") else df
+  }
 
   /** Union of per-directory reads. Tier directories of one hybrid table can
-   * legitimately differ in PHYSICAL layout — a bucketed base has
-   * `p_bucket=N/` partition dirs while a zero-row compaction falls back to
-   * a flat schema-carrying file (a zero-row partitioned write would leave
-   * no readable footer) — and a single multi-path `read.parquet(dirs…)`
-   * rejects that mix at partition inference. Reading each directory on its
-   * own and unioning keeps the scan shape identical (a union of file scans)
-   * while making the layouts independent. */
+   * differ in PHYSICAL layout — a bucketed tier has `p_bucket=N/`
+   * partition dirs, while snapshots committed before the schema sidecar
+   * wrote zero-row bucketed tables flat — and a single multi-path
+   * `read.parquet(dirs…)` rejects that mix at partition inference. Reading
+   * each directory on its own and unioning keeps the scan shape identical
+   * (a union of file scans) while making the layouts independent. */
   private def readUnion(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(d => stripBuckets(spark.read.parquet(d))).reduce(_.unionByName(_))
+    dirs.map(readDir(spark, _)).reduce(_.unionByName(_))
 }
 
 object SnapshotTable {
   /** Physical bucket fan-out for bucketed tables. */
   val Buckets = 32
 
+  /** Per-directory schema sidecar (`StructType.json`). */
+  val SchemaFile = "_schema.json"
+
+  /** Manifest meta must round-trip through the unescaped JSON writer and
+   * the regex reader: no `"` or `\` in keys or values, and no key named
+   * like a manifest section. */
+  private def checkMeta(meta: Map[String, String]): Unit =
+    meta.foreach { case (k, v) =>
+      require(!Seq(k, v).exists(s => s.contains('"') || s.contains('\\')),
+        s"manifest meta key '$k': keys and values may not contain a double quote or a backslash")
+      require(k != "kind" && k != "tables",
+        s"manifest meta key '$k' collides with a manifest section name")
+    }
+
   /** Bounded pool for concurrent commit writes (daemon threads: the pool
-   * must never keep a JVM alive). 6 ≈ the number of non-trivial tables a
-   * round commits; the cluster-side parallelism comes from Spark itself. */
+   * must never keep a JVM alive). A crawl round commits up to 13 tables,
+   * most of them a few hundred rows; 6 concurrent writes keep the cores
+   * busy without queueing every write's job at once. The cluster-side
+   * parallelism comes from Spark itself. */
   private[plans] lazy val writeEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newFixedThreadPool(6, r => {

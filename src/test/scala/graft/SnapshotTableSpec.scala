@@ -4,6 +4,7 @@ import graft.plans.SnapshotTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Commit-log mechanics in isolation (T6/T8 storage layer): carried
  * tables resolve through the manifest to the round that last wrote them,
@@ -120,5 +121,94 @@ class SnapshotTableSpec extends AnyFunSuite {
       metaLate = () => { sideEffect = "ran"; Map("late" -> "2") })
     assert(sideEffect == "ran")
     assert(snap.meta(0) == Map("early" -> "1", "late" -> "2"))
+  }
+
+  test("manifest meta with a quote or backslash is rejected at commit, naming the key") {
+    import spark.implicits._
+    val snap = new SnapshotTable(Files.createTempDirectory("snap-escape").toString)
+    snap.commit(spark, 0, replaced = Map("t" -> Seq(1L).toDF("v")),
+      appended = Map.empty, meta = Map("ok" -> "plain"))
+    Seq("quoted" -> "a\"b", "slashed" -> "c:\\d").foreach { case (k, v) =>
+      val e = intercept[IllegalArgumentException](
+        snap.commit(spark, 1, replaced = Map.empty, appended = Map.empty,
+          meta = Map(k -> v)))
+      assert(e.getMessage.contains(s"'$k'"), e.getMessage)
+    }
+    // a bad key, and bad late meta (checked after the writes, before the
+    // manifest rename): the round never becomes visible
+    val e = intercept[IllegalArgumentException](
+      snap.commit(spark, 1, replaced = Map("t" -> Seq(2L).toDF("v")),
+        appended = Map.empty, meta = Map.empty,
+        metaLate = () => Map("late\"key" -> "1")))
+    assert(e.getMessage.contains("late\"key"), e.getMessage)
+    intercept[IllegalArgumentException](
+      snap.commit(spark, 1, replaced = Map.empty, appended = Map.empty,
+        meta = Map("tables" -> "x")))
+    assert(snap.latestRound.contains(0))
+    assert(snap.meta(0) == Map("ok" -> "plain"))
+    assert(snap.loadReplaced(spark, "t", 0).as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("schema-carrying reads: a fresh instance loads what the writer loads, with no Spark job") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("snap-schema").toString
+    val writer = new SnapshotTable(root)
+    val bucket = pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))
+    // types a schema round trip could lose: nested struct, array, nulls
+    val plain = Seq(("a", 1L, 1.5, true, Seq("x", "y"), ("s", 7)),
+      ("b", 2L, -0.5, false, Seq.empty[String], null))
+      .toDF("k", "v", "d", "flag", "tags", "nested")
+    val rows = (0 until 200).map(i => (s"https://h$i.test/p", s"h${i % 37}.test", i.toLong))
+      .toDF("url", "host", "seq")
+    val tier = rows.where(col("seq") >= 150)
+    writer.commit(spark, 0, replaced = Map("plain" -> plain, "h" -> rows.where(col("seq") < 100)),
+      appended = Map.empty, meta = Map.empty, bucketed = Map("h" -> bucket))
+    // round 1: a zero-row bucketed tier (no parquet file at all)
+    writer.commit(spark, 1, replaced = Map.empty, appended = Map("h" -> rows.limit(0)),
+      meta = Map.empty, bucketed = Map("h" -> bucket), carried = Map("plain" -> 0))
+    writer.commit(spark, 2, replaced = Map.empty, appended = Map("h" -> tier),
+      meta = Map.empty, bucketed = Map("h" -> bucket), carried = Map("plain" -> 1))
+    val empty = java.nio.file.Paths.get(root, "data", "h", "r00001")
+    // bucket layout: each p_bucket=N dir holds exactly the rows whose
+    // host hashes to N, in one file
+    val raw = spark.read.parquet(s"$root/data/h/r00000")
+    assert(raw.where(col("p_bucket") =!= bucket).count() == 0)
+    def listed(d: java.nio.file.Path) =
+      scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toList)
+    listed(java.nio.file.Paths.get(root, "data", "h", "r00000"))
+      .filter(_.getFileName.toString.startsWith("p_bucket=")).foreach { d =>
+        val parquet = listed(d).count(_.getFileName.toString.endsWith(".parquet"))
+        assert(parquet == 1, s"$d holds $parquet files")
+      }
+    val emptyFiles = listed(empty).map(_.getFileName.toString).filterNot(_.startsWith(".")).toSet
+    assert(emptyFiles == Set("_SUCCESS", SnapshotTable.SchemaFile), emptyFiles)
+
+    def loads(s: SnapshotTable): Seq[(String, DataFrame)] = Seq(
+      "replaced" -> s.loadReplaced(spark, "plain", 0),
+      "carried" -> s.loadReplaced(spark, "plain", 2),
+      "hybrid" -> s.loadHybrid(spark, "h", 2),
+      "hybrid with a zero-row tier" -> s.loadHybrid(spark, "h", 1))
+    def same(what: String, a: DataFrame, b: DataFrame): Unit = {
+      assert(a.schema == b.schema, s"$what: schema ${a.schema} vs ${b.schema}")
+      assert(a.collect().map(_.toString).sorted.toSeq == b.collect().map(_.toString).sorted.toSeq,
+        s"$what: rows differ")
+    }
+    val (fresh, jobs) = JobCounter.count(spark.sparkContext)(loads(new SnapshotTable(root)))
+    assert(jobs == 0, s"sidecar-carrying loads launched $jobs jobs")
+    loads(writer).zip(fresh).foreach { case ((what, w), (_, f)) => same(what, w, f) }
+    val hybrid = fresh.toMap
+    assert(hybrid("hybrid").count() == 150)
+    assert(hybrid("hybrid with a zero-row tier").count() == 100)
+    // the recorded schema is exactly the one inference finds
+    same("inferred", spark.read.parquet(s"$root/data/plain/r00000"), hybrid("replaced"))
+
+    // a directory without the sidecar (committed before it existed) falls
+    // back to inference: same schema and rows, and the inference job shows
+    Files.delete(java.nio.file.Paths.get(root, "data", "plain", "r00000", SnapshotTable.SchemaFile))
+    val (inferred, inferJobs) = JobCounter.count(spark.sparkContext)(
+      new SnapshotTable(root).loadReplaced(spark, "plain", 2))
+    assert(inferJobs > 0, "inference launched no job: the counter is blind")
+    same("inference fallback", inferred, hybrid("carried"))
   }
 }

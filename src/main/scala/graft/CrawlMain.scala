@@ -39,14 +39,20 @@ object CrawlMain {
   private[graft] def parse(argv: Array[String]): Args = {
     var a = Args(null, null, None, None, None, Int.MaxValue, statusOnly = false)
     var i = 0
+    // the value of the flag at argv(i); a value flag in last place is a
+    // usage error, not an index error
+    def value(): String = {
+      require(i + 1 < argv.length, s"${argv(i)} needs a value")
+      argv(i + 1)
+    }
     while (i < argv.length) {
       argv(i) match {
-        case "--docs" => a = a.copy(docs = argv(i + 1)); i += 2
-        case "--root" => a = a.copy(root = argv(i + 1)); i += 2
-        case "--config" => a = a.copy(config = Some(argv(i + 1))); i += 2
-        case "--seeds" => a = a.copy(seeds = Some(argv(i + 1))); i += 2
-        case "--policies" => a = a.copy(policies = Some(argv(i + 1))); i += 2
-        case "--rounds" => a = a.copy(rounds = argv(i + 1).toInt); i += 2
+        case "--docs" => a = a.copy(docs = value()); i += 2
+        case "--root" => a = a.copy(root = value()); i += 2
+        case "--config" => a = a.copy(config = Some(value())); i += 2
+        case "--seeds" => a = a.copy(seeds = Some(value())); i += 2
+        case "--policies" => a = a.copy(policies = Some(value())); i += 2
+        case "--rounds" => a = a.copy(rounds = value().toInt); i += 2
         case "--status-only" => a = a.copy(statusOnly = true); i += 1
         case other => throw new IllegalArgumentException(s"unknown arg: $other")
       }

@@ -36,14 +36,16 @@ import org.apache.spark.sql.types.LongType
  *    broadcast Bloom sketch once `seen` is large (D1): bloom-negative
  *    candidates skip the join entirely; positives are exactly re-checked,
  *    so false positives never drop URLs.
- *  - per-host politeness and caps are rank windows partitioned by host —
- *    the only per-host serialization the problem truly requires. Hot-host
- *    skew (the reference's own field data: one host held 421/738 pages) is
- *    defused by SALTED TWO-PHASE windows: phase 1 ranks within
+ *  - politeness dispatch is rank arithmetic, not a window: every frontier
+ *    row carries its host's absolute enqueue rank, so "the host's next
+ *    `budget` rows" is one predicate over a broadcast budget join
+ *    ([[dispatchSelectAbs]]).
+ *  - the per-host admission cap is the one per-host window. Hot-host skew
+ *    (the reference's own field data: one host held 421/738 pages) is
+ *    defused by a SALTED TWO-PHASE window: phase 1 ranks within
  *    (host, salt = xxhash64(url) % S) buckets — S-way parallel even for a
- *    host holding half the frontier — and keeps only ranks ≤ the per-host
- *    budget/cap, so phase 2's true per-host window sees ≤ S·budget rows
- *    per host instead of the host's whole backlog.
+ *    host holding half the batch — and keeps only ranks ≤ the cap, so
+ *    phase 2's true per-host window sees ≤ S·cap rows per host.
  *  - intra-batch URL dedup is a min(struct(order…)) hash aggregation, not
  *    a per-URL window: partial aggregation combines duplicates map-side,
  *    so a URL every page links to (a homepage) never concentrates rows
@@ -59,7 +61,7 @@ import org.apache.spark.sql.types.LongType
  */
 object Crawler {
 
-  /** Salt fan-out for the two-phase per-host windows. */
+  /** Salt fan-out for the two-phase per-host cap window. */
   val SaltBuckets = 16
 
   // Append-table schemas, for schema-correct empty reads of tables no
@@ -305,7 +307,7 @@ object Crawler {
     // predicate keeps a per-host PREFIX of the rank sequence), which is
     // exactly the increment the frontier's host_rank invariant needs — the
     // politeness dispatch is rank-arithmetic over it, never a re-sort
-    // (see dispatchSelect).
+    // (see dispatchSelectAbs).
     pruned
       .withColumn("host_rank", row_number().over(hostW).cast(LongType))
       .join(broadcast(hostCounts), Seq("host"), "left_outer")
@@ -313,16 +315,6 @@ object Crawler {
       .where(col("prior") + col("host_rank") <= lit(cfg.maxPagesPerDomain))
       .drop("cnt", "prior")
   }
-
-  /** Backfill `host_rank` — per-host consecutive 1..k in seq order — on a
-   * frontier committed by an engine version that predates the column.
-   * One window, paid once at resume time only: every steady-state path
-   * (seeding, admission, dispatch deferral, reset reopen) maintains the
-   * column arithmetically. */
-  private def ensureHostRank(df: DataFrame): DataFrame =
-    if (df.columns.contains("host_rank")) df
-    else df.withColumn("host_rank", row_number()
-      .over(Window.partitionBy(col("host")).orderBy(col("seq"))).cast(LongType))
 
   /** Bounded wait for an Observation's metrics on a DEDICATED DAEMON
    * thread (Await does not cancel an abandoned future — on the global pool
@@ -362,16 +354,39 @@ object Crawler {
     (df.observe(o, count(lit(1)).as("n")), o)
   }
 
-  /** Convert a legacy (pre-LSM) frontier — live rows only, `host_rank`
-   * RELATIVE (per-host 1..k over the live set) or absent — to the absolute
-   * enqueue-rank form: abs = relative + rows of that host already
-   * dispatched. Paid once at resume/reset of an old snapshot only. */
-  private def toAbsRanks(df: DataFrame, hostSched: DataFrame): DataFrame =
-    ensureHostRank(df)
-      .join(hostSched, Seq("host"), "left_outer")
-      .withColumn("host_rank",
-        col("host_rank") + coalesce(col("dispatched"), lit(0L)))
-      .drop("dispatched")
+  /** Per-host table `table(host, c)` with each host's row count in `rows`
+   * added to `c`: a full outer join, so hosts new to either side appear. */
+  private def plusHostCounts(table: DataFrame, c: String, rows: DataFrame): DataFrame =
+    table.join(rows.groupBy("host").agg(count(lit(1)).as("add_")), Seq("host"), "full_outer")
+      .select(col("host"), (coalesce(col(c), lit(0L)) + coalesce(col("add_"), lit(0L))).as(c))
+
+  /** Manifest meta of committed round `r`, checked against the one
+   * snapshot format the engine reads: an absolute-rank LSM frontier
+   * (`frontierAbsRank=1`) and the nextSeq/frontierSize/seenSize stamps
+   * that every crawl-round and reset commit writes. Resume must be exact
+   * from any round boundary, so any other snapshot fails here rather
+   * than being converted or re-counted. */
+  private def roundMeta(snap: SnapshotTable, r: Int): Map[String, String] = {
+    val m = snap.meta(r)
+    val problems =
+      (if (m.get("frontierAbsRank").contains("1")) Nil
+       else Seq(s"frontierAbsRank is ${m.getOrElse("frontierAbsRank", "absent")}, expected 1")) ++
+        Seq("nextSeq", "frontierSize", "seenSize").filterNot(m.contains)
+          .map(k => s"meta stamp $k is missing")
+    if (problems.nonEmpty) throw new IllegalStateException(
+      s"unsupported crawl snapshot at ${snap.root}, round $r: ${problems.mkString("; ")}")
+    m
+  }
+
+  /** The seen sketch committed with round `r`. A missing or unreadable
+   * blob is rebuilt from `seen`: the sketch is reconstructible state, so
+   * it never forfeits a resume or a reset. */
+  private def loadSketch(snap: SnapshotTable, r: Int, seen: DataFrame,
+                         cfg: CrawlConfig): graft.functions.SeenSketch =
+    snap.loadBlob("seen_sketch", r)
+      .flatMap(b => scala.util.Try(graft.functions.SeenSketch.deserialize(b)).toOption)
+      .getOrElse(graft.functions.SeenSketch.build(seen, "url",
+        cfg.seenSketch, cfg.sketchCapacity))
 
   /** Live rows of a RAW (absolute-rank) frontier view: a row is live iff
    * its absolute enqueue rank lies past the host's dispatch total —
@@ -405,9 +420,17 @@ object Crawler {
    * to a 10^10-row frontier.
    *
    * `budget` carries (host, remaining, allow, disp_total); hosts absent
-   * from it default to (defaultRemaining, allow, 0). Join strategy is
-   * size-gated exactly like [[dispatchSelect]]: broadcast under the bound,
-   * hinted shuffle-hash past it.
+   * from it default to (defaultRemaining, allow, 0).
+   *
+   * JOIN STRATEGY, size-gated like the fetch join: the budget side is
+   * per-HOST (one row per policy/dispatch-history host), so when the
+   * caller can bound its row count under `broadcastRowLimit` the budget
+   * is broadcast and the dispatch touches the frontier with NO exchange
+   * at all. run() maintains that bound for free (policy rows counted once
+   * per crawl + a host_sched count observed during each commit's own
+   * write). Past the limit — 10^8+ distinct hosts — it degrades to a
+   * shuffle-hash join (hinted: a sort-merge join would re-sort the
+   * frontier); AQE may still upgrade it to broadcast at runtime.
    */
   def dispatchSelectAbs(frontierRaw: DataFrame, budget: DataFrame,
                         defaultRemaining: Long,
@@ -428,100 +451,6 @@ object Crawler {
       // one materialization, O(dispatched): the slice is consumed by the
       // fetch join, the missing anti-join, and the dispatch-count agg
       .localCheckpoint(true)
-  }
-
-  /**
-   * Politeness dispatch selection (T4): split the frontier into this
-   * round's dispatched slice (per-host first `remaining` entries in seq
-   * order) and the deferred remainder. `budget` has (host, remaining,
-   * allow); hosts absent from it get `defaultRemaining`.
-   *
-   * SORT-FREE on an engine-maintained frontier: the frontier carries
-   * `host_rank` — per-host consecutive 1..k in seq order — so "the first
-   * `rem` per host in seq order" is the pure predicate
-   * `host_rank <= rem`, and the deferred remainder's ranks shift down
-   * arithmetically (`host_rank - rem` is again consecutive from 1). The
-   * per-round dispatch is then ONE hash join (budget) + ONE
-   * materialization: no window, no sort, no per-host serialization at
-   * all — the two salted two-phase window sorts (and their second
-   * checkpoint) that previously ranked the ENTIRE frontier every round
-   * are gone, which is the difference between O(F log F) comparisons +
-   * 2 full-frontier sort exchanges per round and O(F) predicate
-   * evaluations on a 10^10-row frontier. The invariant is maintained
-   * incrementally by every producer: admit() emits batch-local ranks
-   * (its cap window, already paid), deferral shifts, and new entries
-   * offset by the deferred per-host counts.
-   *
-   * JOIN STRATEGY, size-gated like the fetch join: the budget side is
-   * per-HOST (one row per policy/dispatch-history host), so when the
-   * caller can bound its row count under `broadcastRowLimit` the budget
-   * is broadcast and the dispatch touches the frontier with NO exchange
-   * at all — a pure map over the checkpointed frontier blocks. run()
-   * maintains that bound for free (policy rows counted once per crawl +
-   * a host_sched count observed during each commit's own write). Past
-   * the limit — 10^8+ distinct hosts — it degrades to a shuffle-hash
-   * join (hinted: a sort-merge join would re-sort the frontier and
-   * defeat the point); AQE may still upgrade it to broadcast at runtime.
-   *
-   * A frontier WITHOUT the column (direct API callers, pre-upgrade
-   * snapshots — run() backfills via ensureHostRank at resume) falls back
-   * to the original salted two-phase window ranking.
-   */
-  def dispatchSelect(frontier: DataFrame, budget: DataFrame,
-                     defaultRemaining: Long,
-                     budgetRowBound: Option[Long] = None,
-                     broadcastRowLimit: Long = 1000000L): (DataFrame, DataFrame) = {
-    if (frontier.columns.contains("host_rank")) {
-      val budgetSide =
-        if (budgetRowBound.exists(_ <= broadcastRowLimit)) broadcast(budget)
-        else budget.hint("shuffle_hash")
-      val flagged = frontier
-        .join(budgetSide, Seq("host"), "left_outer")
-        .withColumn("rem_",
-          greatest(coalesce(col("remaining"), lit(defaultRemaining)), lit(0L)))
-        .withColumn("is_dispatched", col("host_rank") <= col("rem_"))
-        // one materialization serves both consumers (fetch join + new
-        // frontier) and the per-host count aggregations over each side
-        .localCheckpoint(true)
-      val dispatched = flagged.where(col("is_dispatched"))
-        .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-          coalesce(col("allow"), lit(true)).as("robots_allow"))
-      val deferred = flagged.where(!col("is_dispatched"))
-        .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-          (col("host_rank") - col("rem_")).as("host_rank"))
-      return (dispatched, deferred)
-    }
-    val withRem = frontier
-      .join(budget, Seq("host"), "left_outer")
-      .withColumn("rem", coalesce(col("remaining"), lit(defaultRemaining)))
-    val bucketOrder = Window.partitionBy(col("host"), col("salt_"))
-      .orderBy(col("seq"))
-    // both returned frames derive from both window phases, and callers
-    // consume them in SEPARATE actions (dispatch goes to the fetch join,
-    // deferred into the next frontier) — without materialization each
-    // window SORT would re-run per consumer. The two eager checkpoints pin
-    // each sort to exactly one execution; the trade (one extra
-    // materialization of the frontier slice vs a repeated O(n log n) sort)
-    // is the same one the round's other checkpoints make.
-    val phase1 = withRem
-      .withColumn("salt_", pmod(xxhash64(col("url")), lit(SaltBuckets)))
-      .withColumn("r1", row_number().over(bucketOrder))
-      .localCheckpoint(true)
-    val survivors = phase1.where(col("r1") <= col("rem")).drop("r1", "salt_")
-    val deferredEarly = phase1.where(col("r1") > col("rem"))
-      .select("url", "host", "depth", "retry", "seq")
-    val hostOrder = Window.partitionBy(col("host")).orderBy(col("seq"))
-    val marked = survivors
-      .withColumn("host_rank", row_number().over(hostOrder))
-      .withColumn("is_dispatched", col("host_rank") <= col("rem"))
-      .localCheckpoint(true)
-    val dispatched = marked.where(col("is_dispatched"))
-      .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-        coalesce(col("allow"), lit(true)).as("robots_allow"))
-    val deferred = marked.where(!col("is_dispatched"))
-      .select("url", "host", "depth", "retry", "seq")
-      .unionByName(deferredEarly)
-    (dispatched, deferred)
   }
 
   // ---- one round -----------------------------------------------------------
@@ -561,8 +490,6 @@ object Crawler {
     val emptySeen = Seq.empty[String].toDF("url")
     val emptyCounts = Seq.empty[(String, Long)].toDF("host", "cnt")
     val emptySched = Seq.empty[(String, Long)].toDF("host", "dispatched")
-    val emptyFailed = Seq.empty[(String, String, Int, Int, Long, String)]
-      .toDF("url", "host", "depth", "retry", "seq", "error")
     val emptyQuar = Seq.empty[String].toDF("host")
     // `failed` is a HYBRID table like `seen`: the first commit of a fresh
     // crawl replaces it (the base), every later round APPENDS only that
@@ -595,50 +522,21 @@ object Crawler {
     var quarTbl: DataFrame = null
     var hostEnq: DataFrame = null
     var frontierSize = 0L
-    var seenSizeKnown: Option[Long] = None
-    // set when resuming a LEGACY (relative-rank, pre-LSM) snapshot: the
-    // on-disk base still holds RELATIVE ranks, so the FIRST commit must
-    // compact (write the converted absolute-rank live rows as the new
-    // base) — appending absolute-rank tiers over a relative-rank base
-    // would make the next round's reload mix the two rank semantics and
-    // silently mis-classify liveness. One O(live) rewrite, paid once.
-    var frontierLegacyBase = false
+    var seenSize = 0L
     snap.latestRound match {
       case Some(r) =>
-        val m = snap.meta(r)
-        // a missing OR unreadable (pre-v2 layout) blob falls back to a
-        // rebuild from the seen table — resume must never be forfeited
-        // over a sketch, which is reconstructible state by definition
-        sketch = snap.loadBlob("seen_sketch", r)
-          .flatMap(b => scala.util.Try(
-            graft.functions.SeenSketch.deserialize(b)).toOption)
-          .getOrElse(graft.functions.SeenSketch.build(
-            snap.loadHybrid(spark, "seen", r), "url",
-            cfg.seenSketch, cfg.sketchCapacity))
+        val m = roundMeta(snap, r)
         round = r + 1
         nextSeq = m("nextSeq").toLong
+        frontierSize = m("frontierSize").toLong
+        seenSize = m("seenSize").toLong
         seen = snap.loadHybrid(spark, "seen", r)
+        sketch = loadSketch(snap, r, seen, cfg)
+        frontier = snap.loadHybrid(spark, "frontier", r)
         hostCounts = snap.loadReplaced(spark, "host_counts", r)
         hostSched = snap.loadReplaced(spark, "host_sched", r)
+        hostEnq = snap.loadReplaced(spark, "host_enq", r)
         quarTbl = snap.loadReplaced(spark, "quarantined", r)
-        seenSizeKnown = m.get("seenSize").map(_.toLong)
-        val rawF = snap.loadHybrid(spark, "frontier", r)
-        if (m.get("frontierAbsRank").contains("1")) {
-          frontier = rawF
-          hostEnq = snap.loadReplaced(spark, "host_enq", r)
-          frontierSize = m("frontierSize").toLong // abs commits always stamp it
-        } else {
-          // legacy replace-format snapshot: live rows only, relative (or
-          // absent) ranks — convert once; host_enq derives from live counts
-          // + the dispatch history
-          frontier = toAbsRanks(rawF, hostSched)
-          hostEnq = frontier.groupBy("host").agg(count(lit(1)).as("enq"))
-            .join(hostSched, Seq("host"), "full_outer")
-            .select(col("host"), (coalesce(col("enq"), lit(0L)) +
-              coalesce(col("dispatched"), lit(0L))).as("enq"))
-          frontierSize = m.get("frontierSize").map(_.toLong).getOrElse(rawF.count())
-          frontierLegacyBase = true // first commit must compact (see above)
-        }
       case None =>
         val seedCand = seedUrls.zipWithIndex.toDF("url", "idx")
           .select(col("url"),
@@ -668,7 +566,7 @@ object Crawler {
         quarTbl = emptyQuar
         hostEnq = c0.select(col("host"), col("cnt").as("enq"))
         frontierSize = nSeed
-        seenSizeKnown = Some(nSeed)
+        seenSize = nSeed
     }
 
     // tiny per-host table; joined as the LEFT of outer joins, so no explicit
@@ -678,7 +576,7 @@ object Crawler {
     // dispatch budget-side row bound (per-HOST rows: policy ∪ dispatch
     // history). policy rows counted once per crawl; hostSchedSize updated
     // per round from an observation on the commit's own host_sched write
-    // (zero extra jobs). Gates dispatchSelect's broadcast-vs-shuffle choice.
+    // (zero extra jobs). Gates dispatchSelectAbs's broadcast-vs-shuffle choice.
     val policyRows = policyDf.count()
     var hostSchedSize: Long = snap.latestRound match {
       case Some(_) => hostSched.count() // once, at resume only
@@ -710,7 +608,6 @@ object Crawler {
       }
     }
 
-    var seenSize = seenSizeKnown.getOrElse(seen.count())
     // frontier-LSM bookkeeping: dead rows accumulated in the STORED raw
     // table since its last base rewrite, and delta tiers appended since —
     // the compaction triggers (see the commit block)
@@ -743,8 +640,6 @@ object Crawler {
       // per-host cap) and appended at the back of the queue before this
       // round's dispatch — the reference's add-seeds-to-running-crawl flow.
       val injectedSeeds = seedFeed(round)
-      val traceT0 = System.nanoTime() // SPARK_GRAFT_CRAWL_TRACE=1 timing
-      var traceCommitT = 0L
       var hostCountsDirty = false // host_counts is carried unless this round admitted
       // rank-offset side for new entries: gated broadcast of the per-host
       // enqueue totals (same size class and gate as the dispatch budget)
@@ -783,13 +678,8 @@ object Crawler {
           appendSeenDelta(entries.select("url"), nInj, seenSize + nInj)
           pendingSeen = pendingSeen.unionByName(entries.select("url"))
           pendingSeenRows += nInj
-          val injCounts = entries.groupBy("host").agg(count(lit(1)).as("inj_cnt"))
-          hostCounts = hostCounts.join(injCounts, Seq("host"), "full_outer")
-            .select(col("host"), (coalesce(col("cnt"), lit(0L)) +
-              coalesce(col("inj_cnt"), lit(0L))).as("cnt"))
-          hostEnq = hostEnq.join(injCounts, Seq("host"), "full_outer")
-            .select(col("host"), (coalesce(col("enq"), lit(0L)) +
-              coalesce(col("inj_cnt"), lit(0L))).as("enq"))
+          hostCounts = plusHostCounts(hostCounts, "cnt", entries)
+          hostEnq = plusHostCounts(hostEnq, "enq", entries)
           hostEnqSize += nInj // safe over-bound until the commit observation
           graft.functions.SeenSketch.addAll(sketch, entries.select("url"), "url", nInj)
           seenSize += nInj
@@ -1008,20 +898,11 @@ object Crawler {
       // quarantine (the reference's connection-failure path,
       // gcloud_crawler.py:432,452) — effective from the NEXT round
       val newQuar = quarTbl.unionByName(timeoutFail.select("host")).distinct()
-      val admittedCounts = admitted.groupBy("host").agg(count(lit(1)).as("add_cnt"))
-      val newHostCounts = hostCounts.join(admittedCounts, Seq("host"), "full_outer")
-        .select(col("host"),
-          (coalesce(col("cnt"), lit(0L)) + coalesce(col("add_cnt"), lit(0L))).as("cnt"))
-      val dispatchedCounts = dispatched.groupBy("host").agg(count(lit(1)).as("d_cnt"))
-      val newHostSched = hostSched.join(dispatchedCounts, Seq("host"), "full_outer")
-        .select(col("host"),
-          (coalesce(col("dispatched"), lit(0L)) + coalesce(col("d_cnt"), lit(0L))).as("dispatched"))
+      val newHostCounts = plusHostCounts(hostCounts, "cnt", admitted)
+      val newHostSched = plusHostCounts(hostSched, "dispatched", dispatched)
       // per-host enqueue totals grow by this round's new entries (requeues
       // included — they re-enter at fresh absolute ranks)
-      val addCounts = newEntries.groupBy("host").agg(count(lit(1)).as("add_"))
-      val newHostEnq = hostEnq.join(addCounts, Seq("host"), "full_outer")
-        .select(col("host"), (coalesce(col("enq"), lit(0L)) +
-          coalesce(col("add_"), lit(0L))).as("enq"))
+      val newHostEnq = plusHostCounts(hostEnq, "enq", newEntries)
 
       // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
       // part_id records which executor partition fetched/extracted the row
@@ -1120,7 +1001,7 @@ object Crawler {
         case None => newEntries
       }
       frontierDeadRows += nDispatched
-      val frontierCompact = !failedBase || frontierLegacyBase ||
+      val frontierCompact = !failedBase ||
         frontierDeadRows > frontierSize || frontierTiers >= 64
       if (frontierCompact) {
         // base rewrite: live rows only (dead prefixes drop out), absolute
@@ -1129,7 +1010,6 @@ object Crawler {
           liveRows(frontier.unionByName(newEntries), newHostSched)
         frontierDeadRows = 0
         frontierTiers = 0
-        frontierLegacyBase = false
       }
       val enqDirty = addsCount > 0 || nInjected > 0
       if (enqDirty || !failedBase)
@@ -1168,7 +1048,6 @@ object Crawler {
           approx_count_distinct(col("url")).as("docs"),
           count(lit(1)).as("postings"))
       }
-      traceCommitT = System.nanoTime()
       snap.commit(spark, round,
         replaced = replacedTables.toMap,
         appended = appendedTables.toMap,
@@ -1176,7 +1055,7 @@ object Crawler {
           "frontierSize" -> frontierSize.toString,
           "seenSize" -> seenSize.toString,
           // marks the frontier's rank semantics (absolute enqueue ranks +
-          // hybrid commits); resume converts legacy snapshots without it
+          // hybrid commits); see roundMeta
           "frontierAbsRank" -> "1"),
         blobs = Map("seen_sketch" -> graft.functions.SeenSketch.serialize(sketch)),
         bucketed = Map(
@@ -1196,7 +1075,6 @@ object Crawler {
       // the bounded waits resolve within moments; any miss falls back to a
       // safe OVER-bound (hosts can only have grown by this round's rows),
       // so the broadcast gates never under-estimate their build sides
-      val traceObsT = System.nanoTime()
       hostSchedSize = awaitObs(schedObs, 10)
         .flatMap(_.get("n").map(_.asInstanceOf[Long]))
         .getOrElse(hostSchedSize + nDispatched)
@@ -1204,9 +1082,6 @@ object Crawler {
         hostEnqSize = awaitObs(enqObs, 10)
           .flatMap(_.get("n").map(_.asInstanceOf[Long]))
           .getOrElse(hostEnqSize + addsCount)
-      if (sys.env.get("SPARK_GRAFT_CRAWL_TRACE").contains("1"))
-        System.err.println(f"[crawl-trace] round=$round obsWait=" +
-          f"${(System.nanoTime() - traceObsT) / 1e9}%.2f")
       failedBase = true
 
       // reload from the committed snapshot: truncates lineage and makes the
@@ -1221,12 +1096,6 @@ object Crawler {
       hostSched = snap.loadReplaced(spark, "host_sched", round)
       hostEnq = snap.loadReplaced(spark, "host_enq", round)
       quarTbl = snap.loadReplaced(spark, "quarantined", round)
-      if (sys.env.get("SPARK_GRAFT_CRAWL_TRACE").contains("1")) {
-        val now = System.nanoTime()
-        System.err.println(f"[crawl-trace] round=$round wall=${(now - traceT0) / 1e9}%.2f " +
-          f"commit=${(now - traceCommitT) / 1e9}%.2f disp=$nDispatched adds=$addsCount " +
-          f"fsize=$frontierSize tiers=$frontierTiers dead=$frontierDeadRows compact=$frontierCompact")
-      }
       round += 1
     }
     CrawlSummary(round, stats.toSeq)
@@ -1295,22 +1164,13 @@ object Crawler {
     val snap = new SnapshotTable(root)
     val r = snap.latestRound.getOrElse(
       throw new IllegalStateException("no crawl state"))
-    val m = snap.meta(r)
-    // every commit flow stamps frontierSize (crawl rounds and resets
-    // alike), so is_running and frontier_size come from ONE consistent
-    // source; pre-stamping snapshots fall back to counting the committed
-    // frontier table — still the same source for both fields, so a
-    // just-reset crawl can never report running=true with size 0
-    val fSize = m.get("frontierSize").map(_.toLong).getOrElse(
-      snap.loadReplaced(spark, "frontier", r).count())
-    // seen_size reads the SAME commit's meta stamp (crawl rounds and resets
-    // both stamp it), so a forget-reset that shrinks the seen set is
-    // reflected immediately — the last crawl round's counters row (the
-    // pre-stamping fallback) would show the stale pre-reset count
-    val seenSz = m.get("seenSize").map(_.toLong).getOrElse(
-      status(spark, root).orderBy(desc("round")).limit(1)
-        .collect().headOption.map(_.getAs[Long]("seenSize")).getOrElse(0L))
-    Seq((fSize > 0, r, fSize, seenSz))
+    val m = roundMeta(snap, r)
+    // every commit flow stamps frontierSize and seenSize (crawl rounds and
+    // resets alike), so is_running and both sizes come from ONE consistent
+    // source: a just-reset crawl never reports running=true with size 0,
+    // and a forget-reset that shrinks the seen set shows immediately
+    val fSize = m("frontierSize").toLong
+    Seq((fSize > 0, r, fSize, m("seenSize").toLong))
       .toDF("is_running", "round", "frontier_size", "seen_size")
   }
 
@@ -1341,14 +1201,12 @@ object Crawler {
   }
 
   /** The LIVE frontier at a committed round: the raw hybrid view filtered
-   * by the dispatch-prefix liveness predicate (abs-rank snapshots), or the
-   * replace-format table as-is (legacy snapshots hold live rows only). */
+   * by the dispatch-prefix liveness predicate. */
   private def liveFrontier(spark: SparkSession, snap: SnapshotTable,
                            r: Int): DataFrame = {
-    val raw = snap.loadHybrid(spark, "frontier", r)
-    if (snap.meta(r).get("frontierAbsRank").contains("1"))
-      liveRows(raw, snap.loadReplaced(spark, "host_sched", r))
-    else raw
+    roundMeta(snap, r)
+    liveRows(snap.loadHybrid(spark, "frontier", r),
+      snap.loadReplaced(spark, "host_sched", r))
   }
 
   /** Raw-page point lookup (J6, /get_html — templates/app.py:807-904):
@@ -1449,21 +1307,11 @@ object Crawler {
     val snap = new SnapshotTable(root)
     val r = snap.latestRound.getOrElse(
       throw new IllegalStateException("no crawl state to reset"))
-    val m0 = snap.meta(r)
+    val m0 = roundMeta(snap, r)
     val nextSeq = m0("nextSeq").toLong
-    // frontier views (LSM): raw = base + delta tiers with absolute ranks
-    // (legacy replace-format snapshots are normalized here, once); live =
-    // rows past the per-host dispatch prefix
-    val absFmt = m0.get("frontierAbsRank").contains("1")
-    val sched = snap.loadReplaced(spark, "host_sched", r)
-    val frontierRaw0 = snap.loadHybrid(spark, "frontier", r)
-    val frontierRaw = if (absFmt) frontierRaw0 else toAbsRanks(frontierRaw0, sched)
-    val live = if (absFmt) liveRows(frontierRaw, sched) else frontierRaw
-    val hostEnq = if (absFmt) snap.loadReplaced(spark, "host_enq", r)
-      else live.groupBy("host").agg(count(lit(1)).as("enq"))
-        .join(sched, Seq("host"), "full_outer")
-        .select(col("host"), (coalesce(col("enq"), lit(0L)) +
-          coalesce(col("dispatched"), lit(0L))).as("enq"))
+    // live frontier (LSM): raw rows past the per-host dispatch prefix
+    val live = liveFrontier(spark, snap, r)
+    val hostEnq = snap.loadReplaced(spark, "host_enq", r)
     val seen = snap.loadHybrid(spark, "seen", r)
     val hostCounts = snap.loadReplaced(spark, "host_counts", r)
     val failedTbl = snap.loadHybrid(spark, "failed", r)
@@ -1475,15 +1323,10 @@ object Crawler {
     val n = failedTbl.count()
     if (n == 0) return 0L
 
-    var sketch = snap.loadBlob("seen_sketch", r)
-      .flatMap(b => scala.util.Try(
-        graft.functions.SeenSketch.deserialize(b)).toOption)
-      .getOrElse(graft.functions.SeenSketch.build(seen, "url",
-        cfg.seenSketch, cfg.sketchCapacity))
+    var sketch = loadSketch(snap, r, seen, cfg)
     val emptyFailed = Seq.empty[(String, String, Int, Int, Long, String)]
       .toDF("url", "host", "depth", "retry", "seq", "error")
 
-    val priorSeenSize = m0.get("seenSize").map(_.toLong)
     val (entriesOpt, newSeen, newHostCounts, newHostEnq, reopened) =
       if (!forget) {
         // queue-membership-checked append at the back (cli.py:217-219):
@@ -1503,11 +1346,8 @@ object Crawler {
           .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
           .select("url", "host", "depth", "retry", "seq", "host_rank")
           .localCheckpoint(true)
-        val entryCounts = entries.groupBy("host").agg(count(lit(1)).as("add_"))
-        val enq2 = hostEnq.join(entryCounts, Seq("host"), "full_outer")
-          .select(col("host"), (coalesce(col("enq"), lit(0L)) +
-            coalesce(col("add_"), lit(0L))).as("enq"))
-        (Some(entries), seen, hostCounts, enq2, entries.count())
+        (Some(entries), seen, hostCounts, plusHostCounts(hostEnq, "enq", entries),
+          entries.count())
       } else {
         val shrunk = seen.join(failedTbl.select("url"), Seq("url"), "left_anti")
           .localCheckpoint(true)
@@ -1537,20 +1377,11 @@ object Crawler {
         (None, shrunk, counts, hostEnq, n)
       }
 
-    // frontier commit shape (LSM): on an abs-format snapshot, requeue mode
-    // APPENDS the reopened entries as a delta tier and forget mode writes
-    // nothing at all; a legacy snapshot is normalized by ONE replace with
-    // the converted live rows (∪ entries). host_enq rides along: carried
-    // when untouched, replaced otherwise.
-    val frontierAppend: Map[String, DataFrame] =
-      if (absFmt && entriesOpt.isDefined && reopened > 0)
-        Map("frontier" -> entriesOpt.get)
-      else Map.empty
-    val frontierReplace: Map[String, DataFrame] =
-      if (!absFmt)
-        Map("frontier" -> entriesOpt.fold(frontierRaw)(frontierRaw.unionByName))
-      else Map.empty
-    val enqChanged = !absFmt || (entriesOpt.isDefined && reopened > 0)
+    // frontier commit shape (LSM): requeue mode APPENDS the reopened
+    // entries as a delta tier and forget mode writes nothing at all.
+    // host_enq rides along: carried when untouched, replaced otherwise.
+    val frontierAppend = entriesOpt.filter(_ => reopened > 0)
+    val enqChanged = frontierAppend.isDefined
     // requeue mode leaves `seen` untouched (no commit entry — prior appends
     // stay visible); forget mode REPLACES it with the shrunken set, which
     // doubles as a compaction point for the hybrid append chain. Both modes
@@ -1562,21 +1393,18 @@ object Crawler {
         "failed" -> emptyFailed, // replace = the hybrid chain's compaction point
         "quarantined" -> Seq.empty[String].toDF("host")) ++
         (if (forget) Map("seen" -> newSeen) else Map.empty) ++
-        frontierReplace ++
         (if (enqChanged) Map("host_enq" -> newHostEnq) else Map.empty),
-      appended = frontierAppend,
+      appended = frontierAppend.map("frontier" -> _).toMap,
       // stamp frontierSize/seenSize like the crawl-round commits do, so
-      // statusSummary reads one consistent source: prior size (stamped by
-      // the previous commit; counted once for pre-stamping snapshots) plus
-      // the reopened set in requeue mode
+      // statusSummary reads one consistent source: the prior commit's
+      // stamp plus the reopened set in requeue mode
       meta = Map(
         "nextSeq" -> (nextSeq + (if (forget) 0L else reopened)).toString,
-        "frontierSize" -> (m0.get("frontierSize").map(_.toLong)
-          .getOrElse(live.count()) + (if (forget) 0L else reopened)).toString,
+        "frontierSize" ->
+          (m0("frontierSize").toLong + (if (forget) 0L else reopened)).toString,
         // seen shrinks by exactly the reopened set in forget mode (every
         // failed URL was admitted, hence in seen) and is untouched otherwise
-        "seenSize" -> (priorSeenSize.getOrElse(seen.count())
-          - (if (forget) n else 0L)).toString,
+        "seenSize" -> (m0("seenSize").toLong - (if (forget) n else 0L)).toString,
         "frontierAbsRank" -> "1"),
       blobs = Map("seen_sketch" -> graft.functions.SeenSketch.serialize(sketch)),
       bucketed = Map("frontier" ->

@@ -79,10 +79,8 @@ class SnapshotTable(val root: String) {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = SnapshotTable.writeEc
-    val trace = sys.env.get("SPARK_GRAFT_CRAWL_TRACE").contains("1")
     val writes = all.toSeq.map { case (name, df) =>
       Future {
-        val t0 = System.nanoTime()
         val path = s"$root/data/$name/${rid(round)}"
         val written = bucketed.get(name) match {
           // physically bucket the table (Iceberg `bucket(N, …)` analog):
@@ -101,12 +99,9 @@ class SnapshotTable(val root: String) {
             df
         }
         Files.writeString(Paths.get(path, SnapshotTable.SchemaFile), written.schema.json)
-        if (trace) System.err.println(
-          f"[commit-trace] r$round $name write=${(System.nanoTime() - t0) / 1e9}%.2f")
       }
     }
     Await.result(Future.sequence(writes), Duration.Inf)
-    val tMetaLate = System.nanoTime()
     // binary sidecars (e.g. the serialized seen-filter shards) are written
     // BEFORE the manifest rename, so a committed round always has them
     blobs.foreach { case (name, bytes) =>
@@ -123,8 +118,6 @@ class SnapshotTable(val root: String) {
       appended.keys.map(n => s""""$n": "append"""")).mkString(",")
     val metaLateVals = metaLate()
     SnapshotTable.checkMeta(metaLateVals)
-    if (trace) System.err.println(
-      f"[commit-trace] r$round metaLate=${(System.nanoTime() - tMetaLate) / 1e9}%.2f")
     val metaJson = (meta ++ metaLateVals)
       .map { case (k, v) => s""""$k": "$v"""" }.mkString(",")
     val json =

@@ -129,67 +129,45 @@ class CrawlEngineSpec extends AnyFunSuite {
       engineSeen(rootA, full.rounds - 1))
   }
 
-  test("resume from a LEGACY pre-LSM snapshot (relative ranks, no host_enq) completes to the oracle schedule") {
-    import org.apache.spark.sql.expressions.Window
-    // backlog-heavy config (wide cap, deeper depth): the frontier outgrows
-    // the politeness budget, so dead rows stay BELOW live size for many
-    // rounds and no natural compaction masks a rank-semantics mix — the
-    // post-conversion normalization has to be forced, and oracle equality
-    // detects it if it isn't
-    // snapshot at round 3, where the frontier (~90 live rows) holds
-    // multi-round politeness backlogs on hosts that already HAVE dispatch
-    // history — the rows a rank-semantics mix silently loses are then rows
-    // the oracle dispatches within the horizon, so schedule equality bites
-    // (at an earlier cut the only deferred rows sit on the slowest host,
-    // which the oracle can't reach within maxRounds either, masking a mix)
-    val cfgL = cfg.copy(maxPagesPerDomain = 100, maxDepth = 5)
-    val oracleL = new CrawlOracle(docsMap, policyMap, cfgL).run(seeds, maxRounds = 60)
-    val root = Files.createTempDirectory("graft-crawl-legacy").toString
-    runEngine(root, maxRounds = 4, cfgUsed = cfgL)
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.get
-    // Rewrite round r IN PLACE into the r4 on-disk dialect: ONE
-    // replace-format frontier holding LIVE rows with RELATIVE per-host
-    // ranks (1..k over the live set in seq order), hybrid seen/failed
-    // compacted to replaces (both legal legacy forms), no host_enq table,
-    // no frontierAbsRank/frontierSize/seenSize meta stamps. Overwriting
-    // the same round (rather than committing r+1) keeps round NUMBERING
-    // identical to the uninterrupted run — politeness budgets are a
-    // function of the round index, so exact schedule equality stays the
-    // assertion. Materialize eagerly FIRST: the commit overwrites the very
-    // directories these frames read.
-    val sched = snap.loadReplaced(spark, "host_sched", r)
-    val live = snap.loadHybrid(spark, "frontier", r)
-      .join(sched, Seq("host"), "left_outer")
-      .where(col("host_rank") > coalesce(col("dispatched"), lit(0L)))
-      .drop("dispatched")
-      .withColumn("host_rank", row_number()
-        .over(Window.partitionBy(col("host")).orderBy(col("seq"))).cast("long"))
-      .localCheckpoint(true)
-    val seenLegacy = snap.loadHybrid(spark, "seen", r).localCheckpoint(true)
-    val failedLegacy = snap.loadHybrid(spark, "failed", r).localCheckpoint(true)
-    val nextSeq = snap.meta(r)("nextSeq")
-    val blob = snap.loadBlob("seen_sketch", r).get
-    snap.commit(spark, r,
-      replaced = Map("frontier" -> live, "seen" -> seenLegacy,
-        "failed" -> failedLegacy),
-      appended = Map.empty,
-      meta = Map("nextSeq" -> nextSeq),
-      blobs = Map("seen_sketch" -> blob),
-      bucketed = Map("frontier" ->
-        pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      carried = Map("host_counts" -> r, "host_sched" -> r, "quarantined" -> r))
-    assert(!snap.meta(r).contains("frontierAbsRank"), "fixture must be legacy-format")
-    // resume converts ranks once; the FIRST post-conversion commit must
-    // compact (write the converted absolute-rank live rows as the new
-    // base) — appending absolute-rank tiers over the relative-rank legacy
-    // base would mix the two rank semantics on the next reload and
-    // silently drop frontier rows. Oracle equality catches exactly that.
-    val resumed = runEngine(root, maxRounds = 60, cfgUsed = cfgL)
-    assert(engineSchedule(root, resumed.rounds - 1) ==
-      oracleL.schedule.map(l => (l.round, l.url, l.status)))
-    assert(engineSeen(root, resumed.rounds - 1) == oracleL.seen.toSet)
-    assert(new SnapshotTable(root).meta(resumed.rounds - 1)("frontierAbsRank") == "1")
+  test("a snapshot without the frontier format stamp or a size stamp fails loudly, naming the round") {
+    import scala.jdk.CollectionConverters._
+    val good = Files.createTempDirectory("graft-crawl-fmt").resolve("root")
+    runEngine(good.toString, maxRounds = 2)
+    val r = new SnapshotTable(good.toString).latestRound.get
+    // two damaged copies of the committed state: the latest manifest's
+    // frontierAbsRank rewritten to "0", and its seenSize stamp removed
+    def damaged(tag: String)(edit: String => String): String = {
+      val root = Files.createTempDirectory(s"graft-crawl-$tag").resolve("root")
+      scala.util.Using.resource(Files.walk(good)) { paths =>
+        paths.iterator().asScala.foreach(p =>
+          Files.copy(p, root.resolve(good.relativize(p).toString)))
+      }
+      val manifest = root.resolve(f"_manifests/r$r%05d.json")
+      val before = Files.readString(manifest)
+      val after = edit(before)
+      assert(after != before, s"$tag: the edit must change the manifest")
+      Files.writeString(manifest, after)
+      root.toString
+    }
+    val cases = Seq(
+      "frontierAbsRank" -> damaged("rank0")(
+        _.replace("\"frontierAbsRank\": \"1\"", "\"frontierAbsRank\": \"0\"")),
+      "seenSize" -> damaged("noseen")(
+        _.replaceAll("\"seenSize\": \"\\d+\",?\\s*", "").replaceAll(",\\s*}", "}")))
+    cases.foreach { case (what, root) =>
+      val calls = Seq[(String, () => Any)](
+        "run" -> (() => runEngine(root)),
+        "statusSummary" -> (() => Crawler.statusSummary(spark, root)),
+        "recentlyAdded" -> (() => Crawler.recentlyAdded(spark, root)),
+        "resetFailures" -> (() => Crawler.resetFailures(spark, root, cfg)))
+      calls.foreach { case (name, call) =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(s"round $r:") && e.getMessage.contains(what),
+          s"$name on a snapshot with bad $what: ${e.getMessage}")
+      }
+      // rejected, not converted: nothing was committed past the damaged round
+      assert(new SnapshotTable(root).latestRound.contains(r))
+    }
   }
 
   test("graceful stop at a round boundary: state == maxRounds cut, resume == uninterrupted") {
@@ -414,36 +392,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(engineSchedule(root, s.rounds - 1) ==
       oracleResult.schedule.map(l => (l.round, l.url, l.status)))
     assert(engineSeen(root, s.rounds - 1) == oracleResult.seen.toSet)
-  }
-
-  test("dispatchSelect: sort-free rank-arithmetic path == windowed fallback, both join variants") {
-    import spark.implicits._
-    // frontier honoring the host_rank invariant (per-host consecutive 1..k
-    // in seq order); budget exercises: capped host, zero budget, NEGATIVE
-    // remaining (must clamp, not corrupt deferred ranks), absent host
-    // (default), allow=false passthrough
-    val rows = for {
-      (h, k) <- Seq(("a", 5), ("b", 3), ("c", 4), ("d", 2))
-      i <- 1 to k
-    } yield (s"https://$h/p$i", h, 1, 0, (h.hashCode.toLong % 97) * 100 + i, i.toLong)
-    val frontier = rows.toDF("url", "host", "depth", "retry", "seq", "host_rank")
-    val budget = Seq(("a", 2L, true), ("b", 0L, true), ("c", -3L, false))
-      .toDF("host", "remaining", "allow")
-    def normalize(d: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) = (
-      d._1.select("url", "robots_allow").collect().map(r => (r.getString(0), r.getBoolean(1))).toSet,
-      d._2.select("url").collect().map(_.getString(0)).toSet)
-    val fast = normalize(Crawler.dispatchSelect(frontier, budget, 1L))
-    val fastBc = normalize(Crawler.dispatchSelect(frontier, budget, 1L, Some(3L), 1000000L))
-    val fallback = normalize(Crawler.dispatchSelect(
-      frontier.drop("host_rank"), budget, 1L))
-    assert(fast == fallback)
-    assert(fastBc == fallback)
-    // deferred ranks stay the per-host consecutive 1..k invariant
-    val (_, defer) = Crawler.dispatchSelect(frontier, budget, 1L, Some(3L))
-    val ranks = defer.select("host", "seq", "host_rank").collect()
-      .groupBy(_.getString(0))
-      .map { case (h, rs) => h -> rs.sortBy(_.getLong(1)).map(_.getLong(2)).toSeq }
-    ranks.values.foreach(seq => assert(seq == (1L to seq.length).toSeq))
   }
 
   test("frontier commits are an LSM: per-round bytes written ∝ added rows, not frontier size") {

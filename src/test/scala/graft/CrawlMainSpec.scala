@@ -100,5 +100,10 @@ class CrawlMainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](CrawlMain.parse(Array("--docs", "d")))
     intercept[IllegalArgumentException](
       CrawlMain.parse(Array("--root", "r"))) // --docs required unless status-only
+    // a value flag in last place names the flag instead of indexing past argv
+    Seq(Array("--root"), Array("--docs", "d", "--root")).foreach { argv =>
+      val e = intercept[IllegalArgumentException](CrawlMain.parse(argv))
+      assert(e.getMessage.contains("--root"), e.getMessage)
+    }
   }
 }

@@ -1,18 +1,18 @@
 package graft
 
 /**
- * Core row types of the engine (SURVEY.md §1.1).
+ * Input row types and configuration of the engine (SURVEY.md §1.1): the
+ * corpus (`Doc`, `Span`), per-host policy and the crawl config. The
+ * crawl's own records — frontier entries, fetch results, postings,
+ * per-round counters (the reference's CrawlRequest/CrawlResult/CrawlState
+ * dicts, `gcloud_master.py:29-48,343-348`, `gcloud_crawler.py:323-344`,
+ * `gcloud_indexer.py:57-62`) — are DataFrame schemas built in
+ * `operators/Crawler.scala`.
  *
- * These mirror the record shapes the reference passes around as JSON dicts
- * (CrawlRequest `gcloud_master.py:343-348`, CrawlResult
- * `gcloud_crawler.py:323-344`, CrawlState `gcloud_master.py:29-48`,
- * postings `gcloud_indexer.py:57-62`) re-expressed as typed case classes so
- * the pipeline is a `Dataset[T]` spine with Catalyst-visible schemas.
- *
- * Determinism note: nothing here carries wall-clock time. The reference
- * stamps ISO-8601 wall-clock timestamps on every record; we stamp the round
- * id (and a stable per-row sequence) instead so crawl ordering and
- * resume-from-round are exactly reproducible.
+ * Determinism note: no crawl record carries wall-clock time. The
+ * reference stamps ISO-8601 wall-clock timestamps on every record; the
+ * engine stamps the round id (and a stable per-row sequence) instead so
+ * crawl ordering and resume-from-round are exactly reproducible.
  */
 
 /** One ordered span of an interleaved text+media document
@@ -30,40 +30,6 @@ case class Span(kind: String, text: String, media_ref: String, offset: Int)
  * gcloud_crawler.py:285-344). */
 case class Doc(doc_id: String, raw: String, content_type: String,
                flaky_fails: Int, spans: Seq[Span])
-
-/** Deterministic BFS-with-priority sequence key (SURVEY.md §2.6 O2).
- * Reference order: FIFO deque, children appended in link-document-order at
- * depth+1 (gcloud_master.py:31,336). Our total order is
- * (depth, round, parent_seq, link_pos) — strictly increasing along the BFS
- * and independent of partitioning/parallelism. */
-case class SeqKey(depth: Int, round: Int, parent_seq: Long, link_pos: Int)
-
-/** A frontier entry: a URL admitted to the crawl but not yet fetched.
- * url is canonical; url_hash = xxhash64(url) is the dedup key; host kept
- * denormalized (politeness/caps are per-host); seq is the flattened total
- * order used for dispatch (encodes SeqKey, see CrawlRound.seqColumn). */
-case class FrontierEntry(
-    url: String,
-    url_hash: Long,
-    host: String,
-    depth: Int,
-    retry: Int,
-    seq: Long)
-
-/** Result of "fetching" (joining against the corpus) one frontier entry.
- * status ∈ {ok, failed, skipped_robots, skipped_domain, non_html}.
- * links are canonicalized absolute child URLs in document order. */
-case class FetchResult(
-    round: Int,
-    url: String,
-    host: String,
-    depth: Int,
-    seq: Long,
-    status: String,
-    error: String,
-    title: String,
-    text: String,
-    links: Seq[String])
 
 /** Per-host crawl policy (robots + politeness + caps), the broadcastable
  * equivalent of RobotsCache + config (gcloud_crawler.py:37-47,
@@ -99,17 +65,3 @@ case class CrawlConfig(
   def effectiveAllowed: Seq[String] =
     allowedDomains.map(_.trim.toLowerCase).filter(_.nonEmpty)
 }
-
-/** One inverted-index posting (gcloud_indexer.py:57-62): weight 2.0 for
- * title hits, 1.0 for body hits. */
-case class Posting(term: String, url: String, weight: Double, title: String)
-
-/** Per-round counters row (CrawlState sizes, gcloud_master.py:686-688). */
-case class RoundCounters(
-    round: Int,
-    dispatched: Long,
-    completed: Long,
-    failed: Long,
-    deferred: Long,
-    frontier_size: Long,
-    seen_size: Long)

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft._
-import graft.functions.gf
+import graft.functions.{SeenSketch, gf}
 import graft.plans.SnapshotTable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -110,15 +110,9 @@ object Crawler {
    * function of the order tuple, so groups are contiguous slices of the
    * total order; per-group counts → cumulative offsets (a P-row
    * single-partition window, built lazily as the broadcast side) and a
-   * per-group rank window finish the job. Replaces the previous
-   * range-partitioner scheme, whose per-call fixed cost — a sampling pass
-   * over the input, an eager checkpoint of the full rows to pin sampled
-   * boundaries, and a per-partition count collect — was a measured
-   * scaling bottleneck at low core counts (BENCH.md): three
-   * driver-synchronous jobs and one full materialization become one tiny
-   * agg. The result depends only on VALUES (bounds, counts, order), never
-   * on partition boundaries, so the seq is reproducible at any
-   * parallelism without pinning anything.
+   * per-group rank window finish the job. The result depends only on
+   * VALUES (bounds, counts, order), never on partition boundaries, so the
+   * seq is reproducible at any parallelism without pinning anything.
    *
    * Preconditions (all engine call sites satisfy them): order columns are
    * non-null and integral-castable, and together form a total order.
@@ -188,9 +182,10 @@ object Crawler {
    * right side then satisfies its distribution AND ordering requirements
    * for free — the 10^10-row seen set of a 100 TB crawl is never
    * re-shuffled or re-sorted per round. run() maintains seen this way as
-   * an LSM: per-round admitted urls fold into O(admitted)-cost delta
-   * tiers, and the base refolds only when the deltas grow to a fraction
-   * of it (amortized O(1) shuffled rows per admitted url). */
+   * an LSM ([[SeenLsm]]): per-round admitted urls fold into
+   * O(admitted)-cost delta tiers, and the base refolds only when the
+   * deltas grow to a fraction of it (amortized O(1) shuffled rows per
+   * admitted url). */
   def foldSeen(df: DataFrame): DataFrame = {
     // EXPLICIT partition count: a bare repartition(col) is
     // REPARTITION_BY_COL, which AQE may coalesce — the checkpoint would
@@ -232,7 +227,7 @@ object Crawler {
    */
   def admit(spark: SparkSession, candidates: DataFrame, seen: DataFrame,
             hostCounts: DataFrame, cfg: CrawlConfig,
-            seenSketch: Option[graft.functions.SeenSketch],
+            seenSketch: Option[SeenSketch],
             seenDeltas: Seq[DataFrame] = Nil): DataFrame = {
     // intra-batch first-occurrence wins (D2) — deterministic via min over
     // the (ord1, ord2) total order. A hash aggregation (NOT a per-URL
@@ -322,8 +317,7 @@ object Crawler {
    * finished before callers wait, so this resolves promptly; any failure
    * (listener never fired) degrades to None so metrics can never hang or
    * abort a commit whose table writes succeeded. */
-  private def awaitObs(o: org.apache.spark.sql.Observation,
-                       seconds: Int): Option[Map[String, Any]] =
+  private def awaitObs(o: Observation, seconds: Int): Option[Map[String, Any]] =
     try {
       val p = scala.concurrent.Promise[Map[String, Any]]()
       val t = new Thread(() => p.tryComplete(scala.util.Try(o.get)), "graft-obs-wait")
@@ -337,22 +331,26 @@ object Crawler {
    * counts drive nextSeq and frontierSize, so unlike [[awaitObs]]'s
    * callers a missing observation never falls back: it fails the round,
    * naming it and the count. */
-  private def observedCounts(o: org.apache.spark.sql.Observation, round: Int,
+  private def observedCounts(o: Observation, round: Int,
                              what: String): Map[String, Long] =
     awaitObs(o, 60).map(_.map { case (k, v) => k -> v.asInstanceOf[Long] })
       .getOrElse(throw new IllegalStateException(
         s"round $round: observed count '$what' is missing"))
 
   /** Row count of a checkpoint observed with [[countObs]]. */
-  private def observedCount(o: org.apache.spark.sql.Observation, round: Int,
-                            what: String): Long =
+  private def observedCount(o: Observation, round: Int, what: String): Long =
     observedCounts(o, round, what)("n")
 
   /** `df` observed for its row count (see [[observedCount]]). */
-  private def countObs(df: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val o = new org.apache.spark.sql.Observation()
+  private def countObs(df: DataFrame): (DataFrame, Observation) = {
+    val o = new Observation()
     (df.observe(o, count(lit(1)).as("n")), o)
   }
+
+  /** Row count observed with [[countObs]] on a write that already ran, or
+   * `fallback` should the observation not arrive (see [[awaitObs]]). */
+  private def rowsOr(o: Observation, fallback: Long): Long =
+    awaitObs(o, 10).flatMap(_.get("n").map(_.asInstanceOf[Long])).getOrElse(fallback)
 
   /** Per-host table `table(host, c)` with each host's row count in `rows`
    * added to `c`: a full outer join, so hosts new to either side appear. */
@@ -360,19 +358,30 @@ object Crawler {
     table.join(rows.groupBy("host").agg(count(lit(1)).as("add_")), Seq("host"), "full_outer")
       .select(col("host"), (coalesce(col(c), lit(0L)) + coalesce(col("add_"), lit(0L))).as(c))
 
+  /** The meta stamps every crawl-round and reset commit writes besides
+   * `frontierAbsRank=1` (see [[roundMeta]]). The last two are the row
+   * counts of host_sched/host_enq, stamped after the table writes. */
+  private val StampKeys = Seq("nextSeq", "frontierSize", "seenSize",
+    "frontierDeadRows", "frontierTiers", "hostSchedRows", "hostEnqRows")
+
+  /** The stamps a commit knows before its writes. */
+  private def stamps(nextSeq: Long, frontierSize: Long, seenSize: Long,
+                     frontierDeadRows: Long, frontierTiers: Long): Map[String, String] =
+    Map("nextSeq" -> nextSeq, "frontierSize" -> frontierSize, "seenSize" -> seenSize,
+      "frontierDeadRows" -> frontierDeadRows, "frontierTiers" -> frontierTiers)
+      .map { case (k, v) => k -> v.toString } + ("frontierAbsRank" -> "1")
+
   /** Manifest meta of committed round `r`, checked against the one
    * snapshot format the engine reads: an absolute-rank LSM frontier
-   * (`frontierAbsRank=1`) and the nextSeq/frontierSize/seenSize stamps
-   * that every crawl-round and reset commit writes. Resume must be exact
-   * from any round boundary, so any other snapshot fails here rather
-   * than being converted or re-counted. */
+   * (`frontierAbsRank=1`) and every [[StampKeys]] stamp. Resume must be
+   * exact from any round boundary, so any other snapshot fails here
+   * rather than being converted or re-counted. */
   private def roundMeta(snap: SnapshotTable, r: Int): Map[String, String] = {
     val m = snap.meta(r)
     val problems =
       (if (m.get("frontierAbsRank").contains("1")) Nil
        else Seq(s"frontierAbsRank is ${m.getOrElse("frontierAbsRank", "absent")}, expected 1")) ++
-        Seq("nextSeq", "frontierSize", "seenSize").filterNot(m.contains)
-          .map(k => s"meta stamp $k is missing")
+        StampKeys.filterNot(m.contains).map(k => s"meta stamp $k is missing")
     if (problems.nonEmpty) throw new IllegalStateException(
       s"unsupported crawl snapshot at ${snap.root}, round $r: ${problems.mkString("; ")}")
     m
@@ -382,11 +391,10 @@ object Crawler {
    * blob is rebuilt from `seen`: the sketch is reconstructible state, so
    * it never forfeits a resume or a reset. */
   private def loadSketch(snap: SnapshotTable, r: Int, seen: DataFrame,
-                         cfg: CrawlConfig): graft.functions.SeenSketch =
+                         cfg: CrawlConfig): SeenSketch =
     snap.loadBlob("seen_sketch", r)
-      .flatMap(b => scala.util.Try(graft.functions.SeenSketch.deserialize(b)).toOption)
-      .getOrElse(graft.functions.SeenSketch.build(seen, "url",
-        cfg.seenSketch, cfg.sketchCapacity))
+      .flatMap(b => scala.util.Try(SeenSketch.deserialize(b)).toOption)
+      .getOrElse(SeenSketch.build(seen, "url", cfg.seenSketch, cfg.sketchCapacity))
 
   /** Live rows of a RAW (absolute-rank) frontier view: a row is live iff
    * its absolute enqueue rank lies past the host's dispatch total —
@@ -413,11 +421,8 @@ object Crawler {
    * The deferred remainder is NEVER touched: not re-ranked (the shift is
    * absorbed into next round's larger disp), not materialized, and above
    * all not rewritten — the round's whole frontier cost is one read pass
-   * over the raw view plus an O(dispatched) checkpoint, vs the previous
-   * design's O(frontier) eager checkpoint AND O(frontier) replaced-table
-   * write per round. That is the difference between per-round I/O
-   * proportional to the politeness budget and per-round I/O proportional
-   * to a 10^10-row frontier.
+   * over the raw view plus an O(dispatched) checkpoint, so per-round I/O
+   * tracks the politeness budget, not the frontier size.
    *
    * `budget` carries (host, remaining, allow, disp_total); hosts absent
    * from it default to (defaultRemaining, allow, 0).
@@ -427,10 +432,11 @@ object Crawler {
    * caller can bound its row count under `broadcastRowLimit` the budget
    * is broadcast and the dispatch touches the frontier with NO exchange
    * at all. run() maintains that bound for free (policy rows counted once
-   * per crawl + a host_sched count observed during each commit's own
-   * write). Past the limit — 10^8+ distinct hosts — it degrades to a
-   * shuffle-hash join (hinted: a sort-merge join would re-sort the
-   * frontier); AQE may still upgrade it to broadcast at runtime.
+   * per run + the host_sched row count observed during each commit's own
+   * write and stamped in its manifest). Past the limit — 10^8+ distinct
+   * hosts — it degrades to a shuffle-hash join (hinted: a sort-merge join
+   * would re-sort the frontier); AQE may still upgrade it to broadcast at
+   * runtime.
    */
   def dispatchSelectAbs(frontierRaw: DataFrame, budget: DataFrame,
                         defaultRemaining: Long,
@@ -454,6 +460,572 @@ object Crawler {
   }
 
   // ---- one round -----------------------------------------------------------
+
+  /** The seen set in its join layout (see [[foldSeen]]): a folded base plus
+   * the folded delta tiers appended since the base's last refold, all
+   * checkpointed. The parquet hybrid table stays the only durable form —
+   * this is purely the hot-path join layout. */
+  private case class SeenLsm(base: DataFrame, deltas: List[DataFrame] = Nil,
+                             deltaRows: Long = 0L) {
+    def all: DataFrame = deltas.foldLeft(base)(_ unionByName _)
+
+    /** `n` new urls, `total` seen rows once they are in: one more folded
+     * delta tier, or — when the deltas would reach a quarter of the total
+     * or the anti-join chain 8 links — ONE refold of everything into the
+     * base. */
+    def append(urls: DataFrame, n: Long, total: Long): SeenLsm =
+      if (deltas.length + 1 >= 8 || (deltaRows + n) * 4 >= total)
+        SeenLsm(foldSeen(all.unionByName(urls)))
+      else SeenLsm(base, deltas :+ foldSeen(urls), deltaRows + n)
+  }
+
+  /** Everything a round reads. [[load]] builds it from a committed round,
+   * the same way for a resume and for the next round of a running crawl.
+   *
+   *  - `frontier` is the RAW hybrid (LSM) view — live rows ∪ rows
+   *    dispatched in earlier rounds — with ABSOLUTE per-host enqueue
+   *    ranks; a row is live iff host_rank > dispatched(host), so dispatch
+   *    never rewrites the deferred remainder (see [[dispatchSelectAbs]]).
+   *    `hostEnq` (host → rows ever enqueued) supplies the rank offsets new
+   *    entries queue behind.
+   *  - `hostSchedRows`/`hostEnqRows` bound the row counts of `hostSched`/
+   *    `hostEnq` for the broadcast gates. `frontierDeadRows` and
+   *    `frontierTiers` count the dead rows and delta tiers the stored
+   *    frontier accumulated since its last base rewrite: the compaction
+   *    triggers (see [[commitRound]]).
+   *  - `seen` and `sketch` are the only state kept in memory between
+   *    rounds (see [[round]]).
+   *  - `pending` holds the entries injected since the last commit
+   *    (`pendingRows` of them); the next commit appends their urls to
+   *    `seen` and, unless it rewrites the base, them to `frontier`.
+   */
+  private case class RoundState(
+      round: Int, nextSeq: Long, frontierSize: Long, seenSize: Long,
+      frontier: DataFrame, hostCounts: DataFrame, hostSched: DataFrame,
+      hostEnq: DataFrame, quarantined: DataFrame,
+      hostSchedRows: Long, hostEnqRows: Long,
+      frontierDeadRows: Long, frontierTiers: Int,
+      seen: SeenLsm, sketch: SeenSketch,
+      pending: DataFrame, pendingRows: Long)
+
+  /** What every round of one [[run]] reads unchanged. `policies` is the
+   * tiny per-host policy table (host, allow, crawl_delay_s, max_pages),
+   * `policyRows` its row count, taken once per run. */
+  private case class RunCtx(spark: SparkSession, snap: SnapshotTable,
+                            docs: DataFrame, policies: DataFrame, policyRows: Long,
+                            cfg: CrawlConfig, sketchThreshold: Long)
+
+  /** The state of a fresh crawl before its seeds: nothing enqueued, seen
+   * or dispatched. */
+  private def emptyState(spark: SparkSession, cfg: CrawlConfig): RoundState = {
+    import spark.implicits._
+    val frontier = Seq.empty[(String, String, Int, Int, Long, Long)]
+      .toDF("url", "host", "depth", "retry", "seq", "host_rank")
+    def perHost(c: String) = Seq.empty[(String, Long)].toDF("host", c)
+    RoundState(0, 0L, 0L, 0L, frontier, perHost("cnt"), perHost("dispatched"),
+      perHost("enq"), Seq.empty[String].toDF("host"), 0L, 0L, 0L, 0,
+      SeenLsm(Seq.empty[String].toDF("url")),
+      SeenSketch.empty(cfg.seenSketch, cfg.sketchCapacity), frontier, 0L)
+  }
+
+  /** The state committed at round `r`, for round r + 1: the meta stamps
+   * and the frontier and per-host tables, read back from the snapshot.
+   * Reading them back truncates lineage, and it is exactly what a resume
+   * reads. `seen` and `sketch` are passed in (see [[round]]). */
+  private def load(ctx: RunCtx, r: Int, seen: SeenLsm, sketch: SeenSketch): RoundState = {
+    val (spark, snap) = (ctx.spark, ctx.snap)
+    val m = roundMeta(snap, r)
+    def stamp(k: String): Long = m(k).toLong
+    val frontier = snap.loadHybrid(spark, "frontier", r)
+    RoundState(r + 1, stamp("nextSeq"), stamp("frontierSize"), stamp("seenSize"),
+      frontier, snap.loadReplaced(spark, "host_counts", r),
+      snap.loadReplaced(spark, "host_sched", r), snap.loadReplaced(spark, "host_enq", r),
+      snap.loadReplaced(spark, "quarantined", r),
+      stamp("hostSchedRows"), stamp("hostEnqRows"), stamp("frontierDeadRows"),
+      stamp("frontierTiers").toInt, seen, sketch, frontier.limit(0), 0L)
+  }
+
+  /** Sketch-prefiltered [[admit]] against the state's seen LSM and host
+   * counts (the prefilter engages at `sketchThreshold`, see [[run]]). */
+  private def admitTo(ctx: RunCtx, st: RoundState, candidates: DataFrame): DataFrame = {
+    val prefilter =
+      if (st.seenSize >= ctx.sketchThreshold && !st.sketch.saturated) Some(st.sketch)
+      else None
+    admit(ctx.spark, candidates, st.seen.base, st.hostCounts, ctx.cfg, prefilter,
+      st.seen.deltas)
+      .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank")
+  }
+
+  /** Rank-offset side for new entries: gated broadcast of the per-host
+   * enqueue totals (same size class and gate as the dispatch budget). */
+  private def enqSide(ctx: RunCtx, st: RoundState): DataFrame =
+    if (st.hostEnqRows <= ctx.cfg.broadcastRowLimit) broadcast(st.hostEnq)
+    else st.hostEnq.hint("shuffle_hash")
+
+  /** `sketch` if healthy, else rebuilt from `seen` (`seenSize` rows) at
+   * growing capacity: a saturated sketch never serves as the admission
+   * prefilter. */
+  private def healthy(sketch: SeenSketch, seen: SeenLsm, seenSize: Long,
+                      cfg: CrawlConfig): SeenSketch =
+    if (!sketch.saturated) sketch
+    else rebuildSketch(seen.all, cfg.seenSketch,
+      math.max(4L * seenSize, sketch.capacity * 4))
+
+  /** A `kind` sketch of `seen`, built at `capacity` and rebuilt at 4x until
+   * it is not saturated (amortized O(seen) per crawl, like a growable
+   * array). */
+  @annotation.tailrec
+  private def rebuildSketch(seen: DataFrame, kind: String, capacity: Long): SeenSketch = {
+    val s = SeenSketch.build(seen, "url", kind, capacity)
+    if (s.saturated) rebuildSketch(seen, kind, capacity * 4) else s
+  }
+
+  /** Seeds (a fresh crawl's, and config hot-reload's, T5 gcloud_master.py:
+   * 542-617): `urls` are admitted at depth 0 through the SAME gate as
+   * extracted links (seen-dedup D1/D3, allowed-domains, per-host cap) and
+   * appended at the back of the queue before the round's dispatch. */
+  private def inject(ctx: RunCtx, st: RoundState, urls: Seq[String]): RoundState = {
+    if (urls.isEmpty) return st
+    import ctx.spark.implicits._
+    val cand = urls.zipWithIndex.toDF("url", "idx")
+      .select(col("url"), gf.url_policy_host(col("url")).as("host"),
+        lit(0).as("depth"), lit(0).as("retry"),
+        lit(-1L).as("ord1"), col("idx").as("ord2"))
+    // injected entries queue BEHIND everything the host ever enqueued:
+    // absolute rank = per-host enqueue total + admit's batch-local rank
+    val (entriesObserved, entriesObs) = countObs(
+      assignSeq(ctx.spark, admitTo(ctx, st, cand), Seq(col("ord1"), col("ord2")), st.nextSeq)
+        .select("url", "host", "depth", "retry", "seq", "host_rank")
+        .join(enqSide(ctx, st), Seq("host"), "left_outer")
+        .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
+        .drop("enq"))
+    val entries = entriesObserved.localCheckpoint(true)
+    val n = observedCount(entriesObs, st.round, "injected entries")
+    if (n == 0) return st
+    val seen = st.seen.append(entries.select("url"), n, st.seenSize + n)
+    SeenSketch.addAll(st.sketch, entries.select("url"), "url", n)
+    st.copy(nextSeq = st.nextSeq + n, frontierSize = st.frontierSize + n,
+      seenSize = st.seenSize + n, frontier = st.frontier.unionByName(entries),
+      hostCounts = plusHostCounts(st.hostCounts, "cnt", entries),
+      hostEnq = plusHostCounts(st.hostEnq, "enq", entries),
+      hostEnqRows = st.hostEnqRows + n, // safe over-bound until the commit observes it
+      seen = seen, pending = st.pending.unionByName(entries),
+      pendingRows = st.pendingRows + n)
+  }
+
+  /** The round's dispatched slice of the frontier: politeness budget (T4)
+   * and quarantine stamp (F9). */
+  private def dispatch(ctx: RunCtx, st: RoundState): DataFrame = {
+    val cfg = ctx.cfg
+    // ---- politeness window (T4): per-host budget from accumulated time.
+    // total_allowed(host, r) = floor((r+1)*roundSeconds / delay); the
+    // remaining budget subtracts everything already dispatched — this
+    // reproduces the reference's min-interval schedule (1 fetch per
+    // crawl_delay seconds per host) without sleeping. Full-outer with the
+    // dispatch history so hosts without a policy row still accumulate
+    // against the default delay (oracle: delayOf falls back to default).
+    // The policy table is the LEFT of the outer join, so no explicit
+    // broadcast hint (build-left is illegal for left_outer) — AQE
+    // broadcasts the legal side on its own.
+    val budget = ctx.policies
+      .join(st.hostSched, Seq("host"), "full_outer")
+      .withColumn("total_allowed",
+        floor(lit((st.round + 1) * cfg.roundSeconds) /
+          coalesce(when(col("crawl_delay_s") > 0, col("crawl_delay_s")),
+            lit(cfg.defaultCrawlDelayS))))
+      .withColumn("remaining",
+        col("total_allowed") - coalesce(col("dispatched"), lit(0L)))
+      .select(col("host"), col("remaining"), col("allow"),
+        coalesce(col("dispatched"), lit(0L)).as("disp_total"))
+    val defaultTotal =
+      math.floor((st.round + 1) * cfg.roundSeconds / cfg.defaultCrawlDelayS).toLong
+
+    // dispatch selection over the RAW LSM frontier (see dispatchSelectAbs
+    // — one hash join + one O(dispatched) materialization; liveness and
+    // politeness are a single rank predicate; the deferred remainder is
+    // never touched; the budget side broadcasts while bounded).
+    val dispatchedRaw = dispatchSelectAbs(st.frontier, budget, defaultTotal,
+      Some(ctx.policyRows + st.hostSchedRows), cfg.broadcastRowLimit)
+    // problematic-domain quarantine (F9, gcloud_crawler.py:242-253):
+    // fetches to quarantined hosts short-circuit as failures. The flag is
+    // stamped at dispatch (quarantine table is per-host and tiny —
+    // broadcast), takes effect the round AFTER a host is quarantined
+    // (BSP boundary normalization of the reference's immediate set-add),
+    // and still consumes the dispatch slot.
+    // dispatchedRaw is already checkpointed (O(dispatched)) inside
+    // dispatchSelectAbs, and the quarantine stamp is a broadcast hash
+    // join — consumers below re-run only that narrow tail, so no further
+    // materialization is needed
+    dispatchedRaw
+      .join(broadcast(st.quarantined.withColumn("quar_", lit(true))), Seq("host"), "left_outer")
+      .withColumn("quar", coalesce(col("quar_"), lit(false))).drop("quar_")
+  }
+
+  /** The "fetch": the dispatched slice joined against docs, each row
+   * typed by its fetch status and its spans extracted. Checkpointed, with
+   * the round's per-status counts observed on the checkpoint. */
+  private def fetch(ctx: RunCtx, st: RoundState,
+                    dispatched: DataFrame): (DataFrame, Map[String, Long]) = {
+    val cfg = ctx.cfg
+    // Inner join finds fetched pages; anti join derives 404s. The
+    // join strategy is SIZE-GATED: a broadcast join only while the
+    // dispatched count is under cfg.broadcastRowLimit (the per-host
+    // budget GROWS with round number, so "dispatched is small" is not an
+    // invariant); past the limit, a distributed bloom filter prunes the
+    // 100 TB docs scan down to ~dispatched size AT THE SCAN (non-matching
+    // rows never shuffle — FPs are re-checked exactly by the equi-join),
+    // and a shuffle-hash join finishes, so neither the driver nor any
+    // executor ever holds the whole dispatched set.
+    // dispatched ⊆ frontier, so when the whole frontier is under the
+    // limit the count job is unnecessary (saves one fixed-cost job in
+    // the common small-round case)
+    val nDisp =
+      if (st.frontierSize <= cfg.broadcastRowLimit) st.frontierSize
+      else dispatched.count() // cheap: narrow over the checkpointed phase-2 rows
+    val (fetched, missing) =
+      if (nDisp <= cfg.broadcastRowLimit) {
+        val f = ctx.docs.join(broadcast(dispatched), col("doc_id") === col("url"))
+        val m = dispatched.join(
+          broadcast(f.select(col("url").as("fetched_url"))),
+          col("url") === col("fetched_url"), "left_anti")
+        (f, m)
+      } else {
+        val urlBloom = SeenSketch.build(
+          dispatched.select("url"), "url", "bloom", math.max(nDisp, 1024L))
+        val bcBloom = ctx.spark.sparkContext.broadcast(urlBloom)
+        val prunedDocs = ctx.docs.where(
+          graft.functions.sketch.sketch_contains(col("doc_id"), bcBloom))
+        val f = prunedDocs.join(dispatched.hint("shuffle_hash"),
+          col("doc_id") === col("url"))
+        val m = dispatched.join(
+          f.select(col("url").as("fetched_url")).hint("shuffle_hash"),
+          col("url") === col("fetched_url"), "left_anti")
+        (f, m)
+      }
+
+    val robotsOn = cfg.respectRobots
+    val fetchedTyped = fetched.select(
+      col("url"), col("host"), col("depth"), col("retry"), col("seq"),
+      when(col("quar"), lit("quarantined")) // checked FIRST, as in the ref
+        .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
+        .when(col("retry") < col("flaky_fails"), lit("timeout"))
+        .when(col("content_type") =!= "text/html", lit("ok_non_html"))
+        .otherwise(lit("ok")).as("status"),
+      col("raw"), col("content_type"))
+
+    val resultsObs = new Observation()
+    val results = fetchedTyped.unionByName(
+      missing.select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
+        // same gate ORDER as the fetched branch: quarantine, then robots
+        // (the reference checks robots before fetching, so a dangling URL
+        // on a disallowed host is skipped_robots, not a 404), then 404
+        when(col("quar"), lit("quarantined"))
+          .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
+          .otherwise(lit("failed")).as("status"),
+        lit(null).cast("string").as("raw"),
+        lit(null).cast("string").as("content_type")))
+      .withColumn("spans",
+        when(col("status") === "ok", gf.extract_spans(col("raw")))
+          .otherwise(array().cast(graft.functions.SpanExtract.schema)))
+      // the round's counters: a per-status histogram plus the timeouts
+      // past maxRetries, observed on this checkpoint (no job of their own)
+      .observe(resultsObs, count(lit(1)).as("dispatched"),
+        FetchStatuses.map(s => count(when(col("status") === s, 1)).as(s)) :+
+          count(when(col("status") === "timeout" &&
+            col("retry") + 1 > cfg.maxRetries, 1)).as("timeout_exhausted"): _*)
+      .localCheckpoint(true) // parse once; reused by links/doc_store/log
+    (results, observedCounts(resultsObs, st.round, "results by status"))
+  }
+
+  /** Link expansion and admission: the ok pages' ordered anchors,
+   * canonicalized, through the admission gate. Checkpointed, with the
+   * admitted count. */
+  private def expand(ctx: RunCtx, st: RoundState,
+                     results: DataFrame): (DataFrame, Long) = {
+    val parents = results.where(col("status") === "ok" &&
+      col("depth") < ctx.cfg.maxDepth) // depth gate F6 (gcloud_master.py:425-427)
+    val candidates = parents
+      .select(col("url").as("page_url"), col("depth").as("parent_depth"),
+        col("seq").as("ord1"), posexplode(col("spans")).as(Seq("pos", "span")))
+      .where(col("span.kind") === "link")
+      .select(
+        gf.url_canonicalize(col("page_url"), col("span.media_ref")).as("url"),
+        (col("parent_depth") + 1).as("depth"), col("ord1"),
+        col("span.offset").as("ord2"))
+      .where(col("url").isNotNull)
+      .withColumn("host", gf.url_policy_host(col("url")))
+      .withColumn("retry", lit(0))
+    val (admittedObserved, admittedObs) = countObs(admitTo(ctx, st, candidates))
+    val admitted = admittedObserved.localCheckpoint(true)
+    (admitted, observedCount(admittedObs, st.round, "admitted"))
+  }
+
+  /** The round's new frontier entries — timeout requeues, then admitted
+   * links — with sequence numbers and absolute per-host ranks.
+   * Checkpointed, with their count. */
+  private def enqueue(ctx: RunCtx, st: RoundState, results: DataFrame,
+                      admitted: DataFrame): (DataFrame, Long) = {
+    // ---- timeout requeue (T2/T3): retry+1, terminal past maxRetries
+    // (the terminal ones fail in commitRound).
+    // Requeues re-enter the frontier, so they need batch-local per-host
+    // ranks for the host_rank invariant. This window runs over the
+    // REQUEUE SET ONLY — bounded by the round's politeness budget per
+    // host (requeues ⊆ dispatched), never the frontier — so it stays
+    // small by construction at any crawl size.
+    val reqW = Window.partitionBy(col("host")).orderBy(col("seq"))
+    val requeue = results.where(col("status") === "timeout")
+      .where(col("retry") + 1 <= ctx.cfg.maxRetries)
+      .withColumn("lrank_", row_number().over(reqW).cast(LongType))
+      .select(col("url"), col("host"), col("depth"),
+        (col("retry") + 1).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"),
+        col("lrank_"))
+
+    // ---- new sequence numbers: timeout requeues go to the back of the
+    // queue first (gcloud_master.py:525-531), then children in
+    // (parent_seq, link_pos) BFS order (:336).
+    // Batch-local per-host ranks (lrank_) follow the same order:
+    // requeues rank first, admitted rows offset by the host's requeue
+    // count — admit's host_rank is already the admitted-batch rank.
+    val reqCnt = requeue.groupBy("host").agg(count(lit(1)).as("rq_"))
+    val adds = requeue.withColumn("bucket", lit(0))
+      .unionByName(admitted
+        .join(broadcast(reqCnt), Seq("host"), "left_outer")
+        .withColumn("lrank_", col("host_rank") + coalesce(col("rq_"), lit(0L)))
+        .drop("host_rank", "rq_")
+        .withColumn("bucket", lit(1)))
+    // final ABSOLUTE frontier ranks: new entries queue behind everything
+    // the host ever enqueued — lrank_ + the per-host enqueue total
+    val (newEntriesObserved, newEntriesObs) = countObs(
+      assignSeq(ctx.spark, adds, Seq(col("bucket"), col("ord1"), col("ord2")), st.nextSeq)
+        .join(enqSide(ctx, st), Seq("host"), "left_outer")
+        .withColumn("host_rank", col("lrank_") + coalesce(col("enq"), lit(0L)))
+        .select("url", "host", "depth", "retry", "seq", "host_rank"))
+    val newEntries = newEntriesObserved.localCheckpoint(true)
+    (newEntries, observedCount(newEntriesObs, st.round, "new entries"))
+  }
+
+  /** One BSP round over `st`: inject → dispatch → fetch → expand+admit →
+   * enqueue → commit. Returns its stats and the state the next round
+   * reads. */
+  private def round(ctx: RunCtx, st0: RoundState,
+                    injected: Seq[String]): (RoundStats, RoundState) = {
+    // a saturated sketch (reloaded from a saturated blob, or seeds past
+    // capacity) is rebuilt before the round's admissions use it
+    val st = inject(ctx,
+      st0.copy(sketch = healthy(st0.sketch, st0.seen, st0.seenSize, ctx.cfg)), injected)
+    val dispatched = dispatch(ctx, st)
+    val (results, counts) = fetch(ctx, st, dispatched)
+    val (admitted, nAdmitted) = expand(ctx, st, results)
+    val (newEntries, nAdds) = enqueue(ctx, st, results, admitted)
+
+    // ---- state updates (the deferred remainder needs NONE: its rows sit
+    // untouched in the raw LSM view; next round's larger dispatch totals
+    // shift their effective ranks arithmetically). Seen grows by admitted
+    // only (requeues are already-seen URLs).
+    val seen =
+      if (nAdmitted == 0) st.seen
+      else st.seen.append(admitted.select("url"), nAdmitted, st.seenSize + nAdmitted)
+    // incremental sketch maintenance, DISTRIBUTED: per-partition delta
+    // shards over this round's admitted URLs, merged into the running
+    // sketch on the driver (SeenSketch.addAll) — O(adds) spread across
+    // executors, never a driver-side row loop; rebuilt on saturation.
+    if (nAdmitted > 0) SeenSketch.addAll(st.sketch, admitted.select("url"), "url", nAdmitted)
+    val sketch = healthy(st.sketch, seen, st.seenSize + nAdmitted, ctx.cfg)
+    val stats = commitRound(ctx, st, dispatched, results, counts, admitted, nAdmitted,
+      newEntries, nAdds, sketch)
+    // the next round reads the committed snapshot, except `seen`: its
+    // in-memory LSM form (folded base + folded deltas, all checkpointed ⇒
+    // lineage already truncated) is row-for-row the parquet hybrid's
+    // content, and reloading would re-pay the fold shuffle every round —
+    // the exact cost the LSM exists to avoid. The sketch is the one the
+    // commit serialized.
+    (stats, load(ctx, st.round, seen, sketch))
+  }
+
+  /** Commit round `st.round` (T6): the round's tables, its counters and
+   * the meta stamps [[load]] reads, as one atomic snapshot. */
+  private def commitRound(ctx: RunCtx, st: RoundState, dispatched: DataFrame,
+                          results: DataFrame, n: Map[String, Long],
+                          admitted: DataFrame, nAdmitted: Long,
+                          newEntries: DataFrame, nAdds: Long,
+                          sketch: SeenSketch): RoundStats = {
+    val (spark, cfg, round) = (ctx.spark, ctx.cfg, st.round)
+    import spark.implicits._
+    // terminal failures of THIS round (CrawlState.failed,
+    // gcloud_master.py:197-207) — appended to the hybrid failed table;
+    // the reset-failures flow (D4) re-opens them.
+    val timeoutFail = results.where(col("status") === "timeout")
+      .where(col("retry") + 1 > cfg.maxRetries)
+    val failedNow = results
+      .where(col("status").isin("failed", "skipped_robots", "quarantined"))
+      .unionByName(timeoutFail)
+      .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
+        when(col("status") === "failed", lit("http_404"))
+          .when(col("status") === "skipped_robots", lit("robots_disallowed"))
+          .when(col("status") === "quarantined", lit("quarantined_host"))
+          .otherwise(lit("retries_exhausted")).as("error"))
+    // hosts whose URLs exhausted their retries this round join the
+    // quarantine (the reference's connection-failure path,
+    // gcloud_crawler.py:432,452) — effective from the NEXT round
+    val newQuar = st.quarantined.unionByName(timeoutFail.select("host")).distinct()
+    val newHostCounts = plusHostCounts(st.hostCounts, "cnt", admitted)
+    val newHostSched = plusHostCounts(st.hostSched, "dispatched", dispatched)
+    // per-host enqueue totals grow by this round's new entries (requeues
+    // included — they re-enter at fresh absolute ranks)
+    val newHostEnq = plusHostCounts(st.hostEnq, "enq", newEntries)
+
+    // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
+    // part_id records which executor partition fetched/extracted the row
+    // (per-partition lineage; observability only — never ordering).
+    val fetchLog = results.select(
+      lit(round).as("round"), col("url"), col("host"), col("depth"),
+      col("seq"), col("status"), spark_partition_id().as("part_id"),
+      when(col("status") === "failed", lit("http_404"))
+        .when(col("status") === "timeout", lit("fetch_timeout"))
+        .when(col("status") === "skipped_robots", lit("robots_disallowed"))
+        .when(col("status") === "quarantined", lit("quarantined_host"))
+        .otherwise(lit(null).cast("string")).as("error"),
+      when(col("status") === "ok",
+        size(filter(col("spans"), s => s("kind") === "link")))
+        .otherwise(lit(0)).as("links_found"))
+
+    val docStore = results.where(col("status") === "ok").select(
+      lit(round).as("round"), col("url"),
+      coalesce(element_at(
+        transform(filter(col("spans"), s => s("kind") === "title"), s => s("text")), 1),
+        lit("")).as("title"),
+      concat_ws(" ", transform(
+        filter(col("spans"), s => s("text") =!= ""), s => s("text"))).as("text"))
+
+    // ---- raw-page store (S6, gcloud_crawler.py:555-590): every
+    // successfully fetched page keeps its raw body. Written UNBUCKETED,
+    // straight from the checkpointed results — raw bodies are the round's
+    // biggest payload and a bucketing repartition would shuffle all of
+    // them every round; the point lookup (J6) still prunes via parquet
+    // min/max footer stats on the url column.
+    val pages = results.where(col("status").isin("ok", "ok_non_html")).select(
+      lit(round).as("round"), col("url"), col("host"),
+      col("raw"), col("content_type"))
+
+    // ---- incremental inverted index (T8/S9, gcloud_indexer.py:43-62,
+    // 356-366): postings for THIS round's docs only — idempotent on
+    // (term, url) globally because seen-dedup admits each url once ever.
+    val postingsRows = SearchIndex.postings(
+      docStore.select("url", "title", "text")).withColumn("round", lit(round))
+
+    // ---- per-worker stats (A4/T7, gcloud_master.py:702-725): processed
+    // counts per executor partition, with the round as the heartbeat
+    // clock (wall-clock-free liveness: a worker partition that appears in
+    // round r was alive in round r).
+    val workerStats = fetchLog
+      .groupBy(col("round"), col("part_id"))
+      .agg(count(lit(1)).as("processed"),
+        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
+        sum(col("links_found")).as("links_found"))
+
+    // ---- round counters (CrawlState sizes, gcloud_master.py:686-688),
+    // computed pre-commit so they ride in the SAME atomic snapshot and
+    // /status projections (§3.3) read tables, never driver state.
+    // They are OBSERVED on the results checkpoint (per-status histogram
+    // plus exhausted timeouts): no aggregation job of their own, since
+    // per-round fixed job cost bounds the crawl round at this scale.
+    val nDispatched = n("dispatched")
+    val timeoutExhausted = n("timeout_exhausted")
+    val nFailed = n("failed") + n("skipped_robots") + n("quarantined") + timeoutExhausted
+    val nCompleted = n("ok") + n("ok_non_html")
+    val nRequeued = n("timeout") - timeoutExhausted
+    // no count job: dispatch consumes a per-host prefix of the live set,
+    // so the new live size is pure arithmetic
+    val frontierSize = st.frontierSize - nDispatched + nAdds
+    val seenSize = st.seenSize + nAdmitted
+    val rs = RoundStats(round, nDispatched, nCompleted, nFailed,
+      nRequeued, nAdds, frontierSize, seenSize)
+
+    // ---- commit round snapshot (T6): atomic manifest = round boundary.
+    // Per-round write cost tracks what CHANGED, not accumulated table
+    // sizes: `seen`/`failed` APPEND this round's delta only, the FRONTIER
+    // is an LSM hybrid — this round's new entries append as a delta tier
+    // (physically host-hash bucketed, the rule's `bucket(N, host_hash)`
+    // partitioned priority frontier), the base is rewritten (compacted to
+    // live rows) only when dead rows outgrow live rows or the tier chain
+    // gets long — and unchanged replaced tables (host_counts with no
+    // admissions, quarantined with no new exhaustions) are CARRIED: the
+    // manifest points at the round that last wrote them, no data moves.
+    // Per-round frontier bytes written are therefore ∝ (admitted +
+    // requeued), never ∝ frontier size — the write-amplification bound
+    // that makes a 10^10-row frontier commit-able every round.
+    // Round 0 writes every replaced table and the failed base.
+    // host_sched/host_enq row counts are observed during the commit's own
+    // writes (same zero-extra-pass pattern as the postings index stats)
+    // and stamped for the next round's broadcast gates.
+    val (schedWrite, schedObs) = countObs(newHostSched)
+    val (enqWrite, enqObs) = countObs(newHostEnq)
+    val replaced = scala.collection.mutable.Map[String, DataFrame]("host_sched" -> schedWrite)
+    val carried = scala.collection.mutable.Map.empty[String, Int]
+    val appended = scala.collection.mutable.Map[String, DataFrame](
+      "counters" -> Seq(rs).toDS().toDF().coalesce(1))
+    def replaceOrCarry(name: String, df: DataFrame, changed: Boolean): Unit =
+      if (changed || round == 0) replaced += name -> df else carried += name -> (round - 1)
+    val deadRows = st.frontierDeadRows + nDispatched
+    val compact = round == 0 || deadRows > frontierSize || st.frontierTiers >= 64
+    val added = nAdds + st.pendingRows > 0
+    if (compact)
+      // base rewrite: live rows only (dead prefixes drop out), absolute
+      // ranks preserved — O(live), amortized against the dead rows shed
+      replaced += "frontier" -> liveRows(st.frontier.unionByName(newEntries), newHostSched)
+    else if (added) appended += "frontier" -> st.pending.unionByName(newEntries)
+    replaceOrCarry("host_enq", enqWrite, added)
+    replaceOrCarry("host_counts", newHostCounts, nAdmitted > 0 || st.pendingRows > 0)
+    replaceOrCarry("quarantined", newQuar, timeoutExhausted > 0)
+    if (round == 0) replaced += "failed" -> failedNow
+    else if (nFailed > 0) appended += "failed" -> failedNow
+    if (nAdmitted > 0 || st.pendingRows > 0)
+      appended += "seen" -> st.pending.select("url").unionByName(admitted.select("url"))
+    if (nDispatched > 0) {
+      appended += "fetch_log" -> fetchLog
+      appended += "worker_stats" -> workerStats
+    }
+    if (nCompleted > 0) appended += "pages" -> pages
+    // index-size stats (A4, gcloud_indexer.py:566-573): approx distinct
+    // terms/docs of this round's postings DELTA, observed during the
+    // postings write itself (zero extra pass) and recorded in the same
+    // atomic manifest; Crawler.indexStats gives the exact cumulative
+    // numbers on demand.
+    val idxObs = if (n("ok") > 0) Some(new Observation()) else None
+    idxObs.foreach { o =>
+      appended += "doc_store" -> docStore
+      appended += "postings" -> postingsRows.observe(o,
+        approx_count_distinct(col("term")).as("terms"),
+        approx_count_distinct(col("url")).as("docs"),
+        count(lit(1)).as("postings"))
+    }
+    ctx.snap.commit(spark, round,
+      replaced = replaced.toMap,
+      appended = appended.toMap,
+      meta = stamps(st.nextSeq + nAdds, frontierSize, seenSize,
+        frontierDeadRows = if (compact) 0L else deadRows,
+        frontierTiers = if (compact) 0 else st.frontierTiers + (if (added) 1 else 0)),
+      blobs = Map("seen_sketch" -> SeenSketch.serialize(sketch)),
+      bucketed = Map(
+        "frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
+      carried = carried.toMap,
+      // index stats from the observed postings write (see awaitObs): any
+      // failure degrades to stats-less meta — metrics must never abort a
+      // commit whose table writes succeeded. A missed row count falls back
+      // to a safe OVER-bound (hosts can only have grown by this round's
+      // rows), so the broadcast gates never under-estimate their build
+      // sides; a carried host_enq keeps its bound.
+      metaLate = () => Map(
+        "hostSchedRows" -> rowsOr(schedObs, st.hostSchedRows + nDispatched).toString,
+        "hostEnqRows" -> (if (!replaced.contains("host_enq")) st.hostEnqRows
+                          else rowsOr(enqObs, st.hostEnqRows + nAdds)).toString) ++
+        idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
+          Map("idx_new_terms_approx" -> m("terms").toString,
+            "idx_new_docs_approx" -> m("docs").toString,
+            "idx_new_postings" -> m("postings").toString))
+          .getOrElse(Map.empty[String, String]))
+    rs
+  }
 
   /** Run the crawl to completion (or maxRounds), committing one snapshot
    * per round under `root`. Resumes from the latest committed round when
@@ -484,145 +1056,22 @@ object Crawler {
           maxRounds: Int = 10000, sketchThreshold: Long = 100000L,
           seedFeed: Int => Seq[String] = _ => Nil,
           stopRequested: () => Boolean = () => false): CrawlSummary = {
-    import spark.implicits._
     val snap = new SnapshotTable(root)
-
-    val emptySeen = Seq.empty[String].toDF("url")
-    val emptyCounts = Seq.empty[(String, Long)].toDF("host", "cnt")
-    val emptySched = Seq.empty[(String, Long)].toDF("host", "dispatched")
-    val emptyQuar = Seq.empty[String].toDF("host")
-    // `failed` is a HYBRID table like `seen`: the first commit of a fresh
-    // crawl replaces it (the base), every later round APPENDS only that
-    // round's terminal failures — the accumulated failure set is never
-    // rewritten (it only shrinks at reset compactions). failedBase tracks
-    // whether the base commit exists yet.
-    var failedBase = snap.latestRound.isDefined
-
-    // ---- restore or seed (gcloud_master.py:274-318 / :533-540) ----
-    // `seen` is a HYBRID table: O(admitted) appended per round (a 10^10
-    // seen set must never be rewritten per round), with replace commits
-    // only at compactions/resets (SnapshotTable.loadHybrid).
-    // The FRONTIER is a hybrid (LSM) table too, as of r5: `frontier` holds
-    // the RAW view — live rows ∪ rows dispatched in earlier rounds — with
-    // ABSOLUTE per-host enqueue ranks; a row is live iff host_rank >
-    // dispatched(host), so dispatch never rewrites the deferred remainder
-    // (see dispatchSelectAbs). `hostEnq` (host → rows ever enqueued)
-    // supplies the rank offsets new entries queue behind.
-    var sketch: graft.functions.SeenSketch = null
-    // seed URLs not yet covered by any committed seen append (first round
-    // of a fresh crawl appends them together with its admitted links)
-    var pendingSeen = emptySeen
-    var pendingSeenRows = 0L
-    var round = 0
-    var nextSeq = 0L
-    var frontier: DataFrame = null
-    var seen: DataFrame = null
-    var hostCounts: DataFrame = null
-    var hostSched: DataFrame = null
-    var quarTbl: DataFrame = null
-    var hostEnq: DataFrame = null
-    var frontierSize = 0L
-    var seenSize = 0L
-    snap.latestRound match {
+    val policyDf = policies.toDF()
+    val ctx = RunCtx(spark, snap, docs.toDF(), policyDf, policyDf.count(), cfg,
+      sketchThreshold)
+    // restore (gcloud_master.py:274-318) or seed (:533-540). `seen` is a
+    // HYBRID table: O(admitted) appended per round (a 10^10 seen set must
+    // never be rewritten per round), with replace commits only at
+    // compactions/resets (SnapshotTable.loadHybrid); in memory it is the
+    // folded LSM.
+    var state = snap.latestRound match {
       case Some(r) =>
-        val m = roundMeta(snap, r)
-        round = r + 1
-        nextSeq = m("nextSeq").toLong
-        frontierSize = m("frontierSize").toLong
-        seenSize = m("seenSize").toLong
-        seen = snap.loadHybrid(spark, "seen", r)
-        sketch = loadSketch(snap, r, seen, cfg)
-        frontier = snap.loadHybrid(spark, "frontier", r)
-        hostCounts = snap.loadReplaced(spark, "host_counts", r)
-        hostSched = snap.loadReplaced(spark, "host_sched", r)
-        hostEnq = snap.loadReplaced(spark, "host_enq", r)
-        quarTbl = snap.loadReplaced(spark, "quarantined", r)
-      case None =>
-        val seedCand = seedUrls.zipWithIndex.toDF("url", "idx")
-          .select(col("url"),
-            gf.url_policy_host(col("url")).as("host"),
-            lit(0).as("depth"), lit(0).as("retry"),
-            lit(-1L).as("ord1"), col("idx").as("ord2"))
-        val admitted = admit(spark, seedCand, emptySeen, emptyCounts, cfg, None)
-        // the frontier starts empty, so admit's batch-local host_rank IS
-        // the absolute host_rank (nothing enqueued before, nothing dispatched)
-        val (f0Observed, f0Obs) = countObs(assignSeq(spark,
-          admitted.select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank"),
-          Seq(col("ord1"), col("ord2")), 0L)
-          .select("url", "host", "depth", "retry", "seq", "host_rank"))
-        val f0 = f0Observed.localCheckpoint(true)
-        val s0 = f0.select("url")
-        val c0 = f0.groupBy("host").agg(count(lit(1)).as("cnt"))
-        val nSeed = observedCount(f0Obs, 0, "seed entries")
-        sketch = graft.functions.SeenSketch.empty(cfg.seenSketch, cfg.sketchCapacity)
-        graft.functions.SeenSketch.addAll(sketch, s0, "url", nSeed)
-        pendingSeen = s0
-        pendingSeenRows = nSeed
-        nextSeq = nSeed
-        frontier = f0
-        seen = s0
-        hostCounts = c0
-        hostSched = emptySched
-        quarTbl = emptyQuar
-        hostEnq = c0.select(col("host"), col("cnt").as("enq"))
-        frontierSize = nSeed
-        seenSize = nSeed
-    }
-
-    // tiny per-host table; joined as the LEFT of outer joins, so no explicit
-    // broadcast hint (build-left is illegal for left_outer) — AQE broadcasts
-    // the legal side on its own
-    val policyDf = policies.toDF() // host, allow, crawl_delay_s, max_pages
-    // dispatch budget-side row bound (per-HOST rows: policy ∪ dispatch
-    // history). policy rows counted once per crawl; hostSchedSize updated
-    // per round from an observation on the commit's own host_sched write
-    // (zero extra jobs). Gates dispatchSelectAbs's broadcast-vs-shuffle choice.
-    val policyRows = policyDf.count()
-    var hostSchedSize: Long = snap.latestRound match {
-      case Some(_) => hostSched.count() // once, at resume only
-      case None => 0L
-    }
-    // host_enq row bound for the rank-offset joins (same gate pattern;
-    // maintained per round from an observation on the commit's own write).
-    // Fresh crawls use the seed count as a safe over-bound (hosts ≤ seeds).
-    var hostEnqSize: Long = snap.latestRound match {
-      case Some(_) => hostEnq.count() // once, at resume only
-      case None => frontierSize
+        val seen = snap.loadHybrid(spark, "seen", r)
+        load(ctx, r, SeenLsm(foldSeen(seen)), loadSketch(snap, r, seen, cfg))
+      case None => inject(ctx, emptyState(spark, cfg), seedUrls)
     }
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
-
-    // seen LSM (see foldSeen): `seen` becomes the folded base; per-round
-    // admitted urls append as folded delta tiers; the base refolds when
-    // the deltas reach a quarter of it (or the anti-join chain would grow
-    // past 8 links). The parquet hybrid table stays the only durable form
-    // — this is purely the hot-path join layout.
-    seen = foldSeen(seen)
-    var seenDeltas: List[DataFrame] = Nil
-    var seenDeltaRows = 0L
-    def seenAll: DataFrame = seenDeltas.foldLeft(seen)(_ unionByName _)
-    def appendSeenDelta(urls: DataFrame, n: Long, total: Long): Unit = {
-      seenDeltas :+= foldSeen(urls)
-      seenDeltaRows += n
-      if (seenDeltas.length >= 8 || seenDeltaRows * 4 >= total) {
-        seen = foldSeen(seenAll); seenDeltas = Nil; seenDeltaRows = 0
-      }
-    }
-
-    // frontier-LSM bookkeeping: dead rows accumulated in the STORED raw
-    // table since its last base rewrite, and delta tiers appended since —
-    // the compaction triggers (see the commit block)
-    var frontierDeadRows = 0L
-    var frontierTiers = 0
-
-    // a saturated sketch (reloaded from a saturated blob, or seeds past
-    // capacity) must never serve as the admission prefilter — rebuild at
-    // growing capacity until healthy before the first round uses it
-    var restoreCap = math.max(4L * math.max(seenSize, 1L), sketch.capacity * 4)
-    while (sketch.saturated) {
-      sketch = graft.functions.SeenSketch.build(seen, "url", cfg.seenSketch, restoreCap)
-      restoreCap *= 4
-    }
-
     // `seedFeed` must be a pure function of the round number (it is called
     // once in the loop guard and once in the body) — the config-hot-reload
     // contract: "what new seeds appeared by round r" (T5).
@@ -632,473 +1081,13 @@ object Crawler {
     // would, and a later run() resumes from it (resume-equivalence spec).
     // statusSummary keeps reporting is_running=true while work remains,
     // mirroring the reference's stopped-but-resumable crawl.
-    while (!stopRequested() && round < maxRounds &&
-           (frontierSize > 0 || seedFeed(round).nonEmpty)) {
-      // ---- config hot-reload (T5, gcloud_master.py:542-617): seeds that
-      // appeared since the last round are admitted at depth 0 through the
-      // SAME gate as extracted links (seen-dedup D1/D3, allowed-domains,
-      // per-host cap) and appended at the back of the queue before this
-      // round's dispatch — the reference's add-seeds-to-running-crawl flow.
-      val injectedSeeds = seedFeed(round)
-      var hostCountsDirty = false // host_counts is carried unless this round admitted
-      // rank-offset side for new entries: gated broadcast of the per-host
-      // enqueue totals (same size class and gate as the dispatch budget)
-      def enqSide: DataFrame =
-        if (hostEnqSize <= cfg.broadcastRowLimit) broadcast(hostEnq)
-        else hostEnq.hint("shuffle_hash")
-      var injectedEntries: Option[DataFrame] = None
-      var nInjected = 0L
-      if (injectedSeeds.nonEmpty) {
-        val cand = injectedSeeds.zipWithIndex.toDF("url", "idx")
-          .select(col("url"), gf.url_policy_host(col("url")).as("host"),
-            lit(0).as("depth"), lit(0).as("retry"),
-            lit(-1L).as("ord1"), col("idx").as("ord2"))
-        val prefilterInj =
-          if (seenSize >= sketchThreshold && !sketch.saturated) Some(sketch) else None
-        val adm = admit(spark, cand, seen, hostCounts, cfg, prefilterInj, seenDeltas)
-          .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank")
-        // injected entries queue BEHIND everything the host ever enqueued:
-        // absolute rank = per-host enqueue total + admit's batch-local rank
-        // (a broadcast join — the O(frontier) per-host count aggregation
-        // the relative-rank design paid on injection rounds is gone)
-        val (entriesObserved, entriesObs) = countObs(
-          assignSeq(spark, adm, Seq(col("ord1"), col("ord2")), nextSeq)
-            .select("url", "host", "depth", "retry", "seq", "host_rank")
-            .join(enqSide, Seq("host"), "left_outer")
-            .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
-            .drop("enq"))
-        val entries = entriesObserved.localCheckpoint(true)
-        val nInj = observedCount(entriesObs, round, "injected entries")
-        if (nInj > 0) {
-          hostCountsDirty = true
-          nextSeq += nInj
-          frontier = frontier.unionByName(entries)
-          injectedEntries = Some(entries)
-          nInjected = nInj
-          appendSeenDelta(entries.select("url"), nInj, seenSize + nInj)
-          pendingSeen = pendingSeen.unionByName(entries.select("url"))
-          pendingSeenRows += nInj
-          hostCounts = plusHostCounts(hostCounts, "cnt", entries)
-          hostEnq = plusHostCounts(hostEnq, "enq", entries)
-          hostEnqSize += nInj // safe over-bound until the commit observation
-          graft.functions.SeenSketch.addAll(sketch, entries.select("url"), "url", nInj)
-          seenSize += nInj
-          frontierSize += nInj // keep the broadcast-gate bound exact
-        }
-      }
-
-      // ---- politeness window (T4): per-host budget from accumulated time.
-      // total_allowed(host, r) = floor((r+1)*roundSeconds / delay); the
-      // remaining budget subtracts everything already dispatched — this
-      // reproduces the reference's min-interval schedule (1 fetch per
-      // crawl_delay seconds per host) without sleeping. Full-outer with the
-      // dispatch history so hosts without a policy row still accumulate
-      // against the default delay (oracle: delayOf falls back to default).
-      val budget = policyDf
-        .join(hostSched, Seq("host"), "full_outer")
-        .withColumn("total_allowed",
-          floor(lit((round + 1) * cfg.roundSeconds) /
-            coalesce(when(col("crawl_delay_s") > 0, col("crawl_delay_s")),
-              lit(cfg.defaultCrawlDelayS))))
-        .withColumn("remaining",
-          col("total_allowed") - coalesce(col("dispatched"), lit(0L)))
-        .select(col("host"), col("remaining"), col("allow"),
-          coalesce(col("dispatched"), lit(0L)).as("disp_total"))
-      val defaultTotal =
-        math.floor((round + 1) * cfg.roundSeconds / cfg.defaultCrawlDelayS).toLong
-
-      // dispatch selection over the RAW LSM frontier (see dispatchSelectAbs
-      // — one hash join + one O(dispatched) materialization; liveness and
-      // politeness are a single rank predicate; the deferred remainder is
-      // never touched; the budget side broadcasts while bounded).
-      val dispatchedRaw = dispatchSelectAbs(frontier, budget, defaultTotal,
-        Some(policyRows + hostSchedSize), cfg.broadcastRowLimit)
-      // problematic-domain quarantine (F9, gcloud_crawler.py:242-253):
-      // fetches to quarantined hosts short-circuit as failures. The flag is
-      // stamped at dispatch (quarantine table is per-host and tiny —
-      // broadcast), takes effect the round AFTER a host is quarantined
-      // (BSP boundary normalization of the reference's immediate set-add),
-      // and still consumes the dispatch slot.
-      // dispatchedRaw is already checkpointed (O(dispatched)) inside
-      // dispatchSelectAbs, and the quarantine stamp is a broadcast hash
-      // join — consumers below re-run only that narrow tail, so no further
-      // materialization is needed
-      val dispatched = dispatchedRaw
-        .join(broadcast(quarTbl.withColumn("quar_", lit(true))), Seq("host"), "left_outer")
-        .withColumn("quar", coalesce(col("quar_"), lit(false))).drop("quar_")
-
-      // ---- "fetch": join the politeness-bounded dispatched set against
-      // docs. Inner join finds fetched pages; anti join derives 404s. The
-      // join strategy is SIZE-GATED: a broadcast join only while the
-      // dispatched count is under cfg.broadcastRowLimit (the per-host
-      // budget GROWS with round number, so "dispatched is small" is not an
-      // invariant); past the limit, a distributed bloom filter prunes the
-      // 100 TB docs scan down to ~dispatched size AT THE SCAN (non-matching
-      // rows never shuffle — FPs are re-checked exactly by the equi-join),
-      // and a shuffle-hash join finishes, so neither the driver nor any
-      // executor ever holds the whole dispatched set.
-      // dispatched ⊆ frontier, so when the whole frontier is under the
-      // limit the count job is unnecessary (saves one fixed-cost job in
-      // the common small-round case)
-      val nDisp =
-        if (frontierSize <= cfg.broadcastRowLimit) frontierSize
-        else dispatched.count() // cheap: narrow over the checkpointed phase-2 rows
-      val docsDf = docs.toDF()
-      val (fetched, missing) =
-        if (nDisp <= cfg.broadcastRowLimit) {
-          val f = docsDf.join(broadcast(dispatched), col("doc_id") === col("url"))
-          val m = dispatched.join(
-            broadcast(f.select(col("url").as("fetched_url"))),
-            col("url") === col("fetched_url"), "left_anti")
-          (f, m)
-        } else {
-          val urlBloom = graft.functions.SeenSketch.build(
-            dispatched.select("url"), "url", "bloom", math.max(nDisp, 1024L))
-          val bcBloom = spark.sparkContext.broadcast(urlBloom)
-          val prunedDocs = docsDf.where(
-            graft.functions.sketch.sketch_contains(col("doc_id"), bcBloom))
-          val f = prunedDocs.join(dispatched.hint("shuffle_hash"),
-            col("doc_id") === col("url"))
-          val m = dispatched.join(
-            f.select(col("url").as("fetched_url")).hint("shuffle_hash"),
-            col("url") === col("fetched_url"), "left_anti")
-          (f, m)
-        }
-
-      val robotsOn = cfg.respectRobots
-      val fetchedTyped = fetched.select(
-        col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-        when(col("quar"), lit("quarantined")) // checked FIRST, as in the ref
-          .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
-          .when(col("retry") < col("flaky_fails"), lit("timeout"))
-          .when(col("content_type") =!= "text/html", lit("ok_non_html"))
-          .otherwise(lit("ok")).as("status"),
-        col("raw"), col("content_type"))
-
-      val resultsObs = new org.apache.spark.sql.Observation()
-      val results = fetchedTyped.unionByName(
-        missing.select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-          // same gate ORDER as the fetched branch: quarantine, then robots
-          // (the reference checks robots before fetching, so a dangling URL
-          // on a disallowed host is skipped_robots, not a 404), then 404
-          when(col("quar"), lit("quarantined"))
-            .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
-            .otherwise(lit("failed")).as("status"),
-          lit(null).cast("string").as("raw"),
-          lit(null).cast("string").as("content_type")))
-        .withColumn("spans",
-          when(col("status") === "ok", gf.extract_spans(col("raw")))
-            .otherwise(array().cast(graft.functions.SpanExtract.schema)))
-        // the round's counters: a per-status histogram plus the timeouts
-        // past maxRetries, observed on this checkpoint (no job of their own)
-        .observe(resultsObs, count(lit(1)).as("dispatched"),
-          FetchStatuses.map(st => count(when(col("status") === st, 1)).as(st)) :+
-            count(when(col("status") === "timeout" &&
-              col("retry") + 1 > cfg.maxRetries, 1)).as("timeout_exhausted"): _*)
-        .localCheckpoint(true) // parse once; reused by links/doc_store/log
-
-      // ---- timeout requeue (T2/T3): retry+1, terminal past maxRetries.
-      // Requeues re-enter the frontier, so they need batch-local per-host
-      // ranks for the host_rank invariant. This window runs over the
-      // REQUEUE SET ONLY — bounded by the round's politeness budget per
-      // host (requeues ⊆ dispatched), never the frontier — so it stays
-      // small by construction at any crawl size.
-      val timeouts = results.where(col("status") === "timeout")
-      val reqW = Window.partitionBy(col("host")).orderBy(col("seq"))
-      val requeue = timeouts.where(col("retry") + 1 <= cfg.maxRetries)
-        .withColumn("lrank_", row_number().over(reqW).cast(LongType))
-        .select(col("url"), col("host"), col("depth"),
-          (col("retry") + 1).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"),
-          col("lrank_"))
-      val timeoutFail = timeouts.where(col("retry") + 1 > cfg.maxRetries)
-
-      // ---- link expansion: ordered anchors → canonicalize → candidates
-      val parents = results.where(col("status") === "ok" &&
-        col("depth") < cfg.maxDepth) // depth gate F6 (gcloud_master.py:425-427)
-      val candidates = parents
-        .select(col("url").as("page_url"), col("depth").as("parent_depth"),
-          col("seq").as("ord1"), posexplode(col("spans")).as(Seq("pos", "span")))
-        .where(col("span.kind") === "link")
-        .select(
-          gf.url_canonicalize(col("page_url"), col("span.media_ref")).as("url"),
-          (col("parent_depth") + 1).as("depth"), col("ord1"),
-          col("span.offset").as("ord2"))
-        .where(col("url").isNotNull)
-        .withColumn("host", gf.url_policy_host(col("url")))
-        .withColumn("retry", lit(0))
-
-      val prefilter =
-        if (seenSize >= sketchThreshold && !sketch.saturated) Some(sketch) else None
-      val (admittedObserved, admittedObs) = countObs(
-        admit(spark, candidates, seen, hostCounts, cfg, prefilter, seenDeltas)
-          .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank"))
-      val admitted = admittedObserved.localCheckpoint(true)
-
-      // ---- new sequence numbers: timeout requeues go to the back of the
-      // queue first (gcloud_master.py:525-531), then children in
-      // (parent_seq, link_pos) BFS order (:336).
-      // Batch-local per-host ranks (lrank_) follow the same order:
-      // requeues rank first, admitted rows offset by the host's requeue
-      // count — admit's host_rank is already the admitted-batch rank.
-      val reqCnt = requeue.groupBy("host").agg(count(lit(1)).as("rq_"))
-      val adds = requeue.withColumn("bucket", lit(0))
-        .unionByName(admitted
-          .join(broadcast(reqCnt), Seq("host"), "left_outer")
-          .withColumn("lrank_", col("host_rank") + coalesce(col("rq_"), lit(0L)))
-          .drop("host_rank", "rq_")
-          .withColumn("bucket", lit(1)))
-      // final ABSOLUTE frontier ranks: new entries queue behind everything
-      // the host ever enqueued — lrank_ + the per-host enqueue total (a
-      // gated-broadcast join; equal to the old deferred-count offset plus
-      // the dispatch history, which the liveness predicate subtracts back)
-      val (newEntriesObserved, newEntriesObs) = countObs(
-        assignSeq(spark, adds, Seq(col("bucket"), col("ord1"), col("ord2")), nextSeq)
-          .join(enqSide, Seq("host"), "left_outer")
-          .withColumn("host_rank", col("lrank_") + coalesce(col("enq"), lit(0L)))
-          .select("url", "host", "depth", "retry", "seq", "host_rank"))
-      val newEntries = newEntriesObserved.localCheckpoint(true)
-      val addsCount = observedCount(newEntriesObs, round, "new entries")
-      nextSeq += addsCount
-      // seen grows by admitted only (requeues are already-seen URLs)
-      val admittedCount = observedCount(admittedObs, round, "admitted")
-
-      // ---- state updates (the deferred remainder needs NONE: its rows sit
-      // untouched in the raw LSM view; next round's larger dispatch totals
-      // shift their effective ranks arithmetically)
-      if (admittedCount > 0)
-        appendSeenDelta(admitted.select("url"), admittedCount, seenSize + admittedCount)
-      val newSeen = seenAll
-
-      // incremental sketch maintenance, DISTRIBUTED: per-partition delta
-      // shards over this round's admitted URLs, merged into the running
-      // sketch on the driver (SeenSketch.addAll) — O(adds) spread across
-      // executors, never a driver-side row loop. On saturation, rebuild at
-      // growing capacity from the full seen table until healthy (amortized
-      // O(seen) per crawl, like a growable array).
-      if (admittedCount > 0)
-        graft.functions.SeenSketch.addAll(sketch, admitted.select("url"), "url", admittedCount)
-      var rebuildCap = math.max(4L * (seenSize + admittedCount), sketch.capacity * 4)
-      while (sketch.saturated) {
-        sketch = graft.functions.SeenSketch.build(newSeen, "url", cfg.seenSketch, rebuildCap)
-        rebuildCap *= 4
-      }
-
-      // terminal failures of THIS round (CrawlState.failed,
-      // gcloud_master.py:197-207) — appended to the hybrid failed table;
-      // the reset-failures flow (D4) re-opens them.
-      val failedNow = results
-        .where(col("status").isin("failed", "skipped_robots", "quarantined"))
-        .unionByName(timeoutFail)
-        .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-          when(col("status") === "failed", lit("http_404"))
-            .when(col("status") === "skipped_robots", lit("robots_disallowed"))
-            .when(col("status") === "quarantined", lit("quarantined_host"))
-            .otherwise(lit("retries_exhausted")).as("error"))
-      // hosts whose URLs exhausted their retries this round join the
-      // quarantine (the reference's connection-failure path,
-      // gcloud_crawler.py:432,452) — effective from the NEXT round
-      val newQuar = quarTbl.unionByName(timeoutFail.select("host")).distinct()
-      val newHostCounts = plusHostCounts(hostCounts, "cnt", admitted)
-      val newHostSched = plusHostCounts(hostSched, "dispatched", dispatched)
-      // per-host enqueue totals grow by this round's new entries (requeues
-      // included — they re-enter at fresh absolute ranks)
-      val newHostEnq = plusHostCounts(hostEnq, "enq", newEntries)
-
-      // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
-      // part_id records which executor partition fetched/extracted the row
-      // (per-partition lineage; observability only — never ordering).
-      val fetchLog = results.select(
-        lit(round).as("round"), col("url"), col("host"), col("depth"),
-        col("seq"), col("status"), spark_partition_id().as("part_id"),
-        when(col("status") === "failed", lit("http_404"))
-          .when(col("status") === "timeout", lit("fetch_timeout"))
-          .when(col("status") === "skipped_robots", lit("robots_disallowed"))
-          .when(col("status") === "quarantined", lit("quarantined_host"))
-          .otherwise(lit(null).cast("string")).as("error"),
-        when(col("status") === "ok",
-          size(filter(col("spans"), s => s("kind") === "link")))
-          .otherwise(lit(0)).as("links_found"))
-
-      val docStore = results.where(col("status") === "ok").select(
-        lit(round).as("round"), col("url"),
-        coalesce(element_at(
-          transform(filter(col("spans"), s => s("kind") === "title"), s => s("text")), 1),
-          lit("")).as("title"),
-        concat_ws(" ", transform(
-          filter(col("spans"), s => s("text") =!= ""), s => s("text"))).as("text"))
-
-      // ---- raw-page store (S6, gcloud_crawler.py:555-590): every
-      // successfully fetched page keeps its raw body. Written UNBUCKETED,
-      // straight from the checkpointed results — raw bodies are the round's
-      // biggest payload and a bucketing repartition would shuffle all of
-      // them every round; the point lookup (J6) still prunes via parquet
-      // min/max footer stats on the url column.
-      val pages = results.where(col("status").isin("ok", "ok_non_html")).select(
-        lit(round).as("round"), col("url"), col("host"),
-        col("raw"), col("content_type"))
-
-      // ---- incremental inverted index (T8/S9, gcloud_indexer.py:43-62,
-      // 356-366): postings for THIS round's docs only — idempotent on
-      // (term, url) globally because seen-dedup admits each url once ever.
-      val postingsRows = SearchIndex.postings(
-        docStore.select("url", "title", "text")).withColumn("round", lit(round))
-
-      // ---- per-worker stats (A4/T7, gcloud_master.py:702-725): processed
-      // counts per executor partition, with the round as the heartbeat
-      // clock (wall-clock-free liveness: a worker partition that appears in
-      // round r was alive in round r).
-      val workerStats = fetchLog
-        .groupBy(col("round"), col("part_id"))
-        .agg(count(lit(1)).as("processed"),
-          count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
-          sum(col("links_found")).as("links_found"))
-
-      // ---- round counters (CrawlState sizes, gcloud_master.py:686-688),
-      // computed pre-commit so they ride in the SAME atomic snapshot and
-      // /status projections (§3.3) read tables, never driver state.
-      // They are OBSERVED on the results checkpoint (per-status histogram
-      // plus exhausted timeouts): no aggregation job of their own, since
-      // per-round fixed job cost bounds the crawl round at this scale.
-      val n = observedCounts(resultsObs, round, "results by status")
-      val nDispatched = n("dispatched")
-      val timeoutExhausted = n("timeout_exhausted")
-      val nFailed = n("failed") + n("skipped_robots") + n("quarantined") + timeoutExhausted
-      val nCompleted = n("ok") + n("ok_non_html")
-      val nRequeued = n("timeout") - timeoutExhausted
-      // no count job: dispatch consumes a per-host prefix of the live set,
-      // so the new live size is pure arithmetic
-      frontierSize = frontierSize - nDispatched + addsCount
-      seenSize = seenSize + admittedCount
-      if (admittedCount > 0) hostCountsDirty = true
-      val rs = RoundStats(round, nDispatched, nCompleted, nFailed,
-        nRequeued, addsCount, frontierSize, seenSize)
+    while (!stopRequested() && state.round < maxRounds &&
+           (state.frontierSize > 0 || seedFeed(state.round).nonEmpty)) {
+      val (rs, next) = round(ctx, state, seedFeed(state.round))
       stats += rs
-      val nOkHtml = n("ok")
-
-      // ---- commit round snapshot (T6): atomic manifest = round boundary.
-      // Per-round write cost tracks what CHANGED, not accumulated table
-      // sizes: `seen`/`failed` APPEND this round's delta only, the FRONTIER
-      // is an LSM hybrid — this round's new entries append as a delta tier
-      // (physically host-hash bucketed, the rule's `bucket(N, host_hash)`
-      // partitioned priority frontier), the base is rewritten (compacted to
-      // live rows) only when dead rows outgrow live rows or the tier chain
-      // gets long — and unchanged replaced tables (host_counts with no
-      // admissions, quarantined with no new exhaustions) are CARRIED: the
-      // manifest points at the round that last wrote them, no data moves.
-      // Per-round frontier bytes written are therefore ∝ (admitted +
-      // requeued), never ∝ frontier size — the write-amplification bound
-      // that makes a 10^10-row frontier commit-able every round.
-      // host_sched/host_enq row counts observed during the commit's own
-      // writes (same zero-extra-pass pattern as the postings index stats)
-      // — they feed the next round's broadcast gates.
-      val schedObs = new org.apache.spark.sql.Observation()
-      val enqObs = new org.apache.spark.sql.Observation()
-      val replacedTables = scala.collection.mutable.Map[String, DataFrame](
-        "host_sched" -> newHostSched.observe(schedObs, count(lit(1)).as("n")))
-      val carriedTables = scala.collection.mutable.Map.empty[String, Int]
-      val appendFrontier = injectedEntries match {
-        case Some(ie) => ie.unionByName(newEntries)
-        case None => newEntries
-      }
-      frontierDeadRows += nDispatched
-      val frontierCompact = !failedBase ||
-        frontierDeadRows > frontierSize || frontierTiers >= 64
-      if (frontierCompact) {
-        // base rewrite: live rows only (dead prefixes drop out), absolute
-        // ranks preserved — O(live), amortized against the dead rows shed
-        replacedTables += "frontier" ->
-          liveRows(frontier.unionByName(newEntries), newHostSched)
-        frontierDeadRows = 0
-        frontierTiers = 0
-      }
-      val enqDirty = addsCount > 0 || nInjected > 0
-      if (enqDirty || !failedBase)
-        replacedTables += "host_enq" -> newHostEnq.observe(enqObs, count(lit(1)).as("n"))
-      else carriedTables += "host_enq" -> (round - 1)
-      if (hostCountsDirty || !failedBase) replacedTables += "host_counts" -> newHostCounts
-      else carriedTables += "host_counts" -> (round - 1)
-      if (timeoutExhausted > 0 || !failedBase) replacedTables += "quarantined" -> newQuar
-      else carriedTables += "quarantined" -> (round - 1)
-
-      val appendedTables = scala.collection.mutable.Map[String, DataFrame](
-        "counters" -> Seq(rs).toDS().toDF().coalesce(1))
-      if (!frontierCompact && addsCount + nInjected > 0) {
-        appendedTables += "frontier" -> appendFrontier
-        frontierTiers += 1
-      }
-      if (!failedBase) replacedTables += "failed" -> failedNow
-      else if (nFailed > 0) appendedTables += "failed" -> failedNow
-      if (admittedCount > 0 || pendingSeenRows > 0)
-        appendedTables += "seen" -> pendingSeen.unionByName(admitted.select("url"))
-      if (nDispatched > 0) {
-        appendedTables += "fetch_log" -> fetchLog
-        appendedTables += "worker_stats" -> workerStats
-      }
-      if (nCompleted > 0) appendedTables += "pages" -> pages
-      // index-size stats (A4, gcloud_indexer.py:566-573): approx distinct
-      // terms/docs of this round's postings DELTA, observed during the
-      // postings write itself (zero extra pass) and recorded in the same
-      // atomic manifest; Crawler.indexStats gives the exact cumulative
-      // numbers on demand.
-      val idxObs = if (nOkHtml > 0) Some(new org.apache.spark.sql.Observation()) else None
-      if (nOkHtml > 0) {
-        appendedTables += "doc_store" -> docStore
-        appendedTables += "postings" -> postingsRows.observe(idxObs.get,
-          approx_count_distinct(col("term")).as("terms"),
-          approx_count_distinct(col("url")).as("docs"),
-          count(lit(1)).as("postings"))
-      }
-      snap.commit(spark, round,
-        replaced = replacedTables.toMap,
-        appended = appendedTables.toMap,
-        meta = Map("nextSeq" -> nextSeq.toString,
-          "frontierSize" -> frontierSize.toString,
-          "seenSize" -> seenSize.toString,
-          // marks the frontier's rank semantics (absolute enqueue ranks +
-          // hybrid commits); see roundMeta
-          "frontierAbsRank" -> "1"),
-        blobs = Map("seen_sketch" -> graft.functions.SeenSketch.serialize(sketch)),
-        bucketed = Map(
-          "frontier" -> pmod(xxhash64(col("host")), lit(graft.plans.SnapshotTable.Buckets))),
-        carried = carriedTables.toMap,
-        // index stats from the observed postings write (see awaitObs): any
-        // failure degrades to stats-less meta — metrics must never abort a
-        // commit whose table writes succeeded
-        metaLate = () => idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
-          Map("idx_new_terms_approx" -> m("terms").toString,
-            "idx_new_docs_approx" -> m("docs").toString,
-            "idx_new_postings" -> m("postings").toString))
-          .getOrElse(Map.empty))
-      pendingSeen = emptySeen
-      pendingSeenRows = 0L
-      // the observed host_sched/host_enq writes completed inside commit, so
-      // the bounded waits resolve within moments; any miss falls back to a
-      // safe OVER-bound (hosts can only have grown by this round's rows),
-      // so the broadcast gates never under-estimate their build sides
-      hostSchedSize = awaitObs(schedObs, 10)
-        .flatMap(_.get("n").map(_.asInstanceOf[Long]))
-        .getOrElse(hostSchedSize + nDispatched)
-      if (enqDirty || !failedBase)
-        hostEnqSize = awaitObs(enqObs, 10)
-          .flatMap(_.get("n").map(_.asInstanceOf[Long]))
-          .getOrElse(hostEnqSize + addsCount)
-      failedBase = true
-
-      // reload from the committed snapshot: truncates lineage and makes the
-      // next round read exactly what a resume would read. `seen` is NOT
-      // reloaded: its in-memory LSM form (folded base + folded deltas,
-      // all checkpointed ⇒ lineage already truncated) is row-for-row the
-      // parquet hybrid's content, and reloading would re-pay the fold
-      // shuffle every round — the exact cost the LSM exists to avoid. The
-      // frontier reloads as its RAW hybrid view (base + delta tiers).
-      frontier = snap.loadHybrid(spark, "frontier", round)
-      hostCounts = snap.loadReplaced(spark, "host_counts", round)
-      hostSched = snap.loadReplaced(spark, "host_sched", round)
-      hostEnq = snap.loadReplaced(spark, "host_enq", round)
-      quarTbl = snap.loadReplaced(spark, "quarantined", round)
-      round += 1
+      state = next
     }
-    CrawlSummary(round, stats.toSeq)
+    CrawlSummary(state.round, stats.toSeq)
   }
 
   /** doc_id-uniqueness validation for untrusted corpora (see run()'s
@@ -1108,13 +1097,19 @@ object Crawler {
     docs.toDF().groupBy("doc_id").agg(count(lit(1)).as("n"))
       .where(col("n") > 1).count()
 
+  /** The snapshot store at `root` and its latest committed round; a root
+   * with no committed round is an error, not an empty crawl. */
+  private def committed(root: String): (SnapshotTable, Int) = {
+    val snap = new SnapshotTable(root)
+    (snap, snap.latestRound.getOrElse(
+      throw new IllegalStateException(s"no crawl state at $root")))
+  }
+
   /** Status projection (§3.3, cli.py:98-124 / GET /status): the per-round
    * counter rows from the committed snapshots — queue/completed/failed/
    * seen sizes per round, no driver state involved. */
   def status(spark: SparkSession, root: String): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     snap.loadAppended(spark, "counters", r).orderBy("round")
   }
 
@@ -1126,9 +1121,7 @@ object Crawler {
    * the per-round manifests additionally carry approx per-round deltas
    * ([[indexStatsHistory]]) observed for free during each postings write. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     snap.loadAppendedOr(spark, "postings", r, PostingsDdl).agg(
       countDistinct(col("term")).as("distinct_terms"),
       countDistinct(col("url")).as("indexed_docs"),
@@ -1141,9 +1134,7 @@ object Crawler {
    * carry no stats and are omitted. */
   def indexStatsHistory(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     (0 to r).flatMap { round =>
       val m = snap.meta(round) // committed rounds are contiguous
       for {
@@ -1161,9 +1152,7 @@ object Crawler {
    * stamped at commit, so this reads no table). */
   def statusSummary(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     val m = roundMeta(snap, r)
     // every commit flow stamps frontierSize and seenSize (crawl rounds and
     // resets alike), so is_running and both sizes come from ONE consistent
@@ -1183,8 +1172,7 @@ object Crawler {
     import spark.implicits._
     // same root validation as every sibling projection: a nonexistent or
     // uncommitted crawl is an error, not an empty success
-    new SnapshotTable(root).latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    committed(root)
     Seq.empty[(String, String, Long)].toDF("url", "host", "seq")
   }
 
@@ -1192,9 +1180,7 @@ object Crawler {
    * the n most recently admitted still-queued URLs — the frontier's top
    * seq values (seq is the global admission order). */
   def recentlyAdded(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     liveFrontier(spark, snap, r)
       .orderBy(desc("seq")).limit(n)
       .select("url", "host", "depth", "seq")
@@ -1213,9 +1199,7 @@ object Crawler {
    * exact url key against the pages store; the equality predicate reaches
    * the parquet scan (footer min/max pruning). */
   def getPage(spark: SparkSession, root: String, url: String): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     snap.loadAppendedOr(spark, "pages", r, PagesDdl)
       .where(col("url") === url)
       .select("round", "url", "content_type", "raw")
@@ -1224,9 +1208,7 @@ object Crawler {
   /** /check_url (templates/app.py:906-1015): exact match plus fuzzy
    * contains-matches on a scheme-/slash-normalized needle, tagged by kind. */
   def checkUrl(spark: SparkSession, root: String, url: String): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     val needle = url.replaceFirst("^https?://", "").stripSuffix("/")
     val pages = snap.loadAppendedOr(spark, "pages", r, PagesDdl)
       .select("round", "url", "content_type")
@@ -1243,9 +1225,7 @@ object Crawler {
    * rows only. */
   def searchStore(spark: SparkSession, root: String, query: String,
                   field: String = "content", k: Int = 10): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     val postings = snap.loadAppendedOr(spark, "postings", r, PostingsDdl)
       .select("term", "url", "weight", "title")
     val top = SearchIndex.search(postings, query, field, k)
@@ -1261,9 +1241,7 @@ object Crawler {
   /** Per-worker (executor partition) processed/completed counters with the
    * round as heartbeat clock (A4/T7, gcloud_master.py:702-725). */
   def workerStats(spark: SparkSession, root: String): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     snap.loadAppendedOr(spark, "worker_stats", r, WorkerStatsDdl)
       .groupBy("part_id")
       .agg(sum("processed").as("processed"), sum("completed").as("completed"),
@@ -1274,9 +1252,7 @@ object Crawler {
   /** Recent-activity tail (O3, templates/app.py:572-576): last n completed
    * fetches in dispatch order. */
   def recentActivity(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state"))
+    val (snap, r) = committed(root)
     snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
       .where(col("status").isin("ok", "ok_non_html"))
       .orderBy(desc("round"), desc("seq")).limit(n)
@@ -1304,11 +1280,10 @@ object Crawler {
   def resetFailures(spark: SparkSession, root: String, cfg: CrawlConfig,
                     forget: Boolean = false): Long = {
     import spark.implicits._
-    val snap = new SnapshotTable(root)
-    val r = snap.latestRound.getOrElse(
-      throw new IllegalStateException("no crawl state to reset"))
+    val (snap, r) = committed(root)
     val m0 = roundMeta(snap, r)
-    val nextSeq = m0("nextSeq").toLong
+    def stamp0(k: String): Long = m0(k).toLong
+    val nextSeq = stamp0("nextSeq")
     // live frontier (LSM): raw rows past the per-host dispatch prefix
     val live = liveFrontier(spark, snap, r)
     val hostEnq = snap.loadReplaced(spark, "host_enq", r)
@@ -1323,7 +1298,7 @@ object Crawler {
     val n = failedTbl.count()
     if (n == 0) return 0L
 
-    var sketch = loadSketch(snap, r, seen, cfg)
+    val sketch = loadSketch(snap, r, seen, cfg)
     val emptyFailed = Seq.empty[(String, String, Int, Int, Long, String)]
       .toDF("url", "host", "depth", "retry", "seq", "error")
 
@@ -1351,22 +1326,6 @@ object Crawler {
       } else {
         val shrunk = seen.join(failedTbl.select("url"), Seq("url"), "left_anti")
           .localCheckpoint(true)
-        // cuckoo: exact distributed deletes — executor-built shards of the
-        // failed URLs subtracted from the filter driver-side, O(failed)
-        // spread across the cluster (the delete mirror of the addAll
-        // maintenance path; no per-row driver loop). Bloom (not deletable)
-        // or an inconsistent delete (entry missing — the sketch was not in
-        // sync with `seen`) falls back to the 4x-amortized rebuild from
-        // the shrunken seen table.
-        val deleted = graft.functions.SeenSketch.deleteAll(
-          sketch, failedTbl.select("url"), "url")
-        if (!deleted) {
-          var cap = math.max(sketch.capacity, cfg.sketchCapacity)
-          do {
-            sketch = graft.functions.SeenSketch.build(shrunk, "url", sketch.kind, cap)
-            cap *= 4
-          } while (sketch.saturated)
-        }
         // inverse of admission: give the hosts their cap budget back.
         // host_enq is NOT decremented — it is a rank high-water mark, not
         // a budget; shrinking it would collide future absolute ranks.
@@ -1376,12 +1335,23 @@ object Crawler {
             greatest(col("cnt") - coalesce(col("dec"), lit(0L)), lit(0L)).as("cnt"))
         (None, shrunk, counts, hostEnq, n)
       }
+    // forget mode, cuckoo: exact distributed deletes — executor-built
+    // shards of the failed URLs subtracted from the filter driver-side,
+    // O(failed) spread across the cluster (the delete mirror of the addAll
+    // maintenance path; no per-row driver loop). Bloom (not deletable) or
+    // an inconsistent delete (entry missing — the sketch was not in sync
+    // with `seen`) falls back to the 4x-amortized rebuild from the
+    // shrunken seen table.
+    val newSketch =
+      if (!forget || SeenSketch.deleteAll(sketch, failedTbl.select("url"), "url")) sketch
+      else rebuildSketch(newSeen, sketch.kind, math.max(sketch.capacity, cfg.sketchCapacity))
 
     // frontier commit shape (LSM): requeue mode APPENDS the reopened
     // entries as a delta tier and forget mode writes nothing at all.
     // host_enq rides along: carried when untouched, replaced otherwise.
     val frontierAppend = entriesOpt.filter(_ => reopened > 0)
     val enqChanged = frontierAppend.isDefined
+    val (enqWrite, enqObs) = countObs(newHostEnq)
     // requeue mode leaves `seen` untouched (no commit entry — prior appends
     // stay visible); forget mode REPLACES it with the shrunken set, which
     // doubles as a compaction point for the hybrid append chain. Both modes
@@ -1393,24 +1363,27 @@ object Crawler {
         "failed" -> emptyFailed, // replace = the hybrid chain's compaction point
         "quarantined" -> Seq.empty[String].toDF("host")) ++
         (if (forget) Map("seen" -> newSeen) else Map.empty) ++
-        (if (enqChanged) Map("host_enq" -> newHostEnq) else Map.empty),
+        (if (enqChanged) Map("host_enq" -> enqWrite) else Map.empty),
       appended = frontierAppend.map("frontier" -> _).toMap,
-      // stamp frontierSize/seenSize like the crawl-round commits do, so
-      // statusSummary reads one consistent source: the prior commit's
-      // stamp plus the reopened set in requeue mode
-      meta = Map(
-        "nextSeq" -> (nextSeq + (if (forget) 0L else reopened)).toString,
-        "frontierSize" ->
-          (m0("frontierSize").toLong + (if (forget) 0L else reopened)).toString,
+      // stamped like the crawl-round commits, so statusSummary and a
+      // later run() read one consistent source: the prior commit's stamps
+      // plus the reopened set in requeue mode (one more frontier tier)
+      meta = stamps(
+        nextSeq = nextSeq + (if (forget) 0L else reopened),
+        frontierSize = stamp0("frontierSize") + (if (forget) 0L else reopened),
         // seen shrinks by exactly the reopened set in forget mode (every
         // failed URL was admitted, hence in seen) and is untouched otherwise
-        "seenSize" -> (m0("seenSize").toLong - (if (forget) n else 0L)).toString,
-        "frontierAbsRank" -> "1"),
-      blobs = Map("seen_sketch" -> graft.functions.SeenSketch.serialize(sketch)),
-      bucketed = Map("frontier" ->
-        pmod(xxhash64(col("host")), lit(graft.plans.SnapshotTable.Buckets))),
+        seenSize = stamp0("seenSize") - (if (forget) n else 0L),
+        frontierDeadRows = stamp0("frontierDeadRows"),
+        frontierTiers = stamp0("frontierTiers") + (if (enqChanged) 1 else 0)) +
+        ("hostSchedRows" -> m0("hostSchedRows")),
+      blobs = Map("seen_sketch" -> SeenSketch.serialize(newSketch)),
+      bucketed = Map("frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
       carried = Map("host_sched" -> r) ++ // dispatch history unchanged by a reset
-        (if (enqChanged) Map.empty[String, Int] else Map("host_enq" -> r)))
+        (if (enqChanged) Map.empty[String, Int] else Map("host_enq" -> r)),
+      metaLate = () => Map("hostEnqRows" -> (
+        if (enqChanged) rowsOr(enqObs, stamp0("hostEnqRows") + reopened)
+        else stamp0("hostEnqRows")).toString))
     reopened
   }
 }

@@ -129,6 +129,28 @@ class CrawlEngineSpec extends AnyFunSuite {
       engineSeen(rootA, full.rounds - 1))
   }
 
+  test("a crawl resumed at every round boundary commits the uninterrupted crawl's layout") {
+    // one-second rounds stretch the crawl over enough rounds for the
+    // frontier LSM to rewrite its base mid-crawl, so a resume that lost
+    // the compaction schedule commits a different table layout
+    val cfg1 = cfg.copy(roundSeconds = 1.0)
+    val maxRounds = 14
+    val rootA = Files.createTempDirectory("graft-crawl-layout-a").toString
+    val rootB = Files.createTempDirectory("graft-crawl-layout-b").toString
+    val full = runEngine(rootA, maxRounds, cfg1)
+    (1 to full.rounds).foreach(r => runEngine(rootB, r, cfg1))
+    val (a, b) = (new SnapshotTable(rootA), new SnapshotTable(rootB))
+    assert(b.latestRound == a.latestRound)
+    assert((1 until full.rounds).exists(r => a.kinds(r).get("frontier").contains("replace")),
+      "fixture must rewrite the frontier base after round 0")
+    val stamps = Seq("nextSeq", "frontierSize", "seenSize", "frontierDeadRows", "frontierTiers")
+    (0 until full.rounds).foreach { r =>
+      assert(b.kinds(r) == a.kinds(r), s"round $r table kinds")
+      assert(stamps.map(b.meta(r)) == stamps.map(a.meta(r)), s"round $r stamps")
+    }
+    assert(engineSchedule(rootB, full.rounds - 1) == engineSchedule(rootA, full.rounds - 1))
+  }
+
   test("a snapshot without the frontier format stamp or a size stamp fails loudly, naming the round") {
     import scala.jdk.CollectionConverters._
     val good = Files.createTempDirectory("graft-crawl-fmt").resolve("root")

@@ -16,8 +16,12 @@ class JobBudgetSpec extends AnyFunSuite {
 
   /** Max jobs of any one round, and jobs of all eight rounds together
    * (the counts repeat exactly from run to run). */
-  val MaxJobsPerRound = 50
-  val TotalJobs = 298
+  val MaxJobsPerRound = 49
+  val TotalJobs = 295
+
+  /** Jobs a resume launches before its first round: the policies count
+   * (2) and the fold of the reloaded seen set (1). */
+  val ResumeJobs = 3
 
   test("jobs per committed crawl round stay within the pinned budget") {
     import spark.implicits._
@@ -42,5 +46,26 @@ class JobBudgetSpec extends AnyFunSuite {
     info(report)
     assert(perRound.max <= MaxJobsPerRound, report)
     assert(perRound.sum <= TotalJobs, report)
+  }
+
+  test("a resume loads its state from the snapshot without counting tables") {
+    import spark.implicits._
+    val nDocs = 400L
+    val cfg = CrawlConfig(
+      maxDepth = 3, maxPagesPerDomain = 25, respectRobots = true,
+      defaultCrawlDelayS = 1.0, maxRetries = 3, roundSeconds = 5.0)
+    val root = Files.createTempDirectory("graft-job-budget-resume").toString
+    def crawl(): Crawler.CrawlSummary =
+      Crawler.run(spark, CorpusGen.docs(spark, nDocs), CorpusGen.seeds(nDocs, 3),
+        CorpusGen.policies(nDocs, cfg.defaultCrawlDelayS, cfg.maxPagesPerDomain).toDS(),
+        cfg, root, maxRounds = 2)
+    crawl()
+    // every value a round reads is a manifest stamp or a lazily read
+    // table, so a run() with no round left to run launches only the
+    // policies count and the seen fold
+    val (summary, jobs) = JobCounter.count(spark.sparkContext)(crawl())
+    assert(summary.rounds == 2 && summary.stats.isEmpty)
+    info(s"jobs before the first round of a resume: $jobs")
+    assert(jobs <= ResumeJobs, s"a resume launched $jobs jobs before its first round")
   }
 }

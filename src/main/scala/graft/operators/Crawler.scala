@@ -352,17 +352,32 @@ object Crawler {
   private def rowsOr(o: Observation, fallback: Long): Long =
     awaitObs(o, 10).flatMap(_.get("n").map(_.asInstanceOf[Long])).getOrElse(fallback)
 
-  /** Per-host table `table(host, c)` with each host's row count in `rows`
-   * added to `c`: a full outer join, so hosts new to either side appear. */
-  private def plusHostCounts(table: DataFrame, c: String, rows: DataFrame): DataFrame =
-    table.join(rows.groupBy("host").agg(count(lit(1)).as("add_")), Seq("host"), "full_outer")
-      .select(col("host"), (coalesce(col(c), lit(0L)) + coalesce(col("add_"), lit(0L))).as(c))
+  /** One per-host delta row for each row of `rows`: `v` in column `c` of
+   * the `hosts` table, nothing in the others (see [[plusHosts]]). */
+  private def hostDelta(rows: DataFrame, c: String, v: Column = lit(1L)): DataFrame =
+    rows.select(col("host"), v.as(c))
+
+  /** The per-host state `hosts(host, cnt, dispatched, enq, quarantined)` —
+   * admissions counted against the cap, rows dispatched (the politeness
+   * history and the frontier's liveness prefix), rows ever enqueued (the
+   * absolute-rank offset) and the quarantine flag — with [[hostDelta]]
+   * rows folded in: the counts sum, the flag ORs. One union and one
+   * group-by, so hosts new to the table appear. */
+  private def plusHosts(hosts: DataFrame, deltas: DataFrame*): DataFrame =
+    deltas.map { d =>
+      def pick(c: String, zero: Column) = if (d.columns.contains(c)) col(c) else zero.as(c)
+      d.select(col("host"), pick("cnt", lit(0L)), pick("dispatched", lit(0L)),
+        pick("enq", lit(0L)), pick("quarantined", lit(false)))
+    }.foldLeft(hosts)(_ unionByName _)
+      .groupBy("host")
+      .agg(sum("cnt").as("cnt"), sum("dispatched").as("dispatched"), sum("enq").as("enq"),
+        max("quarantined").as("quarantined"))
 
   /** The meta stamps every crawl-round and reset commit writes besides
-   * `frontierAbsRank=1` (see [[roundMeta]]). The last two are the row
-   * counts of host_sched/host_enq, stamped after the table writes. */
+   * `frontierAbsRank=1` (see [[roundMeta]]). The last is the row count of
+   * `hosts`, stamped after the table writes. */
   private val StampKeys = Seq("nextSeq", "frontierSize", "seenSize",
-    "frontierDeadRows", "frontierTiers", "hostSchedRows", "hostEnqRows")
+    "frontierDeadRows", "frontierTiers", "hostRows")
 
   /** The stamps a commit knows before its writes. */
   private def stamps(nextSeq: Long, frontierSize: Long, seenSize: Long,
@@ -401,9 +416,9 @@ object Crawler {
    * dispatch always consumes a per-host PREFIX of the rank sequence, so
    * `host_rank > dispatched(host)` is exact, with no tombstones and no
    * per-row state. */
-  private def liveRows(frontierRaw: DataFrame, hostSched: DataFrame): DataFrame =
+  private def liveRows(frontierRaw: DataFrame, hosts: DataFrame): DataFrame =
     frontierRaw
-      .join(hostSched, Seq("host"), "left_outer")
+      .join(hosts.select("host", "dispatched"), Seq("host"), "left_outer")
       .where(col("host_rank") > coalesce(col("dispatched"), lit(0L)))
       .drop("dispatched")
 
@@ -432,7 +447,7 @@ object Crawler {
    * caller can bound its row count under `broadcastRowLimit` the budget
    * is broadcast and the dispatch touches the frontier with NO exchange
    * at all. run() maintains that bound for free (policy rows counted once
-   * per run + the host_sched row count observed during each commit's own
+   * per run + the `hosts` row count observed during each commit's own
    * write and stamped in its manifest). Past the limit — 10^8+ distinct
    * hosts — it degrades to a shuffle-hash join (hinted: a sort-merge join
    * would re-sort the frontier); AQE may still upgrade it to broadcast at
@@ -486,13 +501,12 @@ object Crawler {
    *    dispatched in earlier rounds — with ABSOLUTE per-host enqueue
    *    ranks; a row is live iff host_rank > dispatched(host), so dispatch
    *    never rewrites the deferred remainder (see [[dispatchSelectAbs]]).
-   *    `hostEnq` (host → rows ever enqueued) supplies the rank offsets new
-   *    entries queue behind.
-   *  - `hostSchedRows`/`hostEnqRows` bound the row counts of `hostSched`/
-   *    `hostEnq` for the broadcast gates. `frontierDeadRows` and
-   *    `frontierTiers` count the dead rows and delta tiers the stored
-   *    frontier accumulated since its last base rewrite: the compaction
-   *    triggers (see [[commitRound]]).
+   *  - `hosts` is the per-host state (see [[plusHosts]]); its `enq`
+   *    column supplies the rank offsets new entries queue behind.
+   *    `hostRows` bounds its row count for the broadcast gates.
+   *  - `frontierDeadRows` and `frontierTiers` count the dead rows and
+   *    delta tiers the stored frontier accumulated since its last base
+   *    rewrite: the compaction triggers (see [[commitRound]]).
    *  - `seen` and `sketch` are the only state kept in memory between
    *    rounds (see [[round]]).
    *  - `pending` holds the entries injected since the last commit
@@ -501,19 +515,20 @@ object Crawler {
    */
   private case class RoundState(
       round: Int, nextSeq: Long, frontierSize: Long, seenSize: Long,
-      frontier: DataFrame, hostCounts: DataFrame, hostSched: DataFrame,
-      hostEnq: DataFrame, quarantined: DataFrame,
-      hostSchedRows: Long, hostEnqRows: Long,
+      frontier: DataFrame, hosts: DataFrame, hostRows: Long,
       frontierDeadRows: Long, frontierTiers: Int,
       seen: SeenLsm, sketch: SeenSketch,
       pending: DataFrame, pendingRows: Long)
 
   /** What every round of one [[run]] reads unchanged. `policies` is the
    * tiny per-host policy table (host, allow, crawl_delay_s, max_pages),
-   * `policyRows` its row count, taken once per run. */
+   * `policyRows` its row count, taken at most once per run: by the first
+   * round's dispatch gate, so a run with no round left to run skips it. */
   private case class RunCtx(spark: SparkSession, snap: SnapshotTable,
-                            docs: DataFrame, policies: DataFrame, policyRows: Long,
-                            cfg: CrawlConfig, sketchThreshold: Long)
+                            docs: DataFrame, policies: DataFrame,
+                            cfg: CrawlConfig, sketchThreshold: Long) {
+    lazy val policyRows: Long = policies.count()
+  }
 
   /** The state of a fresh crawl before its seeds: nothing enqueued, seen
    * or dispatched. */
@@ -521,15 +536,15 @@ object Crawler {
     import spark.implicits._
     val frontier = Seq.empty[(String, String, Int, Int, Long, Long)]
       .toDF("url", "host", "depth", "retry", "seq", "host_rank")
-    def perHost(c: String) = Seq.empty[(String, Long)].toDF("host", c)
-    RoundState(0, 0L, 0L, 0L, frontier, perHost("cnt"), perHost("dispatched"),
-      perHost("enq"), Seq.empty[String].toDF("host"), 0L, 0L, 0L, 0,
+    val hosts = Seq.empty[(String, Long, Long, Long, Boolean)]
+      .toDF("host", "cnt", "dispatched", "enq", "quarantined")
+    RoundState(0, 0L, 0L, 0L, frontier, hosts, 0L, 0L, 0,
       SeenLsm(Seq.empty[String].toDF("url")),
       SeenSketch.empty(cfg.seenSketch, cfg.sketchCapacity), frontier, 0L)
   }
 
-  /** The state committed at round `r`, for round r + 1: the meta stamps
-   * and the frontier and per-host tables, read back from the snapshot.
+  /** The state committed at round `r`, for round r + 1: the meta stamps,
+   * the frontier and the per-host table, read back from the snapshot.
    * Reading them back truncates lineage, and it is exactly what a resume
    * reads. `seen` and `sketch` are passed in (see [[round]]). */
   private def load(ctx: RunCtx, r: Int, seen: SeenLsm, sketch: SeenSketch): RoundState = {
@@ -538,11 +553,9 @@ object Crawler {
     def stamp(k: String): Long = m(k).toLong
     val frontier = snap.loadHybrid(spark, "frontier", r)
     RoundState(r + 1, stamp("nextSeq"), stamp("frontierSize"), stamp("seenSize"),
-      frontier, snap.loadReplaced(spark, "host_counts", r),
-      snap.loadReplaced(spark, "host_sched", r), snap.loadReplaced(spark, "host_enq", r),
-      snap.loadReplaced(spark, "quarantined", r),
-      stamp("hostSchedRows"), stamp("hostEnqRows"), stamp("frontierDeadRows"),
-      stamp("frontierTiers").toInt, seen, sketch, frontier.limit(0), 0L)
+      frontier, snap.loadReplaced(spark, "hosts", r), stamp("hostRows"),
+      stamp("frontierDeadRows"), stamp("frontierTiers").toInt, seen, sketch,
+      frontier.limit(0), 0L)
   }
 
   /** Sketch-prefiltered [[admit]] against the state's seen LSM and host
@@ -551,16 +564,17 @@ object Crawler {
     val prefilter =
       if (st.seenSize >= ctx.sketchThreshold && !st.sketch.saturated) Some(st.sketch)
       else None
-    admit(ctx.spark, candidates, st.seen.base, st.hostCounts, ctx.cfg, prefilter,
-      st.seen.deltas)
+    admit(ctx.spark, candidates, st.seen.base, st.hosts.select("host", "cnt"), ctx.cfg,
+      prefilter, st.seen.deltas)
       .select("url", "host", "depth", "retry", "ord1", "ord2", "host_rank")
   }
 
   /** Rank-offset side for new entries: gated broadcast of the per-host
    * enqueue totals (same size class and gate as the dispatch budget). */
-  private def enqSide(ctx: RunCtx, st: RoundState): DataFrame =
-    if (st.hostEnqRows <= ctx.cfg.broadcastRowLimit) broadcast(st.hostEnq)
-    else st.hostEnq.hint("shuffle_hash")
+  private def enqSide(ctx: RunCtx, st: RoundState): DataFrame = {
+    val enq = st.hosts.select("host", "enq")
+    if (st.hostRows <= ctx.cfg.broadcastRowLimit) broadcast(enq) else enq.hint("shuffle_hash")
+  }
 
   /** `sketch` if healthy, else rebuilt from `seen` (`seenSize` rows) at
    * growing capacity: a saturated sketch never serves as the admission
@@ -606,9 +620,11 @@ object Crawler {
     SeenSketch.addAll(st.sketch, entries.select("url"), "url", n)
     st.copy(nextSeq = st.nextSeq + n, frontierSize = st.frontierSize + n,
       seenSize = st.seenSize + n, frontier = st.frontier.unionByName(entries),
-      hostCounts = plusHostCounts(st.hostCounts, "cnt", entries),
-      hostEnq = plusHostCounts(st.hostEnq, "enq", entries),
-      hostEnqRows = st.hostEnqRows + n, // safe over-bound until the commit observes it
+      // checkpointed: every stage of the round reads it, and one fold beats
+      // one per reader
+      hosts = plusHosts(st.hosts, hostDelta(entries, "cnt"), hostDelta(entries, "enq"))
+        .localCheckpoint(true),
+      hostRows = st.hostRows + n, // safe over-bound until the commit observes it
       seen = seen, pending = st.pending.unionByName(entries),
       pendingRows = st.pendingRows + n)
   }
@@ -628,7 +644,7 @@ object Crawler {
     // broadcast hint (build-left is illegal for left_outer) — AQE
     // broadcasts the legal side on its own.
     val budget = ctx.policies
-      .join(st.hostSched, Seq("host"), "full_outer")
+      .join(st.hosts.select("host", "dispatched"), Seq("host"), "full_outer")
       .withColumn("total_allowed",
         floor(lit((st.round + 1) * cfg.roundSeconds) /
           coalesce(when(col("crawl_delay_s") > 0, col("crawl_delay_s")),
@@ -645,11 +661,11 @@ object Crawler {
     // politeness are a single rank predicate; the deferred remainder is
     // never touched; the budget side broadcasts while bounded).
     val dispatchedRaw = dispatchSelectAbs(st.frontier, budget, defaultTotal,
-      Some(ctx.policyRows + st.hostSchedRows), cfg.broadcastRowLimit)
+      Some(ctx.policyRows + st.hostRows), cfg.broadcastRowLimit)
     // problematic-domain quarantine (F9, gcloud_crawler.py:242-253):
     // fetches to quarantined hosts short-circuit as failures. The flag is
-    // stamped at dispatch (quarantine table is per-host and tiny —
-    // broadcast), takes effect the round AFTER a host is quarantined
+    // stamped at dispatch (the quarantined hosts are few — broadcast),
+    // takes effect the round AFTER a host is quarantined
     // (BSP boundary normalization of the reference's immediate set-add),
     // and still consumes the dispatch slot.
     // dispatchedRaw is already checkpointed (O(dispatched)) inside
@@ -657,7 +673,8 @@ object Crawler {
     // join — consumers below re-run only that narrow tail, so no further
     // materialization is needed
     dispatchedRaw
-      .join(broadcast(st.quarantined.withColumn("quar_", lit(true))), Seq("host"), "left_outer")
+      .join(broadcast(st.hosts.where(col("quarantined")).select(col("host"),
+        lit(true).as("quar_"))), Seq("host"), "left_outer")
       .withColumn("quar", coalesce(col("quar_"), lit(false))).drop("quar_")
   }
 
@@ -864,15 +881,16 @@ object Crawler {
           .when(col("status") === "skipped_robots", lit("robots_disallowed"))
           .when(col("status") === "quarantined", lit("quarantined_host"))
           .otherwise(lit("retries_exhausted")).as("error"))
+    // per-host state: enqueue totals grow by this round's new entries
+    // (requeues included — they re-enter at fresh absolute ranks), and
     // hosts whose URLs exhausted their retries this round join the
     // quarantine (the reference's connection-failure path,
-    // gcloud_crawler.py:432,452) — effective from the NEXT round
-    val newQuar = st.quarantined.unionByName(timeoutFail.select("host")).distinct()
-    val newHostCounts = plusHostCounts(st.hostCounts, "cnt", admitted)
-    val newHostSched = plusHostCounts(st.hostSched, "dispatched", dispatched)
-    // per-host enqueue totals grow by this round's new entries (requeues
-    // included — they re-enter at fresh absolute ranks)
-    val newHostEnq = plusHostCounts(st.hostEnq, "enq", newEntries)
+    // gcloud_crawler.py:432,452) — effective from the NEXT round. Only a
+    // round with exhausted timeouts rescans the results for them.
+    val newHosts = plusHosts(st.hosts, Seq(hostDelta(admitted, "cnt"),
+      hostDelta(dispatched, "dispatched"), hostDelta(newEntries, "enq")) ++
+      Option.when(n("timeout_exhausted") > 0)(
+        hostDelta(timeoutFail, "quarantined", lit(true))): _*)
 
     // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
     // part_id records which executor partition fetched/extracted the row
@@ -948,35 +966,31 @@ object Crawler {
     // (physically host-hash bucketed, the rule's `bucket(N, host_hash)`
     // partitioned priority frontier), the base is rewritten (compacted to
     // live rows) only when dead rows outgrow live rows or the tier chain
-    // gets long — and unchanged replaced tables (host_counts with no
-    // admissions, quarantined with no new exhaustions) are CARRIED: the
-    // manifest points at the round that last wrote them, no data moves.
+    // gets long — and an unchanged `hosts` (nothing dispatched or
+    // injected) is CARRIED: the manifest points at the round that last
+    // wrote it, no data moves.
     // Per-round frontier bytes written are therefore ∝ (admitted +
     // requeued), never ∝ frontier size — the write-amplification bound
     // that makes a 10^10-row frontier commit-able every round.
-    // Round 0 writes every replaced table and the failed base.
-    // host_sched/host_enq row counts are observed during the commit's own
-    // writes (same zero-extra-pass pattern as the postings index stats)
-    // and stamped for the next round's broadcast gates.
-    val (schedWrite, schedObs) = countObs(newHostSched)
-    val (enqWrite, enqObs) = countObs(newHostEnq)
-    val replaced = scala.collection.mutable.Map[String, DataFrame]("host_sched" -> schedWrite)
-    val carried = scala.collection.mutable.Map.empty[String, Int]
+    // Round 0 writes `hosts` and the failed base. The `hosts` row count is
+    // observed during the commit's own write (same zero-extra-pass
+    // pattern as the postings index stats) and stamped for the next
+    // round's broadcast gates. Every per-host delta comes from dispatched
+    // or injected rows, so without either `hosts` is unchanged.
+    val (hostsWrite, hostsObs) = countObs(newHosts)
+    val hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0
+    val replaced = scala.collection.mutable.Map.empty[String, DataFrame]
+    if (hostsChanged) replaced += "hosts" -> hostsWrite
     val appended = scala.collection.mutable.Map[String, DataFrame](
       "counters" -> Seq(rs).toDS().toDF().coalesce(1))
-    def replaceOrCarry(name: String, df: DataFrame, changed: Boolean): Unit =
-      if (changed || round == 0) replaced += name -> df else carried += name -> (round - 1)
     val deadRows = st.frontierDeadRows + nDispatched
     val compact = round == 0 || deadRows > frontierSize || st.frontierTiers >= 64
     val added = nAdds + st.pendingRows > 0
     if (compact)
       // base rewrite: live rows only (dead prefixes drop out), absolute
       // ranks preserved — O(live), amortized against the dead rows shed
-      replaced += "frontier" -> liveRows(st.frontier.unionByName(newEntries), newHostSched)
+      replaced += "frontier" -> liveRows(st.frontier.unionByName(newEntries), newHosts)
     else if (added) appended += "frontier" -> st.pending.unionByName(newEntries)
-    replaceOrCarry("host_enq", enqWrite, added)
-    replaceOrCarry("host_counts", newHostCounts, nAdmitted > 0 || st.pendingRows > 0)
-    replaceOrCarry("quarantined", newQuar, timeoutExhausted > 0)
     if (round == 0) replaced += "failed" -> failedNow
     else if (nFailed > 0) appended += "failed" -> failedNow
     if (nAdmitted > 0 || st.pendingRows > 0)
@@ -1008,17 +1022,15 @@ object Crawler {
       blobs = Map("seen_sketch" -> SeenSketch.serialize(sketch)),
       bucketed = Map(
         "frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      carried = carried.toMap,
+      carried = if (hostsChanged) Map.empty else Map("hosts" -> (round - 1)),
       // index stats from the observed postings write (see awaitObs): any
       // failure degrades to stats-less meta — metrics must never abort a
       // commit whose table writes succeeded. A missed row count falls back
-      // to a safe OVER-bound (hosts can only have grown by this round's
-      // rows), so the broadcast gates never under-estimate their build
-      // sides; a carried host_enq keeps its bound.
-      metaLate = () => Map(
-        "hostSchedRows" -> rowsOr(schedObs, st.hostSchedRows + nDispatched).toString,
-        "hostEnqRows" -> (if (!replaced.contains("host_enq")) st.hostEnqRows
-                          else rowsOr(enqObs, st.hostEnqRows + nAdds)).toString) ++
+      // to a safe OVER-bound (a new host brings a new entry, and injected
+      // ones are already in st.hostRows), so the broadcast gates never
+      // under-estimate their build sides; a carried `hosts` keeps its bound.
+      metaLate = () => Map("hostRows" -> (
+        if (hostsChanged) rowsOr(hostsObs, st.hostRows + nAdds) else st.hostRows).toString) ++
         idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
           Map("idx_new_terms_approx" -> m("terms").toString,
             "idx_new_docs_approx" -> m("docs").toString,
@@ -1057,9 +1069,7 @@ object Crawler {
           seedFeed: Int => Seq[String] = _ => Nil,
           stopRequested: () => Boolean = () => false): CrawlSummary = {
     val snap = new SnapshotTable(root)
-    val policyDf = policies.toDF()
-    val ctx = RunCtx(spark, snap, docs.toDF(), policyDf, policyDf.count(), cfg,
-      sketchThreshold)
+    val ctx = RunCtx(spark, snap, docs.toDF(), policies.toDF(), cfg, sketchThreshold)
     // restore (gcloud_master.py:274-318) or seed (:533-540). `seen` is a
     // HYBRID table: O(admitted) appended per round (a 10^10 seen set must
     // never be rewritten per round), with replace commits only at
@@ -1099,7 +1109,7 @@ object Crawler {
 
   /** The snapshot store at `root` and its latest committed round; a root
    * with no committed round is an error, not an empty crawl. */
-  private def committed(root: String): (SnapshotTable, Int) = {
+  private[operators] def committed(root: String): (SnapshotTable, Int) = {
     val snap = new SnapshotTable(root)
     (snap, snap.latestRound.getOrElse(
       throw new IllegalStateException(s"no crawl state at $root")))
@@ -1181,19 +1191,18 @@ object Crawler {
    * seq values (seq is the global admission order). */
   def recentlyAdded(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
     val (snap, r) = committed(root)
-    liveFrontier(spark, snap, r)
+    roundMeta(snap, r)
+    liveFrontier(spark, snap, r, snap.loadReplaced(spark, "hosts", r))
       .orderBy(desc("seq")).limit(n)
       .select("url", "host", "depth", "seq")
   }
 
-  /** The LIVE frontier at a committed round: the raw hybrid view filtered
-   * by the dispatch-prefix liveness predicate. */
-  private def liveFrontier(spark: SparkSession, snap: SnapshotTable,
-                           r: Int): DataFrame = {
-    roundMeta(snap, r)
-    liveRows(snap.loadHybrid(spark, "frontier", r),
-      snap.loadReplaced(spark, "host_sched", r))
-  }
+  /** The LIVE frontier at committed round `r`, whose `hosts` table is
+   * given: the raw hybrid view filtered by the dispatch-prefix liveness
+   * predicate. */
+  private def liveFrontier(spark: SparkSession, snap: SnapshotTable, r: Int,
+                           hosts: DataFrame): DataFrame =
+    liveRows(snap.loadHybrid(spark, "frontier", r), hosts)
 
   /** Raw-page point lookup (J6, /get_html — templates/app.py:807-904):
    * exact url key against the pages store; the equality predicate reaches
@@ -1281,59 +1290,55 @@ object Crawler {
                     forget: Boolean = false): Long = {
     import spark.implicits._
     val (snap, r) = committed(root)
-    val m0 = roundMeta(snap, r)
-    def stamp0(k: String): Long = m0(k).toLong
-    val nextSeq = stamp0("nextSeq")
-    // live frontier (LSM): raw rows past the per-host dispatch prefix
-    val live = liveFrontier(spark, snap, r)
-    val hostEnq = snap.loadReplaced(spark, "host_enq", r)
+    val m = roundMeta(snap, r)
+    def stamp(k: String): Long = m(k).toLong
+    val hosts = snap.loadReplaced(spark, "hosts", r)
     val seen = snap.loadHybrid(spark, "seen", r)
-    val hostCounts = snap.loadReplaced(spark, "host_counts", r)
-    val failedTbl = snap.loadHybrid(spark, "failed", r)
+    val (failedObserved, failedObs) = countObs(snap.loadHybrid(spark, "failed", r)
       .groupBy("url")
       .agg(min(struct(col("seq"), col("host"), col("depth"))).as("m"))
       .select(col("url"), col("m.host").as("host"), col("m.depth").as("depth"),
-        col("m.seq").as("seq"))
-      .localCheckpoint(true)
-    val n = failedTbl.count()
+        col("m.seq").as("seq")))
+    val failedTbl = failedObserved.localCheckpoint(true)
+    val n = observedCount(failedObs, r + 1, "failed urls")
     if (n == 0) return 0L
 
     val sketch = loadSketch(snap, r, seen, cfg)
     val emptyFailed = Seq.empty[(String, String, Int, Int, Long, String)]
       .toDF("url", "host", "depth", "retry", "seq", "error")
+    // both modes CLEAR the quarantine (the reference's
+    // clear_problematic_domains flag rides the same reset flow,
+    // gcloud_crawler.py:770-790)
+    val cleared = hosts.withColumn("quarantined", lit(false))
 
-    val (entriesOpt, newSeen, newHostCounts, newHostEnq, reopened) =
+    val (entriesOpt, newSeen, newHosts, reopened) =
       if (!forget) {
         // queue-membership-checked append at the back (cli.py:217-219):
         // membership is against the LIVE frontier (a failed URL's dead raw
         // row is its past dispatch, not queue membership)
-        val toRetry = failedTbl.join(live, Seq("url"), "left_anti")
+        val toRetry = failedTbl.join(liveFrontier(spark, snap, r, hosts), Seq("url"), "left_anti")
           .select(col("url"), col("host"), col("depth"),
             lit(0).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"))
         // reopened entries queue behind everything the host ever enqueued:
         // batch-local rank (reset-time window over the reopened set only)
         // + the per-host enqueue totals
-        val entries = assignSeq(spark, toRetry,
-          Seq(col("ord1"), col("ord2")), nextSeq)
+        val (entriesObserved, entriesObs) = countObs(assignSeq(spark, toRetry,
+          Seq(col("ord1"), col("ord2")), stamp("nextSeq"))
           .withColumn("host_rank", row_number()
             .over(Window.partitionBy(col("host")).orderBy(col("seq"))).cast(LongType))
-          .join(hostEnq, Seq("host"), "left_outer")
+          .join(hosts.select("host", "enq"), Seq("host"), "left_outer")
           .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
-          .select("url", "host", "depth", "retry", "seq", "host_rank")
-          .localCheckpoint(true)
-        (Some(entries), seen, hostCounts, plusHostCounts(hostEnq, "enq", entries),
-          entries.count())
+          .select("url", "host", "depth", "retry", "seq", "host_rank"))
+        val entries = entriesObserved.localCheckpoint(true)
+        (Some(entries), seen, plusHosts(cleared, hostDelta(entries, "enq")),
+          observedCount(entriesObs, r + 1, "reopened entries"))
       } else {
         val shrunk = seen.join(failedTbl.select("url"), Seq("url"), "left_anti")
           .localCheckpoint(true)
         // inverse of admission: give the hosts their cap budget back.
-        // host_enq is NOT decremented — it is a rank high-water mark, not
-        // a budget; shrinking it would collide future absolute ranks.
-        val dec = failedTbl.groupBy("host").agg(count(lit(1)).as("dec"))
-        val counts = hostCounts.join(dec, Seq("host"), "left_outer")
-          .select(col("host"),
-            greatest(col("cnt") - coalesce(col("dec"), lit(0L)), lit(0L)).as("cnt"))
-        (None, shrunk, counts, hostEnq, n)
+        // `enq` is NOT decremented — it is a rank high-water mark, not a
+        // budget; shrinking it would collide future absolute ranks.
+        (None, shrunk, plusHosts(cleared, hostDelta(failedTbl, "cnt", lit(-1L))), n)
       }
     // forget mode, cuckoo: exact distributed deletes — executor-built
     // shards of the failed URLs subtracted from the filter driver-side,
@@ -1348,42 +1353,32 @@ object Crawler {
 
     // frontier commit shape (LSM): requeue mode APPENDS the reopened
     // entries as a delta tier and forget mode writes nothing at all.
-    // host_enq rides along: carried when untouched, replaced otherwise.
     val frontierAppend = entriesOpt.filter(_ => reopened > 0)
-    val enqChanged = frontierAppend.isDefined
-    val (enqWrite, enqObs) = countObs(newHostEnq)
+    val (hostsWrite, hostsObs) = countObs(newHosts)
     // requeue mode leaves `seen` untouched (no commit entry — prior appends
     // stay visible); forget mode REPLACES it with the shrunken set, which
-    // doubles as a compaction point for the hybrid append chain. Both modes
-    // CLEAR the quarantine (the reference's clear_problematic_domains flag
-    // rides the same reset flow, gcloud_crawler.py:770-790).
+    // doubles as a compaction point for the hybrid append chain.
     snap.commit(spark, r + 1,
       replaced = Map(
-        "host_counts" -> newHostCounts,
-        "failed" -> emptyFailed, // replace = the hybrid chain's compaction point
-        "quarantined" -> Seq.empty[String].toDF("host")) ++
-        (if (forget) Map("seen" -> newSeen) else Map.empty) ++
-        (if (enqChanged) Map("host_enq" -> enqWrite) else Map.empty),
+        "hosts" -> hostsWrite,
+        "failed" -> emptyFailed) ++ // replace = the hybrid chain's compaction point
+        (if (forget) Map("seen" -> newSeen) else Map.empty),
       appended = frontierAppend.map("frontier" -> _).toMap,
       // stamped like the crawl-round commits, so statusSummary and a
       // later run() read one consistent source: the prior commit's stamps
       // plus the reopened set in requeue mode (one more frontier tier)
       meta = stamps(
-        nextSeq = nextSeq + (if (forget) 0L else reopened),
-        frontierSize = stamp0("frontierSize") + (if (forget) 0L else reopened),
+        nextSeq = stamp("nextSeq") + (if (forget) 0L else reopened),
+        frontierSize = stamp("frontierSize") + (if (forget) 0L else reopened),
         // seen shrinks by exactly the reopened set in forget mode (every
         // failed URL was admitted, hence in seen) and is untouched otherwise
-        seenSize = stamp0("seenSize") - (if (forget) n else 0L),
-        frontierDeadRows = stamp0("frontierDeadRows"),
-        frontierTiers = stamp0("frontierTiers") + (if (enqChanged) 1 else 0)) +
-        ("hostSchedRows" -> m0("hostSchedRows")),
+        seenSize = stamp("seenSize") - (if (forget) n else 0L),
+        frontierDeadRows = stamp("frontierDeadRows"),
+        frontierTiers = stamp("frontierTiers") + (if (frontierAppend.isDefined) 1 else 0)),
       blobs = Map("seen_sketch" -> SeenSketch.serialize(newSketch)),
       bucketed = Map("frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      carried = Map("host_sched" -> r) ++ // dispatch history unchanged by a reset
-        (if (enqChanged) Map.empty[String, Int] else Map("host_enq" -> r)),
-      metaLate = () => Map("hostEnqRows" -> (
-        if (enqChanged) rowsOr(enqObs, stamp0("hostEnqRows") + reopened)
-        else stamp0("hostEnqRows")).toString))
+      // a reset adds no host, so the prior bound stays safe
+      metaLate = () => Map("hostRows" -> rowsOr(hostsObs, stamp("hostRows")).toString))
     reopened
   }
 }

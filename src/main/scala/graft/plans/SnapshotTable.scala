@@ -19,9 +19,9 @@ import scala.jdk.CollectionConverters._
  *   root/_manifests/r00042.json        { round, meta{...}, tables{name→path} }
  *
  * Three table kinds, by how a round's commit names them:
- *  - replaced (host_counts, host_sched, host_enq, quarantined): the
- *    manifest points at one r<round> directory, possibly an earlier
- *    round's when the table is carried unchanged;
+ *  - replaced (hosts, the per-host crawl state): the manifest points at
+ *    one r<round> directory, possibly an earlier round's when the table
+ *    is carried unchanged;
  *  - hybrid (frontier, seen, failed): a replace base plus the append
  *    deltas committed after it ([[loadHybrid]]);
  *  - append (fetch_log, counters, pages, doc_store, postings,
@@ -282,7 +282,7 @@ object SnapshotTable {
     }
 
   /** Bounded pool for concurrent commit writes (daemon threads: the pool
-   * must never keep a JVM alive). A crawl round commits up to 13 tables,
+   * must never keep a JVM alive). A crawl round commits up to 10 tables,
    * most of them a few hundred rows; 6 concurrent writes keep the cores
    * busy without queueing every write's job at once. The cluster-side
    * parallelism comes from Spark itself. */

@@ -81,7 +81,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(byStatus.getOrElse("ok", 0L) + byStatus.getOrElse("ok_non_html", 0L)
       == oracleCompleted)
 
-    val engineCounts = snap.loadReplaced(spark, "host_counts", last)
+    val engineCounts = snap.loadReplaced(spark, "hosts", last).select("host", "cnt")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(engineCounts == oracleResult.hostCounts)
 
@@ -156,8 +156,9 @@ class CrawlEngineSpec extends AnyFunSuite {
     val good = Files.createTempDirectory("graft-crawl-fmt").resolve("root")
     runEngine(good.toString, maxRounds = 2)
     val r = new SnapshotTable(good.toString).latestRound.get
-    // two damaged copies of the committed state: the latest manifest's
-    // frontierAbsRank rewritten to "0", and its seenSize stamp removed
+    // damaged copies of the committed state: the latest manifest's
+    // frontierAbsRank rewritten to "0", and its seenSize or hostRows
+    // stamp removed
     def damaged(tag: String)(edit: String => String): String = {
       val root = Files.createTempDirectory(s"graft-crawl-$tag").resolve("root")
       scala.util.Using.resource(Files.walk(good)) { paths =>
@@ -171,11 +172,13 @@ class CrawlEngineSpec extends AnyFunSuite {
       Files.writeString(manifest, after)
       root.toString
     }
+    def without(stamp: String)(manifest: String): String =
+      manifest.replaceAll(s"\"$stamp\": \"\\d+\",?\\s*", "").replaceAll(",\\s*}", "}")
     val cases = Seq(
       "frontierAbsRank" -> damaged("rank0")(
         _.replace("\"frontierAbsRank\": \"1\"", "\"frontierAbsRank\": \"0\"")),
-      "seenSize" -> damaged("noseen")(
-        _.replaceAll("\"seenSize\": \"\\d+\",?\\s*", "").replaceAll(",\\s*}", "}")))
+      "seenSize" -> damaged("noseen")(without("seenSize")),
+      "hostRows" -> damaged("nohostrows")(without("hostRows")))
     cases.foreach { case (what, root) =>
       val calls = Seq[(String, () => Any)](
         "run" -> (() => runEngine(root)),
@@ -232,10 +235,10 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(engineSchedule(root, s.rounds - 1) ==
       oq.schedule.map(l => (l.round, l.url, l.status)))
     assert(engineSeen(root, s.rounds - 1) == oq.seen.toSet)
-    // reset-failures clears the quarantine table
+    // reset-failures clears the quarantine
     Crawler.resetFailures(spark, root, cfgQ)
     val snap = new SnapshotTable(root)
-    assert(snap.loadReplaced(spark, "quarantined", s.rounds).count() == 0)
+    assert(snap.loadReplaced(spark, "hosts", s.rounds).where(col("quarantined")).count() == 0)
   }
 
   test("mid-crawl seed injection stays oracle-exact (T5 config hot-reload)") {

@@ -16,12 +16,13 @@ class JobBudgetSpec extends AnyFunSuite {
 
   /** Max jobs of any one round, and jobs of all eight rounds together
    * (the counts repeat exactly from run to run). */
-  val MaxJobsPerRound = 49
-  val TotalJobs = 295
+  val MaxJobsPerRound = 48
+  val TotalJobs = 261
 
-  /** Jobs a resume launches before its first round: the policies count
-   * (2) and the fold of the reloaded seen set (1). */
-  val ResumeJobs = 3
+  /** Jobs a resume launches before its first round: the fold of the
+   * reloaded seen set (the policies are counted by the first round's
+   * dispatch, not before it). */
+  val ResumeJobs = 1
 
   test("jobs per committed crawl round stay within the pinned budget") {
     import spark.implicits._
@@ -62,7 +63,7 @@ class JobBudgetSpec extends AnyFunSuite {
     crawl()
     // every value a round reads is a manifest stamp or a lazily read
     // table, so a run() with no round left to run launches only the
-    // policies count and the seen fold
+    // seen fold
     val (summary, jobs) = JobCounter.count(spark.sparkContext)(crawl())
     assert(summary.rounds == 2 && summary.stats.isEmpty)
     info(s"jobs before the first round of a resume: $jobs")

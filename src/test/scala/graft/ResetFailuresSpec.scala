@@ -141,7 +141,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     // deterministic admission-gate check: a synthetic re-proposal of every
     // forgotten URL passes the full gate (sketch prefilter + exact seen
     // anti-join + domain + cap) — the deletable-seen semantics in one step
-    val hostCounts = snap.loadReplaced(spark, "host_counts", rAfter)
+    val hostCounts = snap.loadReplaced(spark, "hosts", rAfter).select("host", "cnt")
     val seenDf = snap.loadHybrid(spark, "seen", rAfter)
     import spark.implicits._
     val reproposed = failed0.toSeq.sorted.zipWithIndex.toDF("url", "idx")

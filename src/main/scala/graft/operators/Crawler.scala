@@ -17,7 +17,8 @@ import org.apache.spark.sql.types.LongType
  *            →(depth gate F6, allowed-domains F5, seen anti-join D1/D2,
  *              per-host cap window F7)→ admitted
  *            → new frontier (+ timeout requeues T2/T3), committed as one
- *              snapshot per round (T6) with fetch_log lineage + counters.
+ *              snapshot per round (T6) with fetch_log lineage; the round's
+ *              counters are stamps in its manifest.
  *
  * Replaces the reference's master/crawler/indexer processes + Pub/Sub +
  * Firestore (gcloud_master.py / gcloud_crawler.py / gcloud_indexer.py)
@@ -75,13 +76,11 @@ object Crawler {
     "round int, url string, host string, raw string, content_type string"
   private val FetchLogDdl = "round int, url string, host string, depth int, " +
     "seq bigint, status string, part_id int, error string, links_found int"
-  private val WorkerStatsDdl =
-    "round int, part_id int, processed bigint, completed bigint, links_found bigint"
 
-  /** Every status a fetch result can take (see the `results` frame in
-   * [[run]]); the round's counters are a histogram over them. */
-  private val FetchStatuses =
-    Seq("ok", "ok_non_html", "timeout", "failed", "skipped_robots", "quarantined")
+  /** The `fetch_log` errors that end a URL's crawl (CrawlState.failed,
+   * gcloud_master.py:197-207): the rows [[resetFailures]] re-opens. */
+  private val TerminalErrors =
+    Seq("http_404", "robots_disallowed", "quarantined_host", "retries_exhausted")
 
   case class RoundStats(
       round: Int, dispatched: Long, completed: Long, failed: Long,
@@ -374,28 +373,47 @@ object Crawler {
         max("quarantined").as("quarantined"))
 
   /** The meta stamps every crawl-round and reset commit writes besides
-   * `frontierAbsRank=1` (see [[roundMeta]]). The last is the row count of
+   * `snapshotFormat` (see [[roundMeta]]). The last is the row count of
    * `hosts`, stamped after the table writes. */
   private val StampKeys = Seq("nextSeq", "frontierSize", "seenSize",
     "frontierDeadRows", "frontierTiers", "hostRows")
+
+  /** The one snapshot format the engine reads: an absolute-rank LSM
+   * frontier, round counters as stamps, failures read from `fetch_log`. */
+  private val SnapshotFormat = "2"
 
   /** The stamps a commit knows before its writes. */
   private def stamps(nextSeq: Long, frontierSize: Long, seenSize: Long,
                      frontierDeadRows: Long, frontierTiers: Long): Map[String, String] =
     Map("nextSeq" -> nextSeq, "frontierSize" -> frontierSize, "seenSize" -> seenSize,
       "frontierDeadRows" -> frontierDeadRows, "frontierTiers" -> frontierTiers)
-      .map { case (k, v) => k -> v.toString } + ("frontierAbsRank" -> "1")
+      .map { case (k, v) => k -> v.toString } + ("snapshotFormat" -> SnapshotFormat)
+
+  /** A crawl round's counters as stamps, by field name; a reset commit
+   * stamps none (see [[roundStats]]). */
+  private def counterStamps(rs: RoundStats): Map[String, String] =
+    rs.productElementNames.zip(rs.productIterator.map(_.toString)).toMap - "round"
+
+  /** The counters of committed round `r` whose meta is `m`, or None for a
+   * reset commit. */
+  private def roundStats(r: Int, m: Map[String, String]): Option[RoundStats] =
+    m.get("dispatched").map { d =>
+      def stamp(k: String): Long = m(k).toLong
+      RoundStats(r, d.toLong, stamp("completed"), stamp("failed"), stamp("requeued"),
+        stamp("admitted"), stamp("frontierSize"), stamp("seenSize"))
+    }
 
   /** Manifest meta of committed round `r`, checked against the one
-   * snapshot format the engine reads: an absolute-rank LSM frontier
-   * (`frontierAbsRank=1`) and every [[StampKeys]] stamp. Resume must be
-   * exact from any round boundary, so any other snapshot fails here
-   * rather than being converted or re-counted. */
+   * snapshot format the engine reads ([[SnapshotFormat]]) and every
+   * [[StampKeys]] stamp. Resume must be exact from any round boundary, so
+   * any other snapshot fails here rather than being converted or
+   * re-counted. */
   private def roundMeta(snap: SnapshotTable, r: Int): Map[String, String] = {
     val m = snap.meta(r)
+    val format = m.getOrElse("snapshotFormat", "absent")
     val problems =
-      (if (m.get("frontierAbsRank").contains("1")) Nil
-       else Seq(s"frontierAbsRank is ${m.getOrElse("frontierAbsRank", "absent")}, expected 1")) ++
+      (if (format == SnapshotFormat) Nil
+       else Seq(s"snapshotFormat is $format, expected $SnapshotFormat")) ++
         StampKeys.filterNot(m.contains).map(k => s"meta stamp $k is missing")
     if (problems.nonEmpty) throw new IllegalStateException(
       s"unsupported crawl snapshot at ${snap.root}, round $r: ${problems.mkString("; ")}")
@@ -629,8 +647,8 @@ object Crawler {
       pendingRows = st.pendingRows + n)
   }
 
-  /** The round's dispatched slice of the frontier: politeness budget (T4)
-   * and quarantine stamp (F9). */
+  /** The round's dispatched slice of the frontier under the politeness
+   * budget (T4), checkpointed (see [[dispatchSelectAbs]]). */
   private def dispatch(ctx: RunCtx, st: RoundState): DataFrame = {
     val cfg = ctx.cfg
     // ---- politeness window (T4): per-host budget from accumulated time.
@@ -660,27 +678,13 @@ object Crawler {
     // — one hash join + one O(dispatched) materialization; liveness and
     // politeness are a single rank predicate; the deferred remainder is
     // never touched; the budget side broadcasts while bounded).
-    val dispatchedRaw = dispatchSelectAbs(st.frontier, budget, defaultTotal,
+    dispatchSelectAbs(st.frontier, budget, defaultTotal,
       Some(ctx.policyRows + st.hostRows), cfg.broadcastRowLimit)
-    // problematic-domain quarantine (F9, gcloud_crawler.py:242-253):
-    // fetches to quarantined hosts short-circuit as failures. The flag is
-    // stamped at dispatch (the quarantined hosts are few — broadcast),
-    // takes effect the round AFTER a host is quarantined
-    // (BSP boundary normalization of the reference's immediate set-add),
-    // and still consumes the dispatch slot.
-    // dispatchedRaw is already checkpointed (O(dispatched)) inside
-    // dispatchSelectAbs, and the quarantine stamp is a broadcast hash
-    // join — consumers below re-run only that narrow tail, so no further
-    // materialization is needed
-    dispatchedRaw
-      .join(broadcast(st.hosts.where(col("quarantined")).select(col("host"),
-        lit(true).as("quar_"))), Seq("host"), "left_outer")
-      .withColumn("quar", coalesce(col("quar_"), lit(false))).drop("quar_")
   }
 
   /** The "fetch": the dispatched slice joined against docs, each row
-   * typed by its fetch status and its spans extracted. Checkpointed, with
-   * the round's per-status counts observed on the checkpoint. */
+   * typed by its fetch status and error and its spans extracted.
+   * Checkpointed, with the round's counters observed on the checkpoint. */
   private def fetch(ctx: RunCtx, st: RoundState,
                     dispatched: DataFrame): (DataFrame, Map[String, Long]) = {
     val cfg = ctx.cfg
@@ -720,36 +724,49 @@ object Crawler {
         (f, m)
       }
 
-    val robotsOn = cfg.respectRobots
-    val fetchedTyped = fetched.select(
-      col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-      when(col("quar"), lit("quarantined")) // checked FIRST, as in the ref
-        .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
-        .when(col("retry") < col("flaky_fails"), lit("timeout"))
-        .when(col("content_type") =!= "text/html", lit("ok_non_html"))
-        .otherwise(lit("ok")).as("status"),
-      col("raw"), col("content_type"))
-
+    // problematic-domain quarantine (F9, gcloud_crawler.py:242-253):
+    // fetches to quarantined hosts short-circuit as failures, from the
+    // round AFTER the quarantine (BSP boundary normalization of the
+    // reference's immediate set-add), still consuming the dispatch slot.
+    // The quarantined hosts are few: a broadcast join.
+    val quarantined = broadcast(
+      st.hosts.where(col("quarantined")).select(col("host"), lit(true).as("quar")))
     val resultsObs = new Observation()
-    val results = fetchedTyped.unionByName(
-      missing.select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-        // same gate ORDER as the fetched branch: quarantine, then robots
-        // (the reference checks robots before fetching, so a dangling URL
-        // on a disallowed host is skipped_robots, not a 404), then 404
-        when(col("quar"), lit("quarantined"))
-          .when(lit(robotsOn) && !col("robots_allow"), lit("skipped_robots"))
-          .otherwise(lit("failed")).as("status"),
-        lit(null).cast("string").as("raw"),
-        lit(null).cast("string").as("content_type")))
+    val results = fetched.select(
+      col("url"), col("host"), col("depth"), col("retry"), col("seq"), col("robots_allow"),
+      when(col("retry") < col("flaky_fails"), lit("timeout"))
+        .when(col("content_type") =!= "text/html", lit("ok_non_html"))
+        .otherwise(lit("ok")).as("fetched"),
+      col("raw"), col("content_type"))
+      .unionByName(missing.select(
+        col("url"), col("host"), col("depth"), col("retry"), col("seq"), col("robots_allow"),
+        lit("failed").as("fetched"),
+        lit(null).cast("string").as("raw"), lit(null).cast("string").as("content_type")))
+      .join(quarantined, Seq("host"), "left_outer")
+      // the reference's gate order: quarantine, then robots (checked before
+      // fetching, so a dangling URL on a disallowed host is
+      // skipped_robots, not a 404), then the fetch itself
+      .withColumn("status", when(col("quar").isNotNull, lit("quarantined"))
+        .when(lit(cfg.respectRobots) && !col("robots_allow"), lit("skipped_robots"))
+        .otherwise(col("fetched")))
+      // timeouts requeue until retry + 1 passes maxRetries (T2/T3)
+      .withColumn("error", when(col("status") === "failed", lit("http_404"))
+        .when(col("status") === "timeout",
+          when(col("retry") + 1 > cfg.maxRetries, lit("retries_exhausted"))
+            .otherwise(lit("fetch_timeout")))
+        .when(col("status") === "skipped_robots", lit("robots_disallowed"))
+        .when(col("status") === "quarantined", lit("quarantined_host")))
+      .drop("robots_allow", "fetched", "quar")
       .withColumn("spans",
         when(col("status") === "ok", gf.extract_spans(col("raw")))
           .otherwise(array().cast(graft.functions.SpanExtract.schema)))
-      // the round's counters: a per-status histogram plus the timeouts
-      // past maxRetries, observed on this checkpoint (no job of their own)
+      // the round's counters, observed on this checkpoint (no job of their own)
       .observe(resultsObs, count(lit(1)).as("dispatched"),
-        FetchStatuses.map(s => count(when(col("status") === s, 1)).as(s)) :+
-          count(when(col("status") === "timeout" &&
-            col("retry") + 1 > cfg.maxRetries, 1)).as("timeout_exhausted"): _*)
+        count(when(col("status") === "ok", 1)).as("ok"),
+        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
+        count(when(col("error").isin(TerminalErrors: _*), 1)).as("failed"),
+        count(when(col("error") === "fetch_timeout", 1)).as("requeued"),
+        count(when(col("error") === "retries_exhausted", 1)).as("exhausted"))
       .localCheckpoint(true) // parse once; reused by links/doc_store/log
     (results, observedCounts(resultsObs, st.round, "results by status"))
   }
@@ -782,16 +799,15 @@ object Crawler {
    * Checkpointed, with their count. */
   private def enqueue(ctx: RunCtx, st: RoundState, results: DataFrame,
                       admitted: DataFrame): (DataFrame, Long) = {
-    // ---- timeout requeue (T2/T3): retry+1, terminal past maxRetries
-    // (the terminal ones fail in commitRound).
+    // ---- timeout requeue (T2/T3): the timeouts [[fetch]] did not mark
+    // retries_exhausted re-enter with retry+1.
     // Requeues re-enter the frontier, so they need batch-local per-host
     // ranks for the host_rank invariant. This window runs over the
     // REQUEUE SET ONLY — bounded by the round's politeness budget per
     // host (requeues ⊆ dispatched), never the frontier — so it stays
     // small by construction at any crawl size.
     val reqW = Window.partitionBy(col("host")).orderBy(col("seq"))
-    val requeue = results.where(col("status") === "timeout")
-      .where(col("retry") + 1 <= ctx.cfg.maxRetries)
+    val requeue = results.where(col("error") === "fetch_timeout")
       .withColumn("lrank_", row_number().over(reqW).cast(LongType))
       .select(col("url"), col("host"), col("depth"),
         (col("retry") + 1).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"),
@@ -859,28 +875,14 @@ object Crawler {
     (stats, load(ctx, st.round, seen, sketch))
   }
 
-  /** Commit round `st.round` (T6): the round's tables, its counters and
-   * the meta stamps [[load]] reads, as one atomic snapshot. */
+  /** Commit round `st.round` (T6): the round's tables and the meta stamps
+   * — its counters and what [[load]] reads — as one atomic snapshot. */
   private def commitRound(ctx: RunCtx, st: RoundState, dispatched: DataFrame,
                           results: DataFrame, n: Map[String, Long],
                           admitted: DataFrame, nAdmitted: Long,
                           newEntries: DataFrame, nAdds: Long,
                           sketch: SeenSketch): RoundStats = {
-    val (spark, cfg, round) = (ctx.spark, ctx.cfg, st.round)
-    import spark.implicits._
-    // terminal failures of THIS round (CrawlState.failed,
-    // gcloud_master.py:197-207) — appended to the hybrid failed table;
-    // the reset-failures flow (D4) re-opens them.
-    val timeoutFail = results.where(col("status") === "timeout")
-      .where(col("retry") + 1 > cfg.maxRetries)
-    val failedNow = results
-      .where(col("status").isin("failed", "skipped_robots", "quarantined"))
-      .unionByName(timeoutFail)
-      .select(col("url"), col("host"), col("depth"), col("retry"), col("seq"),
-        when(col("status") === "failed", lit("http_404"))
-          .when(col("status") === "skipped_robots", lit("robots_disallowed"))
-          .when(col("status") === "quarantined", lit("quarantined_host"))
-          .otherwise(lit("retries_exhausted")).as("error"))
+    val (spark, round) = (ctx.spark, st.round)
     // per-host state: enqueue totals grow by this round's new entries
     // (requeues included — they re-enter at fresh absolute ranks), and
     // hosts whose URLs exhausted their retries this round join the
@@ -889,20 +891,17 @@ object Crawler {
     // round with exhausted timeouts rescans the results for them.
     val newHosts = plusHosts(st.hosts, Seq(hostDelta(admitted, "cnt"),
       hostDelta(dispatched, "dispatched"), hostDelta(newEntries, "enq")) ++
-      Option.when(n("timeout_exhausted") > 0)(
-        hostDelta(timeoutFail, "quarantined", lit(true))): _*)
+      Option.when(n("exhausted") > 0)(
+        hostDelta(results.where(col("error") === "retries_exhausted"),
+          "quarantined", lit(true))): _*)
 
     // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
-    // part_id records which executor partition fetched/extracted the row
-    // (per-partition lineage; observability only — never ordering).
+    // fetch_log is the one record of each fetch's outcome (worker stats,
+    // reset's failures). part_id records which executor partition
+    // fetched/extracted the row (lineage only — never ordering).
     val fetchLog = results.select(
       lit(round).as("round"), col("url"), col("host"), col("depth"),
-      col("seq"), col("status"), spark_partition_id().as("part_id"),
-      when(col("status") === "failed", lit("http_404"))
-        .when(col("status") === "timeout", lit("fetch_timeout"))
-        .when(col("status") === "skipped_robots", lit("robots_disallowed"))
-        .when(col("status") === "quarantined", lit("quarantined_host"))
-        .otherwise(lit(null).cast("string")).as("error"),
+      col("seq"), col("status"), spark_partition_id().as("part_id"), col("error"),
       when(col("status") === "ok",
         size(filter(col("spans"), s => s("kind") === "link")))
         .otherwise(lit(0)).as("links_found"))
@@ -931,37 +930,22 @@ object Crawler {
     val postingsRows = SearchIndex.postings(
       docStore.select("url", "title", "text")).withColumn("round", lit(round))
 
-    // ---- per-worker stats (A4/T7, gcloud_master.py:702-725): processed
-    // counts per executor partition, with the round as the heartbeat
-    // clock (wall-clock-free liveness: a worker partition that appears in
-    // round r was alive in round r).
-    val workerStats = fetchLog
-      .groupBy(col("round"), col("part_id"))
-      .agg(count(lit(1)).as("processed"),
-        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
-        sum(col("links_found")).as("links_found"))
-
     // ---- round counters (CrawlState sizes, gcloud_master.py:686-688),
-    // computed pre-commit so they ride in the SAME atomic snapshot and
-    // /status projections (§3.3) read tables, never driver state.
-    // They are OBSERVED on the results checkpoint (per-status histogram
-    // plus exhausted timeouts): no aggregation job of their own, since
-    // per-round fixed job cost bounds the crawl round at this scale.
-    val nDispatched = n("dispatched")
-    val timeoutExhausted = n("timeout_exhausted")
-    val nFailed = n("failed") + n("skipped_robots") + n("quarantined") + timeoutExhausted
-    val nCompleted = n("ok") + n("ok_non_html")
-    val nRequeued = n("timeout") - timeoutExhausted
+    // stamped in the SAME atomic manifest, so /status projections (§3.3)
+    // read committed state, never driver state. They are OBSERVED on the
+    // results checkpoint: no job of their own, since per-round fixed job
+    // cost bounds the crawl round at this scale.
+    val (nDispatched, nCompleted) = (n("dispatched"), n("completed"))
     // no count job: dispatch consumes a per-host prefix of the live set,
     // so the new live size is pure arithmetic
     val frontierSize = st.frontierSize - nDispatched + nAdds
     val seenSize = st.seenSize + nAdmitted
-    val rs = RoundStats(round, nDispatched, nCompleted, nFailed,
-      nRequeued, nAdds, frontierSize, seenSize)
+    val rs = RoundStats(round, nDispatched, nCompleted, n("failed"),
+      n("requeued"), nAdds, frontierSize, seenSize)
 
     // ---- commit round snapshot (T6): atomic manifest = round boundary.
     // Per-round write cost tracks what CHANGED, not accumulated table
-    // sizes: `seen`/`failed` APPEND this round's delta only, the FRONTIER
+    // sizes: `seen` APPENDS this round's delta only, the FRONTIER
     // is an LSM hybrid — this round's new entries append as a delta tier
     // (physically host-hash bucketed, the rule's `bucket(N, host_hash)`
     // partitioned priority frontier), the base is rewritten (compacted to
@@ -972,7 +956,7 @@ object Crawler {
     // Per-round frontier bytes written are therefore ∝ (admitted +
     // requeued), never ∝ frontier size — the write-amplification bound
     // that makes a 10^10-row frontier commit-able every round.
-    // Round 0 writes `hosts` and the failed base. The `hosts` row count is
+    // Round 0 writes `hosts`. The `hosts` row count is
     // observed during the commit's own write (same zero-extra-pass
     // pattern as the postings index stats) and stamped for the next
     // round's broadcast gates. Every per-host delta comes from dispatched
@@ -981,8 +965,7 @@ object Crawler {
     val hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0
     val replaced = scala.collection.mutable.Map.empty[String, DataFrame]
     if (hostsChanged) replaced += "hosts" -> hostsWrite
-    val appended = scala.collection.mutable.Map[String, DataFrame](
-      "counters" -> Seq(rs).toDS().toDF().coalesce(1))
+    val appended = scala.collection.mutable.Map.empty[String, DataFrame]
     val deadRows = st.frontierDeadRows + nDispatched
     val compact = round == 0 || deadRows > frontierSize || st.frontierTiers >= 64
     val added = nAdds + st.pendingRows > 0
@@ -991,14 +974,9 @@ object Crawler {
       // ranks preserved — O(live), amortized against the dead rows shed
       replaced += "frontier" -> liveRows(st.frontier.unionByName(newEntries), newHosts)
     else if (added) appended += "frontier" -> st.pending.unionByName(newEntries)
-    if (round == 0) replaced += "failed" -> failedNow
-    else if (nFailed > 0) appended += "failed" -> failedNow
     if (nAdmitted > 0 || st.pendingRows > 0)
       appended += "seen" -> st.pending.select("url").unionByName(admitted.select("url"))
-    if (nDispatched > 0) {
-      appended += "fetch_log" -> fetchLog
-      appended += "worker_stats" -> workerStats
-    }
+    if (nDispatched > 0) appended += "fetch_log" -> fetchLog
     if (nCompleted > 0) appended += "pages" -> pages
     // index-size stats (A4, gcloud_indexer.py:566-573): approx distinct
     // terms/docs of this round's postings DELTA, observed during the
@@ -1018,7 +996,8 @@ object Crawler {
       appended = appended.toMap,
       meta = stamps(st.nextSeq + nAdds, frontierSize, seenSize,
         frontierDeadRows = if (compact) 0L else deadRows,
-        frontierTiers = if (compact) 0 else st.frontierTiers + (if (added) 1 else 0)),
+        frontierTiers = if (compact) 0 else st.frontierTiers + (if (added) 1 else 0)) ++
+        counterStamps(rs),
       blobs = Map("seen_sketch" -> SeenSketch.serialize(sketch)),
       bucketed = Map(
         "frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
@@ -1115,12 +1094,20 @@ object Crawler {
       throw new IllegalStateException(s"no crawl state at $root")))
   }
 
-  /** Status projection (§3.3, cli.py:98-124 / GET /status): the per-round
-   * counter rows from the committed snapshots — queue/completed/failed/
-   * seen sizes per round, no driver state involved. */
-  def status(spark: SparkSession, root: String): DataFrame = {
+  /** Manifest meta of every committed round at `root`, in order; only the
+   * latest is format-checked, as the engine extends only what it accepts. */
+  private def roundMetas(root: String): Seq[(Int, Map[String, String])] = {
     val (snap, r) = committed(root)
-    snap.loadAppended(spark, "counters", r).orderBy("round")
+    (0 until r).map(i => i -> snap.meta(i)) :+ (r -> roundMeta(snap, r))
+  }
+
+  /** Status projection (§3.3, cli.py:98-124 / GET /status): one counter
+   * row per crawl round, read from the round manifests — queue/completed/
+   * failed/seen sizes per round, no driver state involved. Reset commits
+   * carry no counters and add no row. */
+  def status(spark: SparkSession, root: String): DataFrame = {
+    import spark.implicits._
+    roundMetas(root).flatMap { case (r, m) => roundStats(r, m) }.toDF()
   }
 
   /** Exact index-size stats on demand (A4 remainder; the reference's
@@ -1144,9 +1131,7 @@ object Crawler {
    * carry no stats and are omitted. */
   def indexStatsHistory(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val (snap, r) = committed(root)
-    (0 to r).flatMap { round =>
-      val m = snap.meta(round) // committed rounds are contiguous
+    roundMetas(root).flatMap { case (round, m) =>
       for {
         t <- m.get("idx_new_terms_approx")
         d <- m.get("idx_new_docs_approx")
@@ -1248,12 +1233,15 @@ object Crawler {
   }
 
   /** Per-worker (executor partition) processed/completed counters with the
-   * round as heartbeat clock (A4/T7, gcloud_master.py:702-725). */
+   * round as heartbeat clock (A4/T7, gcloud_master.py:702-725): a
+   * group-by of `fetch_log` (wall-clock-free liveness: a worker partition
+   * that appears in round r was alive in round r). */
   def workerStats(spark: SparkSession, root: String): DataFrame = {
     val (snap, r) = committed(root)
-    snap.loadAppendedOr(spark, "worker_stats", r, WorkerStatsDdl)
+    snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
       .groupBy("part_id")
-      .agg(sum("processed").as("processed"), sum("completed").as("completed"),
+      .agg(count(lit(1)).as("processed"),
+        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
         sum("links_found").as("links_found"), max("round").as("last_heartbeat_round"))
       .orderBy("part_id")
   }
@@ -1273,39 +1261,44 @@ object Crawler {
    * re-open terminally-failed URLs, committed as a new round boundary so a
    * subsequent run() resumes from the reset state.
    *
+   * The failed URLs are the `fetch_log` rows with a terminal error
+   * committed after the latest reset (the latest commit without counters).
+   *
    *  - `forget = false` (reference-faithful): failed URLs re-enter the
    *    frontier at the back of the queue (membership-checked against the
-   *    current frontier, retry counter reset), `failed` is cleared, `seen`
-   *    is untouched — exactly the reference's move-failed-to-queue loop.
+   *    current frontier, retry counter reset), `seen` is untouched —
+   *    exactly the reference's move-failed-to-queue loop.
    *  - `forget = true` (the deletable-seen flow the north rule's cuckoo
    *    filter exists for): failed URLs are REMOVED from the seen set, the
    *    seen sketch (cuckoo: exact per-entry deletes; bloom: forced 4x-
-   *    amortized rebuild from the shrunken seen table), the per-host
-   *    enqueue counts, and `failed` — so the crawl re-admits them
-   *    organically the next time any page links to them.
+   *    amortized rebuild from the shrunken seen table) and the per-host
+   *    enqueue counts — so the crawl re-admits them organically the next
+   *    time any page links to them.
    *
    * Returns the number of URLs re-opened.
    */
   def resetFailures(spark: SparkSession, root: String, cfg: CrawlConfig,
                     forget: Boolean = false): Long = {
-    import spark.implicits._
     val (snap, r) = committed(root)
     val m = roundMeta(snap, r)
     def stamp(k: String): Long = m(k).toLong
     val hosts = snap.loadReplaced(spark, "hosts", r)
     val seen = snap.loadHybrid(spark, "seen", r)
-    val (failedObserved, failedObs) = countObs(snap.loadHybrid(spark, "failed", r)
-      .groupBy("url")
-      .agg(min(struct(col("seq"), col("host"), col("depth"))).as("m"))
-      .select(col("url"), col("m.host").as("host"), col("m.depth").as("depth"),
-        col("m.seq").as("seq")))
+    // each fetch_log directory holds one round, so the parquet reader
+    // skips the rounds up to the latest reset (-1: none) by footer stats
+    val lastReset = (r to 0 by -1).find(i => roundStats(i, snap.meta(i)).isEmpty).getOrElse(-1)
+    val (failedObserved, failedObs) = countObs(
+      snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
+        .where(col("round") > lastReset && col("error").isin(TerminalErrors: _*))
+        .groupBy("url")
+        .agg(min(struct(col("seq"), col("host"), col("depth"))).as("m"))
+        .select(col("url"), col("m.host").as("host"), col("m.depth").as("depth"),
+          col("m.seq").as("seq")))
     val failedTbl = failedObserved.localCheckpoint(true)
     val n = observedCount(failedObs, r + 1, "failed urls")
     if (n == 0) return 0L
 
     val sketch = loadSketch(snap, r, seen, cfg)
-    val emptyFailed = Seq.empty[(String, String, Int, Int, Long, String)]
-      .toDF("url", "host", "depth", "retry", "seq", "error")
     // both modes CLEAR the quarantine (the reference's
     // clear_problematic_domains flag rides the same reset flow,
     // gcloud_crawler.py:770-790)
@@ -1359,9 +1352,7 @@ object Crawler {
     // stay visible); forget mode REPLACES it with the shrunken set, which
     // doubles as a compaction point for the hybrid append chain.
     snap.commit(spark, r + 1,
-      replaced = Map(
-        "hosts" -> hostsWrite,
-        "failed" -> emptyFailed) ++ // replace = the hybrid chain's compaction point
+      replaced = Map("hosts" -> hostsWrite) ++
         (if (forget) Map("seen" -> newSeen) else Map.empty),
       appended = frontierAppend.map("frontier" -> _).toMap,
       // stamped like the crawl-round commits, so statusSummary and a

@@ -22,11 +22,11 @@ import scala.jdk.CollectionConverters._
  *  - replaced (hosts, the per-host crawl state): the manifest points at
  *    one r<round> directory, possibly an earlier round's when the table
  *    is carried unchanged;
- *  - hybrid (frontier, seen, failed): a replace base plus the append
- *    deltas committed after it ([[loadHybrid]]);
- *  - append (fetch_log, counters, pages, doc_store, postings,
- *    worker_stats): one directory per round that wrote rows, read as the
- *    union of all rounds ≤ the loaded one.
+ *  - hybrid (frontier, seen): a replace base plus the append deltas
+ *    committed after it ([[loadHybrid]]);
+ *  - append (fetch_log, pages, doc_store, postings): one directory per
+ *    round that wrote rows, read as the union of all rounds ≤ the loaded
+ *    one.
  *
  * Every directory a commit writes carries its schema in `_schema.json`
  * (Spark's file listing skips `_`-prefixed names), written before the
@@ -282,7 +282,7 @@ object SnapshotTable {
     }
 
   /** Bounded pool for concurrent commit writes (daemon threads: the pool
-   * must never keep a JVM alive). A crawl round commits up to 10 tables,
+   * must never keep a JVM alive). A crawl round commits up to 7 tables,
    * most of them a few hundred rows; 6 concurrent writes keep the cores
    * busy without queueing every write's job at once. The cluster-side
    * parallelism comes from Spark itself. */

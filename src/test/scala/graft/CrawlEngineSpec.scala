@@ -93,7 +93,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(robotsRows.subsetOf(disallowedHosts))
     // per-domain cap holds on enqueue counts
     engineCounts.values.foreach(c => assert(c <= cfg.maxPagesPerDomain))
-    // counters table rides in the same atomic snapshots and matches the
+    // the counter stamps ride in the same atomic manifests and match the
     // driver-side stats exactly (status projections §3.3)
     val counterRows = Crawler.status(spark, root)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
@@ -102,6 +102,11 @@ class CrawlEngineSpec extends AnyFunSuite {
       s.completed, s.failed, s.requeued, s.admitted, s.frontierSize, s.seenSize))
     assert(counterRows.toSeq == wantCounters)
     assert(Crawler.recentActivity(spark, root).count() == 5)
+    // fetch_log's terminal errors are the oracle's terminal failures
+    val terminal = log.where(col("error").isin(
+      "http_404", "robots_disallowed", "quarantined_host", "retries_exhausted"))
+      .select("url").collect().map(_.getString(0)).toSet
+    assert(terminal == oracleResult.failed.toSet)
 
     // politeness: per (host, round) dispatch count within budget
     val perRound = log.groupBy("host", "round").count().collect()
@@ -157,7 +162,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     runEngine(good.toString, maxRounds = 2)
     val r = new SnapshotTable(good.toString).latestRound.get
     // damaged copies of the committed state: the latest manifest's
-    // frontierAbsRank rewritten to "0", and its seenSize or hostRows
+    // snapshotFormat rewritten to "1", and its seenSize or hostRows
     // stamp removed
     def damaged(tag: String)(edit: String => String): String = {
       val root = Files.createTempDirectory(s"graft-crawl-$tag").resolve("root")
@@ -175,8 +180,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     def without(stamp: String)(manifest: String): String =
       manifest.replaceAll(s"\"$stamp\": \"\\d+\",?\\s*", "").replaceAll(",\\s*}", "}")
     val cases = Seq(
-      "frontierAbsRank" -> damaged("rank0")(
-        _.replace("\"frontierAbsRank\": \"1\"", "\"frontierAbsRank\": \"0\"")),
+      "snapshotFormat" -> damaged("format1")(
+        _.replace("\"snapshotFormat\": \"2\"", "\"snapshotFormat\": \"1\"")),
       "seenSize" -> damaged("noseen")(without("seenSize")),
       "hostRows" -> damaged("nohostrows")(without("hostRows")))
     cases.foreach { case (what, root) =>
@@ -333,7 +338,12 @@ class CrawlEngineSpec extends AnyFunSuite {
 
     // A4/T7: worker stats cover every processed row; heartbeat = max round
     val ws = Crawler.workerStats(spark, root)
-    assert(ws.agg(sum("processed")).collect()(0).getLong(0) == log.count())
+      .agg(sum("processed"), sum("completed"), sum("links_found"),
+        max("last_heartbeat_round")).collect()(0)
+    assert(ws.getLong(0) == log.count())
+    assert(ws.getLong(1) == nCompleted)
+    assert(ws.getLong(2) == log.agg(sum("links_found")).collect()(0).getLong(0))
+    assert(ws.getInt(3) == last)
 
     // A4 remainder: exact index stats match countDistinct over the
     // persisted postings; per-round manifest deltas exist and their

@@ -16,8 +16,12 @@ class JobBudgetSpec extends AnyFunSuite {
 
   /** Max jobs of any one round, and jobs of all eight rounds together
    * (the counts repeat exactly from run to run). */
-  val MaxJobsPerRound = 48
-  val TotalJobs = 261
+  val MaxJobsPerRound = 41
+  val TotalJobs = 221
+
+  /** Jobs of a fresh crawl's seed injection: everything `run()` launches
+   * before the first `stopRequested` poll. */
+  val SeedJobs = 19
 
   /** Jobs a resume launches before its first round: the fold of the
    * reloaded seen set (the policies are counted by the first round's
@@ -41,10 +45,12 @@ class JobBudgetSpec extends AnyFunSuite {
         cfg, Files.createTempDirectory("graft-job-budget").toString, maxRounds = 8,
         stopRequested = () => { polls += counter.fence(); false })
     } finally counter.close()
-    val perRound = polls.drop(1).toSeq
+    val (seedJobs, perRound) = (polls.head, polls.drop(1).toSeq)
     assert(perRound.size == summary.rounds)
-    val report = s"jobs per round: ${perRound.mkString(", ")} (total ${perRound.sum})"
+    val report = s"seed injection: $seedJobs jobs; " +
+      s"jobs per round: ${perRound.mkString(", ")} (total ${perRound.sum})"
     info(report)
+    assert(seedJobs <= SeedJobs, report)
     assert(perRound.max <= MaxJobsPerRound, report)
     assert(perRound.sum <= TotalJobs, report)
   }

@@ -27,11 +27,23 @@ class ResetFailuresSpec extends AnyFunSuite {
       c, root, maxRounds, sketchThreshold)
   }
 
+  /** The open failures: fetch_log's terminal errors after the latest
+   * reset commit (the latest manifest without round counters). */
   def failedUrls(root: String): Set[String] = {
     val snap = new SnapshotTable(root)
-    snap.loadHybrid(spark, "failed", snap.latestRound.get)
+    val last = snap.latestRound.get
+    val lastReset = (last to 0 by -1).find(r => !snap.meta(r).contains("dispatched"))
+      .getOrElse(-1)
+    snap.loadAppended(spark, "fetch_log", last)
+      .where(col("round") > lastReset && col("error").isin(
+        "http_404", "robots_disallowed", "quarantined_host", "retries_exhausted"))
       .select("url").collect().map(_.getString(0)).toSet
   }
+
+  def statusRows(root: String): Seq[Crawler.RoundStats] =
+    Crawler.status(spark, root).collect().map(r => Crawler.RoundStats(r.getInt(0),
+      r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
+      r.getLong(7))).toSeq
 
   test("sketch prefilter active from round 0 reproduces the unfiltered schedule") {
     val rootA = Files.createTempDirectory("graft-rf-a").toString
@@ -61,7 +73,7 @@ class ResetFailuresSpec extends AnyFunSuite {
 
   test("requeue mode: failed URLs re-enter the queue, are re-dispatched, and re-fail") {
     val root = Files.createTempDirectory("graft-rf-rq").toString
-    runEngine(root)
+    val crawled = runEngine(root)
     val failed0 = failedUrls(root)
     assert(failed0.nonEmpty, "corpus must produce terminal failures")
 
@@ -83,7 +95,9 @@ class ResetFailuresSpec extends AnyFunSuite {
       snapRq.loadHybrid(spark, "seen", snapRq.latestRound.get).count())
 
     val resetRound = new SnapshotTable(root).latestRound.get
-    runEngine(root) // resume
+    val resumed = runEngine(root) // resume
+    // one status row per crawl round, none for the reset commit
+    assert(statusRows(root) == crawled.stats ++ resumed.stats)
     val snap = new SnapshotTable(root)
     val last = snap.latestRound.get
     val after = snap.loadAppended(spark, "fetch_log", last)

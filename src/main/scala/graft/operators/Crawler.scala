@@ -336,14 +336,19 @@ object Crawler {
       .getOrElse(throw new IllegalStateException(
         s"round $round: observed count '$what' is missing"))
 
-  /** Row count of a checkpoint observed with [[countObs]]. */
-  private def observedCount(o: Observation, round: Int, what: String): Long =
-    observedCounts(o, round, what)("n")
-
-  /** `df` observed for its row count (see [[observedCount]]). */
+  /** `df` observed for its row count (see [[checkpointed]], [[rowsOr]]). */
   private def countObs(df: DataFrame): (DataFrame, Observation) = {
     val o = new Observation()
     (df.observe(o, count(lit(1)).as("n")), o)
+  }
+
+  /** `df` checkpointed, with its row count observed on the checkpoint (no
+   * job of its own; a missing count fails round `round`, see
+   * [[observedCounts]]). */
+  private def checkpointed(df: DataFrame, round: Int, what: String): (DataFrame, Long) = {
+    val (observed, o) = countObs(df)
+    val cp = observed.localCheckpoint(true)
+    (cp, observedCounts(o, round, what)("n"))
   }
 
   /** Row count observed with [[countObs]] on a write that already ran, or
@@ -372,8 +377,9 @@ object Crawler {
       .agg(sum("cnt").as("cnt"), sum("dispatched").as("dispatched"), sum("enq").as("enq"),
         max("quarantined").as("quarantined"))
 
-  /** The meta stamps every crawl-round and reset commit writes besides
-   * `snapshotFormat` (see [[roundMeta]]). The last is the row count of
+  /** The meta stamps every commit writes besides `snapshotFormat`: the
+   * [[RoundState]] fields of the same names, which [[load]] reads back
+   * (see [[commitState]], [[roundMeta]]). The last is the row count of
    * `hosts`, stamped after the table writes. */
   private val StampKeys = Seq("nextSeq", "frontierSize", "seenSize",
     "frontierDeadRows", "frontierTiers", "hostRows")
@@ -381,13 +387,6 @@ object Crawler {
   /** The one snapshot format the engine reads: an absolute-rank LSM
    * frontier, round counters as stamps, failures read from `fetch_log`. */
   private val SnapshotFormat = "2"
-
-  /** The stamps a commit knows before its writes. */
-  private def stamps(nextSeq: Long, frontierSize: Long, seenSize: Long,
-                     frontierDeadRows: Long, frontierTiers: Long): Map[String, String] =
-    Map("nextSeq" -> nextSeq, "frontierSize" -> frontierSize, "seenSize" -> seenSize,
-      "frontierDeadRows" -> frontierDeadRows, "frontierTiers" -> frontierTiers)
-      .map { case (k, v) => k -> v.toString } + ("snapshotFormat" -> SnapshotFormat)
 
   /** A crawl round's counters as stamps, by field name; a reset commit
    * stamps none (see [[roundStats]]). */
@@ -397,10 +396,10 @@ object Crawler {
   /** The counters of committed round `r` whose meta is `m`, or None for a
    * reset commit. */
   private def roundStats(r: Int, m: Map[String, String]): Option[RoundStats] =
-    m.get("dispatched").map { d =>
-      def stamp(k: String): Long = m(k).toLong
-      RoundStats(r, d.toLong, stamp("completed"), stamp("failed"), stamp("requeued"),
-        stamp("admitted"), stamp("frontierSize"), stamp("seenSize"))
+    m.get("dispatched").map { _ =>
+      val Seq(d, c, f, q, a, fs, ss) = Seq("dispatched", "completed", "failed",
+        "requeued", "admitted", "frontierSize", "seenSize").map(m(_).toLong)
+      RoundStats(r, d, c, f, q, a, fs, ss)
     }
 
   /** Manifest meta of committed round `r`, checked against the one
@@ -434,7 +433,7 @@ object Crawler {
    * dispatch always consumes a per-host PREFIX of the rank sequence, so
    * `host_rank > dispatched(host)` is exact, with no tombstones and no
    * per-row state. */
-  private def liveRows(frontierRaw: DataFrame, hosts: DataFrame): DataFrame =
+  private[graft] def liveRows(frontierRaw: DataFrame, hosts: DataFrame): DataFrame =
     frontierRaw
       .join(hosts.select("host", "dispatched"), Seq("host"), "left_outer")
       .where(col("host_rank") > coalesce(col("dispatched"), lit(0L)))
@@ -512,8 +511,10 @@ object Crawler {
       else SeenLsm(base, deltas :+ foldSeen(urls), deltaRows + n)
   }
 
-  /** Everything a round reads. [[load]] builds it from a committed round,
-   * the same way for a resume and for the next round of a running crawl.
+  /** Everything a round reads, and everything a commit writes
+   * ([[commitState]]). [[load]] builds it from a committed round, the same
+   * way for a resume, for the next round of a running crawl and for a
+   * reset.
    *
    *  - `frontier` is the RAW hybrid (LSM) view — live rows ∪ rows
    *    dispatched in earlier rounds — with ABSOLUTE per-host enqueue
@@ -524,12 +525,13 @@ object Crawler {
    *    `hostRows` bounds its row count for the broadcast gates.
    *  - `frontierDeadRows` and `frontierTiers` count the dead rows and
    *    delta tiers the stored frontier accumulated since its last base
-   *    rewrite: the compaction triggers (see [[commitRound]]).
+   *    rewrite: the compaction triggers (see [[commitState]]).
    *  - `seen` and `sketch` are the only state kept in memory between
    *    rounds (see [[round]]).
-   *  - `pending` holds the entries injected since the last commit
-   *    (`pendingRows` of them); the next commit appends their urls to
-   *    `seen` and, unless it rewrites the base, them to `frontier`.
+   *  - `pending` holds the entries queued since the last commit
+   *    (`pendingRows` of them, also in `frontier`); the next commit
+   *    appends them to the stored frontier as one tier, unless it rewrites
+   *    the base.
    */
   private case class RoundState(
       round: Int, nextSeq: Long, frontierSize: Long, seenSize: Long,
@@ -561,12 +563,14 @@ object Crawler {
       SeenSketch.empty(cfg.seenSketch, cfg.sketchCapacity), frontier, 0L)
   }
 
-  /** The state committed at round `r`, for round r + 1: the meta stamps,
-   * the frontier and the per-host table, read back from the snapshot.
-   * Reading them back truncates lineage, and it is exactly what a resume
-   * reads. `seen` and `sketch` are passed in (see [[round]]). */
-  private def load(ctx: RunCtx, r: Int, seen: SeenLsm, sketch: SeenSketch): RoundState = {
-    val (spark, snap) = (ctx.spark, ctx.snap)
+  /** The state committed at round `r`, for round r + 1: the meta stamps
+   * (format-checked, see [[roundMeta]]), the frontier and the per-host
+   * table, read back from the snapshot. Reading them back truncates
+   * lineage. A resume, the next round of a running crawl and a reset all
+   * read the state here, and only here; `seen` and `sketch` are passed in
+   * (see [[round]]). */
+  private def load(spark: SparkSession, snap: SnapshotTable, r: Int, seen: SeenLsm,
+                   sketch: SeenSketch): RoundState = {
     val m = roundMeta(snap, r)
     def stamp(k: String): Long = m(k).toLong
     val frontier = snap.loadHybrid(spark, "frontier", r)
@@ -589,10 +593,22 @@ object Crawler {
 
   /** Rank-offset side for new entries: gated broadcast of the per-host
    * enqueue totals (same size class and gate as the dispatch budget). */
-  private def enqSide(ctx: RunCtx, st: RoundState): DataFrame = {
+  private def enqSide(cfg: CrawlConfig, st: RoundState): DataFrame = {
     val enq = st.hosts.select("host", "enq")
-    if (st.hostRows <= ctx.cfg.broadcastRowLimit) broadcast(enq) else enq.hint("shuffle_hash")
+    if (st.hostRows <= cfg.broadcastRowLimit) broadcast(enq) else enq.hint("shuffle_hash")
   }
+
+  /** New frontier entries from `batch`, whose `host_rank` is a batch-local
+   * per-host rank in the total order `order`: seq numbers from
+   * `st.nextSeq` in that order, and ABSOLUTE ranks behind everything the
+   * host ever enqueued (batch rank + the host's `enq` total).
+   * Checkpointed, with their count. */
+  private def queue(spark: SparkSession, cfg: CrawlConfig, st: RoundState, batch: DataFrame,
+                    order: Seq[Column], what: String): (DataFrame, Long) =
+    checkpointed(assignSeq(spark, batch, order, st.nextSeq)
+      .join(enqSide(cfg, st), Seq("host"), "left_outer")
+      .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
+      .select("url", "host", "depth", "retry", "seq", "host_rank"), st.round, what)
 
   /** `sketch` if healthy, else rebuilt from `seen` (`seenSize` rows) at
    * growing capacity: a saturated sketch never serves as the admission
@@ -623,16 +639,10 @@ object Crawler {
       .select(col("url"), gf.url_policy_host(col("url")).as("host"),
         lit(0).as("depth"), lit(0).as("retry"),
         lit(-1L).as("ord1"), col("idx").as("ord2"))
-    // injected entries queue BEHIND everything the host ever enqueued:
-    // absolute rank = per-host enqueue total + admit's batch-local rank
-    val (entriesObserved, entriesObs) = countObs(
-      assignSeq(ctx.spark, admitTo(ctx, st, cand), Seq(col("ord1"), col("ord2")), st.nextSeq)
-        .select("url", "host", "depth", "retry", "seq", "host_rank")
-        .join(enqSide(ctx, st), Seq("host"), "left_outer")
-        .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
-        .drop("enq"))
-    val entries = entriesObserved.localCheckpoint(true)
-    val n = observedCount(entriesObs, st.round, "injected entries")
+    // injected entries queue BEHIND everything the host ever enqueued
+    // (admit's host_rank is the batch-local rank)
+    val (entries, n) = queue(ctx.spark, ctx.cfg, st, admitTo(ctx, st, cand),
+      Seq(col("ord1"), col("ord2")), "injected entries")
     if (n == 0) return st
     val seen = st.seen.append(entries.select("url"), n, st.seenSize + n)
     SeenSketch.addAll(st.sketch, entries.select("url"), "url", n)
@@ -789,9 +799,7 @@ object Crawler {
       .where(col("url").isNotNull)
       .withColumn("host", gf.url_policy_host(col("url")))
       .withColumn("retry", lit(0))
-    val (admittedObserved, admittedObs) = countObs(admitTo(ctx, st, candidates))
-    val admitted = admittedObserved.localCheckpoint(true)
-    (admitted, observedCount(admittedObs, st.round, "admitted"))
+    checkpointed(admitTo(ctx, st, candidates), st.round, "admitted")
   }
 
   /** The round's new frontier entries — timeout requeues, then admitted
@@ -808,33 +816,26 @@ object Crawler {
     // small by construction at any crawl size.
     val reqW = Window.partitionBy(col("host")).orderBy(col("seq"))
     val requeue = results.where(col("error") === "fetch_timeout")
-      .withColumn("lrank_", row_number().over(reqW).cast(LongType))
+      .withColumn("host_rank", row_number().over(reqW).cast(LongType))
       .select(col("url"), col("host"), col("depth"),
         (col("retry") + 1).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"),
-        col("lrank_"))
+        col("host_rank"))
 
     // ---- new sequence numbers: timeout requeues go to the back of the
     // queue first (gcloud_master.py:525-531), then children in
     // (parent_seq, link_pos) BFS order (:336).
-    // Batch-local per-host ranks (lrank_) follow the same order:
-    // requeues rank first, admitted rows offset by the host's requeue
-    // count — admit's host_rank is already the admitted-batch rank.
+    // Batch-local per-host ranks follow the same order: requeues rank
+    // first, admitted rows offset by the host's requeue count — admit's
+    // host_rank is already the admitted-batch rank.
     val reqCnt = requeue.groupBy("host").agg(count(lit(1)).as("rq_"))
     val adds = requeue.withColumn("bucket", lit(0))
       .unionByName(admitted
         .join(broadcast(reqCnt), Seq("host"), "left_outer")
-        .withColumn("lrank_", col("host_rank") + coalesce(col("rq_"), lit(0L)))
-        .drop("host_rank", "rq_")
+        .withColumn("host_rank", col("host_rank") + coalesce(col("rq_"), lit(0L)))
+        .drop("rq_")
         .withColumn("bucket", lit(1)))
-    // final ABSOLUTE frontier ranks: new entries queue behind everything
-    // the host ever enqueued — lrank_ + the per-host enqueue total
-    val (newEntriesObserved, newEntriesObs) = countObs(
-      assignSeq(ctx.spark, adds, Seq(col("bucket"), col("ord1"), col("ord2")), st.nextSeq)
-        .join(enqSide(ctx, st), Seq("host"), "left_outer")
-        .withColumn("host_rank", col("lrank_") + coalesce(col("enq"), lit(0L)))
-        .select("url", "host", "depth", "retry", "seq", "host_rank"))
-    val newEntries = newEntriesObserved.localCheckpoint(true)
-    (newEntries, observedCount(newEntriesObs, st.round, "new entries"))
+    queue(ctx.spark, ctx.cfg, st, adds, Seq(col("bucket"), col("ord1"), col("ord2")),
+      "new entries")
   }
 
   /** One BSP round over `st`: inject → dispatch → fetch → expand+admit →
@@ -865,24 +866,25 @@ object Crawler {
     if (nAdmitted > 0) SeenSketch.addAll(st.sketch, admitted.select("url"), "url", nAdmitted)
     val sketch = healthy(st.sketch, seen, st.seenSize + nAdmitted, ctx.cfg)
     val stats = commitRound(ctx, st, dispatched, results, counts, admitted, nAdmitted,
-      newEntries, nAdds, sketch)
+      newEntries, nAdds, seen, sketch)
     // the next round reads the committed snapshot, except `seen`: its
     // in-memory LSM form (folded base + folded deltas, all checkpointed ⇒
     // lineage already truncated) is row-for-row the parquet hybrid's
     // content, and reloading would re-pay the fold shuffle every round —
     // the exact cost the LSM exists to avoid. The sketch is the one the
     // commit serialized.
-    (stats, load(ctx, st.round, seen, sketch))
+    (stats, load(ctx.spark, ctx.snap, st.round, seen, sketch))
   }
 
-  /** Commit round `st.round` (T6): the round's tables and the meta stamps
-   * — its counters and what [[load]] reads — as one atomic snapshot. */
+  /** Commit round `st.round`: the state after its dispatch, fetches and
+   * new entries, with the round's log tables and its counters (see
+   * [[commitState]]). */
   private def commitRound(ctx: RunCtx, st: RoundState, dispatched: DataFrame,
                           results: DataFrame, n: Map[String, Long],
                           admitted: DataFrame, nAdmitted: Long,
                           newEntries: DataFrame, nAdds: Long,
-                          sketch: SeenSketch): RoundStats = {
-    val (spark, round) = (ctx.spark, st.round)
+                          seen: SeenLsm, sketch: SeenSketch): RoundStats = {
+    val round = st.round
     // per-host state: enqueue totals grow by this round's new entries
     // (requeues included — they re-enter at fresh absolute ranks), and
     // hosts whose URLs exhausted their retries this round join the
@@ -936,44 +938,20 @@ object Crawler {
     // results checkpoint: no job of their own, since per-round fixed job
     // cost bounds the crawl round at this scale.
     val (nDispatched, nCompleted) = (n("dispatched"), n("completed"))
-    // no count job: dispatch consumes a per-host prefix of the live set,
-    // so the new live size is pure arithmetic
-    val frontierSize = st.frontierSize - nDispatched + nAdds
-    val seenSize = st.seenSize + nAdmitted
+    val next = st.copy(nextSeq = st.nextSeq + nAdds,
+      // no count job: dispatch consumes a per-host prefix of the live set,
+      // so the new live size is pure arithmetic
+      frontierSize = st.frontierSize - nDispatched + nAdds, seenSize = st.seenSize + nAdmitted,
+      frontier = st.frontier.unionByName(newEntries), hosts = newHosts,
+      // a new host brings a new entry, and injected ones are already in
+      // st.hostRows: a safe over-bound until the commit observes the count
+      hostRows = st.hostRows + nAdds, frontierDeadRows = st.frontierDeadRows + nDispatched,
+      seen = seen, sketch = sketch,
+      pending = st.pending.unionByName(newEntries), pendingRows = st.pendingRows + nAdds)
     val rs = RoundStats(round, nDispatched, nCompleted, n("failed"),
-      n("requeued"), nAdds, frontierSize, seenSize)
+      n("requeued"), nAdds, next.frontierSize, next.seenSize)
 
-    // ---- commit round snapshot (T6): atomic manifest = round boundary.
-    // Per-round write cost tracks what CHANGED, not accumulated table
-    // sizes: `seen` APPENDS this round's delta only, the FRONTIER
-    // is an LSM hybrid — this round's new entries append as a delta tier
-    // (physically host-hash bucketed, the rule's `bucket(N, host_hash)`
-    // partitioned priority frontier), the base is rewritten (compacted to
-    // live rows) only when dead rows outgrow live rows or the tier chain
-    // gets long — and an unchanged `hosts` (nothing dispatched or
-    // injected) is CARRIED: the manifest points at the round that last
-    // wrote it, no data moves.
-    // Per-round frontier bytes written are therefore ∝ (admitted +
-    // requeued), never ∝ frontier size — the write-amplification bound
-    // that makes a 10^10-row frontier commit-able every round.
-    // Round 0 writes `hosts`. The `hosts` row count is
-    // observed during the commit's own write (same zero-extra-pass
-    // pattern as the postings index stats) and stamped for the next
-    // round's broadcast gates. Every per-host delta comes from dispatched
-    // or injected rows, so without either `hosts` is unchanged.
-    val (hostsWrite, hostsObs) = countObs(newHosts)
-    val hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0
-    val replaced = scala.collection.mutable.Map.empty[String, DataFrame]
-    if (hostsChanged) replaced += "hosts" -> hostsWrite
     val appended = scala.collection.mutable.Map.empty[String, DataFrame]
-    val deadRows = st.frontierDeadRows + nDispatched
-    val compact = round == 0 || deadRows > frontierSize || st.frontierTiers >= 64
-    val added = nAdds + st.pendingRows > 0
-    if (compact)
-      // base rewrite: live rows only (dead prefixes drop out), absolute
-      // ranks preserved — O(live), amortized against the dead rows shed
-      replaced += "frontier" -> liveRows(st.frontier.unionByName(newEntries), newHosts)
-    else if (added) appended += "frontier" -> st.pending.unionByName(newEntries)
     if (nAdmitted > 0 || st.pendingRows > 0)
       appended += "seen" -> st.pending.select("url").unionByName(admitted.select("url"))
     if (nDispatched > 0) appended += "fetch_log" -> fetchLog
@@ -991,31 +969,73 @@ object Crawler {
         approx_count_distinct(col("url")).as("docs"),
         count(lit(1)).as("postings"))
     }
-    ctx.snap.commit(spark, round,
-      replaced = replaced.toMap,
-      appended = appended.toMap,
-      meta = stamps(st.nextSeq + nAdds, frontierSize, seenSize,
-        frontierDeadRows = if (compact) 0L else deadRows,
-        frontierTiers = if (compact) 0 else st.frontierTiers + (if (added) 1 else 0)) ++
-        counterStamps(rs),
-      blobs = Map("seen_sketch" -> SeenSketch.serialize(sketch)),
-      bucketed = Map(
-        "frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      carried = if (hostsChanged) Map.empty else Map("hosts" -> (round - 1)),
+    // every per-host delta comes from dispatched or injected rows, so
+    // without either `hosts` is unchanged; round 0 writes it
+    commitState(ctx.spark, ctx.snap, next,
+      hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0,
+      counters = Some(rs), appended = appended.toMap,
       // index stats from the observed postings write (see awaitObs): any
       // failure degrades to stats-less meta — metrics must never abort a
-      // commit whose table writes succeeded. A missed row count falls back
-      // to a safe OVER-bound (a new host brings a new entry, and injected
-      // ones are already in st.hostRows), so the broadcast gates never
-      // under-estimate their build sides; a carried `hosts` keeps its bound.
-      metaLate = () => Map("hostRows" -> (
-        if (hostsChanged) rowsOr(hostsObs, st.hostRows + nAdds) else st.hostRows).toString) ++
-        idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
-          Map("idx_new_terms_approx" -> m("terms").toString,
-            "idx_new_docs_approx" -> m("docs").toString,
-            "idx_new_postings" -> m("postings").toString))
-          .getOrElse(Map.empty[String, String]))
+      // commit whose table writes succeeded
+      metaLate = () => idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
+        Map("idx_new_terms_approx" -> m("terms").toString,
+          "idx_new_docs_approx" -> m("docs").toString,
+          "idx_new_postings" -> m("postings").toString))
+        .getOrElse(Map.empty[String, String]))
     rs
+  }
+
+  /** Commit state `st` as round `st.round` (T6), in one atomic manifest:
+   * the one write path of a crawl state, for crawl rounds and resets alike.
+   * Per-round write cost tracks what CHANGED, not accumulated table sizes:
+   *  - `hosts` is replaced, or CARRIED when `hostsChanged` is false: the
+   *    manifest points at the round that last wrote it, no data moves.
+   *    Its row count is observed during the write and stamped for the
+   *    next round's broadcast gates (`st.hostRows` is the fallback
+   *    over-bound, so the gates never under-estimate their build sides).
+   *  - the FRONTIER is an LSM hybrid, physically host-hash bucketed (the
+   *    rule's `bucket(N, host_hash)` partitioned priority frontier):
+   *    `st.pending` appends as one delta tier, and the base is rewritten
+   *    (compacted to live rows) only at round 0, when dead rows outgrow
+   *    live rows or when the tier chain gets long. Frontier bytes written
+   *    are therefore ∝ entries queued, never ∝ frontier size — the
+   *    write-amplification bound that makes a 10^10-row frontier
+   *    commit-able every round. `st.frontierDeadRows`/`st.frontierTiers`
+   *    count what the stored frontier holds before this commit.
+   *  - `replaced` and `appended` are the other tables written: `seen`
+   *    appends its new urls, is replaced, or is left as it is, and a
+   *    crawl round appends its log tables.
+   *  - the meta stamps every [[StampKeys]] value of the committed state,
+   *    the `counters` when present, and `metaLate`'s values; the blob is
+   *    `st.sketch`.
+   */
+  private def commitState(spark: SparkSession, snap: SnapshotTable, st: RoundState,
+                          hostsChanged: Boolean, counters: Option[RoundStats] = None,
+                          replaced: Map[String, DataFrame] = Map.empty,
+                          appended: Map[String, DataFrame] = Map.empty,
+                          metaLate: () => Map[String, String] = () => Map.empty): Unit = {
+    val r = st.round
+    val (hostsWrite, hostsObs) = countObs(st.hosts)
+    val compact = r == 0 || st.frontierDeadRows > st.frontierSize || st.frontierTiers >= 64
+    val added = st.pendingRows > 0
+    val (withFrontier, appendedAll) =
+      // base rewrite: live rows only (dead prefixes drop out), absolute
+      // ranks preserved — O(live), amortized against the dead rows shed
+      if (compact) (replaced + ("frontier" -> liveRows(st.frontier, st.hosts)), appended)
+      else (replaced, appended ++ Option.when(added)("frontier" -> st.pending))
+    val stamps = Map("nextSeq" -> st.nextSeq, "frontierSize" -> st.frontierSize,
+      "seenSize" -> st.seenSize, "frontierDeadRows" -> (if (compact) 0L else st.frontierDeadRows),
+      "frontierTiers" -> (if (compact) 0 else st.frontierTiers + (if (added) 1 else 0)))
+    snap.commit(spark, r,
+      replaced = withFrontier ++ Option.when(hostsChanged)("hosts" -> hostsWrite),
+      appended = appendedAll,
+      meta = stamps.map { case (k, v) => k -> v.toString } ++
+        counters.map(counterStamps).getOrElse(Map.empty) + ("snapshotFormat" -> SnapshotFormat),
+      blobs = Map("seen_sketch" -> SeenSketch.serialize(st.sketch)),
+      bucketed = Map("frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
+      carried = if (hostsChanged) Map.empty else Map("hosts" -> (r - 1)),
+      metaLate = () => Map("hostRows" -> (
+        if (hostsChanged) rowsOr(hostsObs, st.hostRows) else st.hostRows).toString) ++ metaLate())
   }
 
   /** Run the crawl to completion (or maxRounds), committing one snapshot
@@ -1057,7 +1077,7 @@ object Crawler {
     var state = snap.latestRound match {
       case Some(r) =>
         val seen = snap.loadHybrid(spark, "seen", r)
-        load(ctx, r, SeenLsm(foldSeen(seen)), loadSketch(snap, r, seen, cfg))
+        load(spark, snap, r, SeenLsm(foldSeen(seen)), loadSketch(snap, r, seen, cfg))
       case None => inject(ctx, emptyState(spark, cfg), seedUrls)
     }
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
@@ -1086,19 +1106,22 @@ object Crawler {
     docs.toDF().groupBy("doc_id").agg(count(lit(1)).as("n"))
       .where(col("n") > 1).count()
 
-  /** The snapshot store at `root` and its latest committed round; a root
-   * with no committed round is an error, not an empty crawl. */
-  private[operators] def committed(root: String): (SnapshotTable, Int) = {
+  /** The snapshot store at `root`, its latest committed round and that
+   * round's meta, format-checked ([[roundMeta]]): every read of a
+   * committed crawl starts here or at [[load]], so a snapshot of another
+   * format fails loudly. A root with no committed round is an error, not
+   * an empty crawl. */
+  private[operators] def committed(root: String): (SnapshotTable, Int, Map[String, String]) = {
     val snap = new SnapshotTable(root)
-    (snap, snap.latestRound.getOrElse(
-      throw new IllegalStateException(s"no crawl state at $root")))
+    val r = snap.latestRound.getOrElse(throw new IllegalStateException(s"no crawl state at $root"))
+    (snap, r, roundMeta(snap, r))
   }
 
   /** Manifest meta of every committed round at `root`, in order; only the
    * latest is format-checked, as the engine extends only what it accepts. */
   private def roundMetas(root: String): Seq[(Int, Map[String, String])] = {
-    val (snap, r) = committed(root)
-    (0 until r).map(i => i -> snap.meta(i)) :+ (r -> roundMeta(snap, r))
+    val (snap, r, m) = committed(root)
+    (0 until r).map(i => i -> snap.meta(i)) :+ (r -> m)
   }
 
   /** Status projection (§3.3, cli.py:98-124 / GET /status): one counter
@@ -1118,7 +1141,7 @@ object Crawler {
    * the per-round manifests additionally carry approx per-round deltas
    * ([[indexStatsHistory]]) observed for free during each postings write. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     snap.loadAppendedOr(spark, "postings", r, PostingsDdl).agg(
       countDistinct(col("term")).as("distinct_terms"),
       countDistinct(col("url")).as("indexed_docs"),
@@ -1147,8 +1170,7 @@ object Crawler {
    * stamped at commit, so this reads no table). */
   def statusSummary(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val (snap, r) = committed(root)
-    val m = roundMeta(snap, r)
+    val (_, r, m) = committed(root)
     // every commit flow stamps frontierSize and seenSize (crawl rounds and
     // resets alike), so is_running and both sizes come from ONE consistent
     // source: a just-reset crawl never reports running=true with size 0,
@@ -1175,8 +1197,7 @@ object Crawler {
    * the n most recently admitted still-queued URLs — the frontier's top
    * seq values (seq is the global admission order). */
   def recentlyAdded(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
-    val (snap, r) = committed(root)
-    roundMeta(snap, r)
+    val (snap, r, _) = committed(root)
     liveFrontier(spark, snap, r, snap.loadReplaced(spark, "hosts", r))
       .orderBy(desc("seq")).limit(n)
       .select("url", "host", "depth", "seq")
@@ -1193,7 +1214,7 @@ object Crawler {
    * exact url key against the pages store; the equality predicate reaches
    * the parquet scan (footer min/max pruning). */
   def getPage(spark: SparkSession, root: String, url: String): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     snap.loadAppendedOr(spark, "pages", r, PagesDdl)
       .where(col("url") === url)
       .select("round", "url", "content_type", "raw")
@@ -1202,7 +1223,7 @@ object Crawler {
   /** /check_url (templates/app.py:906-1015): exact match plus fuzzy
    * contains-matches on a scheme-/slash-normalized needle, tagged by kind. */
   def checkUrl(spark: SparkSession, root: String, url: String): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     val needle = url.replaceFirst("^https?://", "").stripSuffix("/")
     val pages = snap.loadAppendedOr(spark, "pages", r, PagesDdl)
       .select("round", "url", "content_type")
@@ -1219,7 +1240,7 @@ object Crawler {
    * rows only. */
   def searchStore(spark: SparkSession, root: String, query: String,
                   field: String = "content", k: Int = 10): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     val postings = snap.loadAppendedOr(spark, "postings", r, PostingsDdl)
       .select("term", "url", "weight", "title")
     val top = SearchIndex.search(postings, query, field, k)
@@ -1237,7 +1258,7 @@ object Crawler {
    * group-by of `fetch_log` (wall-clock-free liveness: a worker partition
    * that appears in round r was alive in round r). */
   def workerStats(spark: SparkSession, root: String): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
       .groupBy("part_id")
       .agg(count(lit(1)).as("processed"),
@@ -1249,7 +1270,7 @@ object Crawler {
   /** Recent-activity tail (O3, templates/app.py:572-576): last n completed
    * fetches in dispatch order. */
   def recentActivity(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
-    val (snap, r) = committed(root)
+    val (snap, r, _) = committed(root)
     snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
       .where(col("status").isin("ok", "ok_non_html"))
       .orderBy(desc("round"), desc("seq")).limit(n)
@@ -1259,10 +1280,14 @@ object Crawler {
   /**
    * reset-failures (D4, cli.py:194-231 / templates/app.py:1207-1292):
    * re-open terminally-failed URLs, committed as a new round boundary so a
-   * subsequent run() resumes from the reset state.
+   * subsequent run() resumes from the reset state. Like the reference's
+   * edit of the master's `CrawlState`, a reset is load → edit → commit of
+   * the crawl's [[RoundState]]: read through [[load]], edited, and written
+   * through [[commitState]] as a commit without counters.
    *
    * The failed URLs are the `fetch_log` rows with a terminal error
    * committed after the latest reset (the latest commit without counters).
+   * Both modes clear the quarantine.
    *
    *  - `forget = false` (reference-faithful): failed URLs re-enter the
    *    frontier at the back of the queue (membership-checked against the
@@ -1279,97 +1304,66 @@ object Crawler {
    */
   def resetFailures(spark: SparkSession, root: String, cfg: CrawlConfig,
                     forget: Boolean = false): Long = {
-    val (snap, r) = committed(root)
-    val m = roundMeta(snap, r)
-    def stamp(k: String): Long = m(k).toLong
-    val hosts = snap.loadReplaced(spark, "hosts", r)
+    val (snap, r, _) = committed(root)
     val seen = snap.loadHybrid(spark, "seen", r)
+    val st = load(spark, snap, r, SeenLsm(seen), loadSketch(snap, r, seen, cfg))
     // each fetch_log directory holds one round, so the parquet reader
     // skips the rounds up to the latest reset (-1: none) by footer stats
     val lastReset = (r to 0 by -1).find(i => roundStats(i, snap.meta(i)).isEmpty).getOrElse(-1)
-    val (failedObserved, failedObs) = countObs(
+    val (failed, n) = checkpointed(
       snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
         .where(col("round") > lastReset && col("error").isin(TerminalErrors: _*))
         .groupBy("url")
         .agg(min(struct(col("seq"), col("host"), col("depth"))).as("m"))
         .select(col("url"), col("m.host").as("host"), col("m.depth").as("depth"),
-          col("m.seq").as("seq")))
-    val failedTbl = failedObserved.localCheckpoint(true)
-    val n = observedCount(failedObs, r + 1, "failed urls")
+          col("m.seq").as("seq")), st.round, "failed urls")
     if (n == 0) return 0L
+    // the reference's clear_problematic_domains flag rides the same reset
+    // flow (gcloud_crawler.py:770-790)
+    val cleared = st.hosts.withColumn("quarantined", lit(false))
 
-    val sketch = loadSketch(snap, r, seen, cfg)
-    // both modes CLEAR the quarantine (the reference's
-    // clear_problematic_domains flag rides the same reset flow,
-    // gcloud_crawler.py:770-790)
-    val cleared = hosts.withColumn("quarantined", lit(false))
-
-    val (entriesOpt, newSeen, newHosts, reopened) =
+    val (next, reopened) =
       if (!forget) {
         // queue-membership-checked append at the back (cli.py:217-219):
         // membership is against the LIVE frontier (a failed URL's dead raw
-        // row is its past dispatch, not queue membership)
-        val toRetry = failedTbl.join(liveFrontier(spark, snap, r, hosts), Seq("url"), "left_anti")
+        // row is its past dispatch, not queue membership); batch-local
+        // ranks follow the failed rows' old seq order
+        val toRetry = failed.join(liveRows(st.frontier, st.hosts), Seq("url"), "left_anti")
           .select(col("url"), col("host"), col("depth"),
             lit(0).as("retry"), col("seq").as("ord1"), lit(0).as("ord2"))
-        // reopened entries queue behind everything the host ever enqueued:
-        // batch-local rank (reset-time window over the reopened set only)
-        // + the per-host enqueue totals
-        val (entriesObserved, entriesObs) = countObs(assignSeq(spark, toRetry,
-          Seq(col("ord1"), col("ord2")), stamp("nextSeq"))
           .withColumn("host_rank", row_number()
-            .over(Window.partitionBy(col("host")).orderBy(col("seq"))).cast(LongType))
-          .join(hosts.select("host", "enq"), Seq("host"), "left_outer")
-          .withColumn("host_rank", col("host_rank") + coalesce(col("enq"), lit(0L)))
-          .select("url", "host", "depth", "retry", "seq", "host_rank"))
-        val entries = entriesObserved.localCheckpoint(true)
-        (Some(entries), seen, plusHosts(cleared, hostDelta(entries, "enq")),
-          observedCount(entriesObs, r + 1, "reopened entries"))
+            .over(Window.partitionBy(col("host")).orderBy(col("ord1"))).cast(LongType))
+        val (entries, k) = queue(spark, cfg, st, toRetry, Seq(col("ord1"), col("ord2")),
+          "reopened entries")
+        (st.copy(nextSeq = st.nextSeq + k, frontierSize = st.frontierSize + k,
+          frontier = st.frontier.unionByName(entries),
+          hosts = plusHosts(cleared, hostDelta(entries, "enq")),
+          pending = entries, pendingRows = k), k)
       } else {
-        val shrunk = seen.join(failedTbl.select("url"), Seq("url"), "left_anti")
+        val shrunk = st.seen.base.join(failed.select("url"), Seq("url"), "left_anti")
           .localCheckpoint(true)
-        // inverse of admission: give the hosts their cap budget back.
+        // cuckoo: exact distributed deletes — executor-built shards of the
+        // failed URLs subtracted from the filter driver-side, O(failed)
+        // spread across the cluster (the delete mirror of the addAll
+        // maintenance path; no per-row driver loop). Bloom (not deletable)
+        // or an inconsistent delete (entry missing — the sketch was not in
+        // sync with `seen`) falls back to the 4x-amortized rebuild from the
+        // shrunken seen table.
+        val sketch =
+          if (SeenSketch.deleteAll(st.sketch, failed.select("url"), "url")) st.sketch
+          else rebuildSketch(shrunk, st.sketch.kind,
+            math.max(st.sketch.capacity, cfg.sketchCapacity))
+        // seen shrinks by exactly the failed set (every failed URL was
+        // admitted, hence in seen); the hosts get their cap budget back.
         // `enq` is NOT decremented — it is a rank high-water mark, not a
         // budget; shrinking it would collide future absolute ranks.
-        (None, shrunk, plusHosts(cleared, hostDelta(failedTbl, "cnt", lit(-1L))), n)
+        (st.copy(seenSize = st.seenSize - n, seen = SeenLsm(shrunk), sketch = sketch,
+          hosts = plusHosts(cleared, hostDelta(failed, "cnt", lit(-1L)))), n)
       }
-    // forget mode, cuckoo: exact distributed deletes — executor-built
-    // shards of the failed URLs subtracted from the filter driver-side,
-    // O(failed) spread across the cluster (the delete mirror of the addAll
-    // maintenance path; no per-row driver loop). Bloom (not deletable) or
-    // an inconsistent delete (entry missing — the sketch was not in sync
-    // with `seen`) falls back to the 4x-amortized rebuild from the
-    // shrunken seen table.
-    val newSketch =
-      if (!forget || SeenSketch.deleteAll(sketch, failedTbl.select("url"), "url")) sketch
-      else rebuildSketch(newSeen, sketch.kind, math.max(sketch.capacity, cfg.sketchCapacity))
-
-    // frontier commit shape (LSM): requeue mode APPENDS the reopened
-    // entries as a delta tier and forget mode writes nothing at all.
-    val frontierAppend = entriesOpt.filter(_ => reopened > 0)
-    val (hostsWrite, hostsObs) = countObs(newHosts)
-    // requeue mode leaves `seen` untouched (no commit entry — prior appends
-    // stay visible); forget mode REPLACES it with the shrunken set, which
-    // doubles as a compaction point for the hybrid append chain.
-    snap.commit(spark, r + 1,
-      replaced = Map("hosts" -> hostsWrite) ++
-        (if (forget) Map("seen" -> newSeen) else Map.empty),
-      appended = frontierAppend.map("frontier" -> _).toMap,
-      // stamped like the crawl-round commits, so statusSummary and a
-      // later run() read one consistent source: the prior commit's stamps
-      // plus the reopened set in requeue mode (one more frontier tier)
-      meta = stamps(
-        nextSeq = stamp("nextSeq") + (if (forget) 0L else reopened),
-        frontierSize = stamp("frontierSize") + (if (forget) 0L else reopened),
-        // seen shrinks by exactly the reopened set in forget mode (every
-        // failed URL was admitted, hence in seen) and is untouched otherwise
-        seenSize = stamp("seenSize") - (if (forget) n else 0L),
-        frontierDeadRows = stamp("frontierDeadRows"),
-        frontierTiers = stamp("frontierTiers") + (if (frontierAppend.isDefined) 1 else 0)),
-      blobs = Map("seen_sketch" -> SeenSketch.serialize(newSketch)),
-      bucketed = Map("frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      // a reset adds no host, so the prior bound stays safe
-      metaLate = () => Map("hostRows" -> rowsOr(hostsObs, stamp("hostRows")).toString))
+    // forget mode REPLACES `seen`, which doubles as a compaction point for
+    // its hybrid append chain; requeue mode leaves it untouched
+    commitState(spark, snap, next, hostsChanged = true,
+      replaced = if (forget) Map("seen" -> next.seen.base) else Map.empty)
     reopened
   }
 }

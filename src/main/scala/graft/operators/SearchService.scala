@@ -80,7 +80,7 @@ class SearchService(val root: String) {
     val todo = pending(spark).localCheckpoint(true) // human-sized; reused below
     val nTodo = todo.count()
     if (nTodo == 0) return 0L
-    val (snap, r) = Crawler.committed(crawlRoot)
+    val (snap, r, _) = Crawler.committed(crawlRoot)
     val postings = snap.loadAppendedOr(spark, "postings", r, Crawler.PostingsDdl)
       .select("term", "url", "weight", "title")
 

@@ -33,8 +33,8 @@ import scala.jdk.CollectionConverters._
  * manifest rename and so covered by the same atomic commit. Loads read
  * with that schema instead of inferring it — no per-directory footer job —
  * and a zero-row bucketed write, which leaves no parquet file at all,
- * still reads as an empty table. Directories without the sidecar
- * (snapshots committed before it existed) fall back to inference.
+ * still reads as an empty table. A directory without its sidecar was not
+ * written by [[SnapshotTable.commit]]; reading it fails, naming it.
  *
  * Manifest meta values are plain strings; `"` and `\` are rejected at
  * commit (the manifest is written and parsed without escaping).
@@ -239,26 +239,24 @@ class SnapshotTable(val root: String) {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
-  /** One committed directory, read with its recorded schema when it has
-   * one (no inference job), by inference otherwise; bucket partition
-   * columns are dropped. */
+  /** One committed directory, read with its recorded schema (no inference
+   * job); bucket partition columns are dropped. */
   private def readDir(spark: SparkSession, dir: String): DataFrame = {
     val sidecar = Paths.get(dir, SnapshotTable.SchemaFile)
-    val reader =
-      if (Files.exists(sidecar)) spark.read.schema(
-        DataType.fromJson(Files.readString(sidecar)).asInstanceOf[StructType])
-      else spark.read
-    val df = reader.parquet(dir)
+    if (!Files.exists(sidecar)) throw new IllegalStateException(
+      s"snapshot directory $dir has no ${SnapshotTable.SchemaFile}")
+    val schema = DataType.fromJson(Files.readString(sidecar)).asInstanceOf[StructType]
+    val df = spark.read.schema(schema).parquet(dir)
     if (df.columns.contains("p_bucket")) df.drop("p_bucket") else df
   }
 
   /** Union of per-directory reads. Tier directories of one hybrid table can
    * differ in PHYSICAL layout — a bucketed tier has `p_bucket=N/`
-   * partition dirs, while snapshots committed before the schema sidecar
-   * wrote zero-row bucketed tables flat — and a single multi-path
-   * `read.parquet(dirs…)` rejects that mix at partition inference. Reading
-   * each directory on its own and unioning keeps the scan shape identical
-   * (a union of file scans) while making the layouts independent. */
+   * partition dirs, while a zero-row bucketed write has none — and a
+   * single multi-path `read.parquet(dirs…)` may reject that mix at
+   * partition inference. Reading each directory on its own and unioning
+   * keeps the scan shape identical (a union of file scans) while making
+   * the layouts independent. */
   private def readUnion(spark: SparkSession, dirs: Seq[String]): DataFrame =
     dirs.map(readDir(spark, _)).reduce(_.unionByName(_))
 }

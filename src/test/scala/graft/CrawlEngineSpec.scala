@@ -189,7 +189,11 @@ class CrawlEngineSpec extends AnyFunSuite {
         "run" -> (() => runEngine(root)),
         "statusSummary" -> (() => Crawler.statusSummary(spark, root)),
         "recentlyAdded" -> (() => Crawler.recentlyAdded(spark, root)),
-        "resetFailures" -> (() => Crawler.resetFailures(spark, root, cfg)))
+        "resetFailures" -> (() => Crawler.resetFailures(spark, root, cfg)),
+        "getPage" -> (() => Crawler.getPage(spark, root, "http://nowhere.test/")),
+        "searchStore" -> (() => Crawler.searchStore(spark, root, "page")),
+        "workerStats" -> (() => Crawler.workerStats(spark, root)),
+        "indexStats" -> (() => Crawler.indexStats(spark, root)))
       calls.foreach { case (name, call) =>
         val e = intercept[IllegalStateException](call())
         assert(e.getMessage.contains(s"round $r:") && e.getMessage.contains(what),

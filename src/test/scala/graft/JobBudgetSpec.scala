@@ -28,6 +28,11 @@ class JobBudgetSpec extends AnyFunSuite {
    * dispatch, not before it). */
   val ResumeJobs = 1
 
+  /** Jobs of `resetFailures` on the eight-round crawl's state, in requeue
+   * mode and in forget mode. */
+  val ResetRequeueJobs = 18
+  val ResetForgetJobs = 11
+
   test("jobs per committed crawl round stay within the pinned budget") {
     import spark.implicits._
     val nDocs = 400L
@@ -74,5 +79,36 @@ class JobBudgetSpec extends AnyFunSuite {
     assert(summary.rounds == 2 && summary.stats.isEmpty)
     info(s"jobs before the first round of a resume: $jobs")
     assert(jobs <= ResumeJobs, s"a resume launched $jobs jobs before its first round")
+  }
+
+  test("a reset launches a pinned number of jobs in either mode") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val nDocs = 400L
+    val cfg = CrawlConfig(
+      maxDepth = 3, maxPagesPerDomain = 25, respectRobots = true,
+      defaultCrawlDelayS = 1.0, maxRetries = 3, roundSeconds = 5.0)
+    val crawled = Files.createTempDirectory("graft-job-budget-reset").resolve("root")
+    Crawler.run(spark, CorpusGen.docs(spark, nDocs), CorpusGen.seeds(nDocs, 3),
+      CorpusGen.policies(nDocs, cfg.defaultCrawlDelayS, cfg.maxPagesPerDomain).toDS(),
+      cfg, crawled.toString, maxRounds = 8)
+    // each mode resets its own copy of the same committed state
+    def copy(tag: String): String = {
+      val root = Files.createTempDirectory(s"graft-job-budget-$tag").resolve("root")
+      scala.util.Using.resource(Files.walk(crawled)) { paths =>
+        paths.iterator().asScala.foreach(p =>
+          Files.copy(p, root.resolve(crawled.relativize(p).toString)))
+      }
+      root.toString
+    }
+    val (requeued, requeueJobs) = JobCounter.count(spark.sparkContext)(
+      Crawler.resetFailures(spark, copy("requeue"), cfg))
+    val (forgotten, forgetJobs) = JobCounter.count(spark.sparkContext)(
+      Crawler.resetFailures(spark, copy("forget"), cfg, forget = true))
+    assert(requeued > 0 && forgotten >= requeued, s"reopened $requeued and $forgotten urls")
+    val report = s"reset jobs: requeue $requeueJobs, forget $forgetJobs"
+    info(report)
+    assert(requeueJobs <= ResetRequeueJobs, report)
+    assert(forgetJobs <= ResetForgetJobs, report)
   }
 }

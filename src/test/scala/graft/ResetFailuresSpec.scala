@@ -40,6 +40,29 @@ class ResetFailuresSpec extends AnyFunSuite {
       .select("url").collect().map(_.getString(0)).toSet
   }
 
+  /** The latest commit's stamps agree with its tables: `frontierSize` is
+   * the live frontier's row count, `seenSize` the seen set's, `hostRows`
+   * the `hosts` table's, and `nextSeq` (the last seq assigned) is at least
+   * every seq in the raw frontier. */
+  def assertStampsMatchTables(root: String): Unit = {
+    val snap = new SnapshotTable(root)
+    val r = snap.latestRound.get
+    val m = snap.meta(r)
+    def stamp(k: String): Long = m(k).toLong
+    val hosts = snap.loadReplaced(spark, "hosts", r)
+    val frontier = snap.loadHybrid(spark, "frontier", r)
+    val counts = Seq(
+      "frontierSize" -> Crawler.liveRows(frontier, hosts).count(),
+      "seenSize" -> snap.loadHybrid(spark, "seen", r).count(),
+      "hostRows" -> hosts.count())
+    counts.foreach { case (k, rows) =>
+      assert(stamp(k) == rows, s"round $r: stamp $k is ${stamp(k)}, the table holds $rows rows")
+    }
+    val maxSeq = frontier.agg(max("seq")).collect()(0)
+    assert(maxSeq.isNullAt(0) || maxSeq.getLong(0) <= stamp("nextSeq"),
+      s"round $r: nextSeq ${stamp("nextSeq")} is below the frontier's max seq ${maxSeq.get(0)}")
+  }
+
   def statusRows(root: String): Seq[Crawler.RoundStats] =
     Crawler.status(spark, root).collect().map(r => Crawler.RoundStats(r.getInt(0),
       r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6),
@@ -74,11 +97,13 @@ class ResetFailuresSpec extends AnyFunSuite {
   test("requeue mode: failed URLs re-enter the queue, are re-dispatched, and re-fail") {
     val root = Files.createTempDirectory("graft-rf-rq").toString
     val crawled = runEngine(root)
+    assertStampsMatchTables(root)
     val failed0 = failedUrls(root)
     assert(failed0.nonEmpty, "corpus must produce terminal failures")
 
     val reopened = Crawler.resetFailures(spark, root, cfg)
     assert(reopened == failed0.size)
+    assertStampsMatchTables(root)
     // failed table is cleared by the reset commit
     assert(failedUrls(root).isEmpty)
 
@@ -110,6 +135,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     assert(failedUrls(root) == failed0)
     // idempotent when nothing failed after reset+refail+reset+...
     assert(Crawler.resetFailures(spark, root, cfg) == failed0.size)
+    assertStampsMatchTables(root)
   }
 
   test("forget mode with cuckoo: failed URLs leave seen and are re-admitted organically") {
@@ -125,6 +151,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft-rf-fg").toString
     // stop early so the frontier still has entries when we forget
     runEngine(root, c, maxRounds = 3, sketchThreshold = 0L)
+    assertStampsMatchTables(root)
     val snap = new SnapshotTable(root)
     val failed0 = failedUrls(root)
     assert(failed0.nonEmpty, "need terminal failures in the first 3 rounds")
@@ -134,6 +161,7 @@ class ResetFailuresSpec extends AnyFunSuite {
 
     val reopened = Crawler.resetFailures(spark, root, c, forget = true)
     assert(reopened == failed0.size)
+    assertStampsMatchTables(root)
     val rAfter = snap.latestRound.get
     val seenAfter = snap.loadHybrid(spark, "seen", rAfter)
       .collect().map(_.getString(0)).toSet

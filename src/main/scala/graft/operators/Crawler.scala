@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.LongType
  *            →(depth gate F6, allowed-domains F5, seen anti-join D1/D2,
  *              per-host cap window F7)→ admitted
  *            → new frontier (+ timeout requeues T2/T3), committed as one
- *              snapshot per round (T6) with fetch_log lineage; the round's
+ *              snapshot per round (T6) with fetches lineage; the round's
  *              counters are stamps in its manifest.
  *
  * Replaces the reference's master/crawler/indexer processes + Pub/Sub +
@@ -66,21 +66,23 @@ object Crawler {
   val SaltBuckets = 16
 
   // Append-table schemas, for schema-correct empty reads of tables no
-  // round has written yet (a crawl whose every seed 404'd creates no
-  // pages/postings/doc_store directories at all — a legitimate state the
-  // read projections must serve, not an error).
-  private[operators] val PostingsDdl =
+  // round has written yet (a crawl that never fetched a page names no
+  // postings — a legitimate state the read projections must serve, not an
+  // error).
+  private val PostingsDdl =
     "term string, url string, weight double, title string, round int"
-  private[operators] val DocStoreDdl = "round int, url string, title string, text string"
-  private val PagesDdl =
-    "round int, url string, host string, raw string, content_type string"
-  private val FetchLogDdl = "round int, url string, host string, depth int, " +
-    "seq bigint, status string, part_id int, error string, links_found int"
+  private val FetchesDdl = "round int, url string, host string, depth int, " +
+    "seq bigint, status string, part_id int, error string, links_found int, " +
+    "title string, text string, raw string, content_type string"
 
-  /** The `fetch_log` errors that end a URL's crawl (CrawlState.failed,
+  /** The `fetches` errors that end a URL's crawl (CrawlState.failed,
    * gcloud_master.py:197-207): the rows [[resetFailures]] re-opens. */
   private val TerminalErrors =
     Seq("http_404", "robots_disallowed", "quarantined_host", "retries_exhausted")
+
+  /** The statuses of a completed fetch: the `fetches` rows that hold a
+   * page (the reference's `completed` set). */
+  private val Completed = Seq("ok", "ok_non_html")
 
   case class RoundStats(
       round: Int, dispatched: Long, completed: Long, failed: Long,
@@ -310,33 +312,28 @@ object Crawler {
       .drop("cnt", "prior")
   }
 
-  /** Bounded wait for an Observation's metrics on a DEDICATED DAEMON
-   * thread (Await does not cancel an abandoned future — on the global pool
-   * it would pin a pool thread forever). The observed write has always
-   * finished before callers wait, so this resolves promptly; any failure
-   * (listener never fired) degrades to None so metrics can never hang or
-   * abort a commit whose table writes succeeded. */
-  private def awaitObs(o: Observation, seconds: Int): Option[Map[String, Any]] =
+  /** The counts observed on a checkpoint or write that already ran, so
+   * they arrive promptly. The wait runs on a DEDICATED DAEMON thread
+   * (Await does not cancel an abandoned future — on the global pool it
+   * would pin a pool thread forever) and is bounded. These counts drive
+   * nextSeq, frontierSize and the commit's stamps, so a missing
+   * observation never falls back: it is an engine fault and fails the
+   * round, naming it and the count. */
+  private def observedCounts(o: Observation, round: Int,
+                             what: String): Map[String, Long] =
     try {
       val p = scala.concurrent.Promise[Map[String, Any]]()
       val t = new Thread(() => p.tryComplete(scala.util.Try(o.get)), "graft-obs-wait")
       t.setDaemon(true)
       t.start()
-      Some(scala.concurrent.Await.result(p.future,
-        scala.concurrent.duration.Duration(seconds, "s")))
-    } catch { case scala.util.control.NonFatal(_) => None }
+      scala.concurrent.Await.result(p.future, scala.concurrent.duration.Duration(60, "s"))
+        .map { case (k, v) => k -> v.asInstanceOf[Long] }
+    } catch {
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"round $round: observed count '$what' is missing", e)
+    }
 
-  /** A round count observed on a checkpoint that already ran. These
-   * counts drive nextSeq and frontierSize, so unlike [[awaitObs]]'s
-   * callers a missing observation never falls back: it fails the round,
-   * naming it and the count. */
-  private def observedCounts(o: Observation, round: Int,
-                             what: String): Map[String, Long] =
-    awaitObs(o, 60).map(_.map { case (k, v) => k -> v.asInstanceOf[Long] })
-      .getOrElse(throw new IllegalStateException(
-        s"round $round: observed count '$what' is missing"))
-
-  /** `df` observed for its row count (see [[checkpointed]], [[rowsOr]]). */
+  /** `df` observed for its row count (see [[checkpointed]], [[commitState]]). */
   private def countObs(df: DataFrame): (DataFrame, Observation) = {
     val o = new Observation()
     (df.observe(o, count(lit(1)).as("n")), o)
@@ -350,11 +347,6 @@ object Crawler {
     val cp = observed.localCheckpoint(true)
     (cp, observedCounts(o, round, what)("n"))
   }
-
-  /** Row count observed with [[countObs]] on a write that already ran, or
-   * `fallback` should the observation not arrive (see [[awaitObs]]). */
-  private def rowsOr(o: Observation, fallback: Long): Long =
-    awaitObs(o, 10).flatMap(_.get("n").map(_.asInstanceOf[Long])).getOrElse(fallback)
 
   /** One per-host delta row for each row of `rows`: `v` in column `c` of
    * the `hosts` table, nothing in the others (see [[plusHosts]]). */
@@ -385,8 +377,9 @@ object Crawler {
     "frontierDeadRows", "frontierTiers", "hostRows")
 
   /** The one snapshot format the engine reads: an absolute-rank LSM
-   * frontier, round counters as stamps, failures read from `fetch_log`. */
-  private val SnapshotFormat = "2"
+   * frontier, round counters as stamps, and one `fetches` table that holds
+   * every fetch's outcome, page and text. */
+  private val SnapshotFormat = "3"
 
   /** A crawl round's counters as stamps, by field name; a reset commit
    * stamps none (see [[roundStats]]). */
@@ -419,14 +412,19 @@ object Crawler {
     m
   }
 
-  /** The seen sketch committed with round `r`. A missing or unreadable
-   * blob is rebuilt from `seen`: the sketch is reconstructible state, so
-   * it never forfeits a resume or a reset. */
-  private def loadSketch(snap: SnapshotTable, r: Int, seen: DataFrame,
-                         cfg: CrawlConfig): SeenSketch =
-    snap.loadBlob("seen_sketch", r)
-      .flatMap(b => scala.util.Try(SeenSketch.deserialize(b)).toOption)
-      .getOrElse(SeenSketch.build(seen, "url", cfg.seenSketch, cfg.sketchCapacity))
+  /** The seen sketch committed with round `r`. Every commit writes it
+   * before its manifest rename, so a missing or unreadable blob is a
+   * damaged snapshot: it fails, naming the blob. */
+  private def loadSketch(snap: SnapshotTable, r: Int): SeenSketch = {
+    val path = snap.blobPath("seen_sketch", r)
+    val bytes = snap.loadBlob("seen_sketch", r).getOrElse(
+      throw new IllegalStateException(s"round $r: seen sketch $path is missing"))
+    try SeenSketch.deserialize(bytes)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"round $r: seen sketch $path is unreadable", e)
+    }
+  }
 
   /** Live rows of a RAW (absolute-rank) frontier view: a row is live iff
    * its absolute enqueue rank lies past the host's dispatch total —
@@ -573,9 +571,9 @@ object Crawler {
                    sketch: SeenSketch): RoundState = {
     val m = roundMeta(snap, r)
     def stamp(k: String): Long = m(k).toLong
-    val frontier = snap.loadHybrid(spark, "frontier", r)
+    val frontier = snap.load(spark, "frontier", r)
     RoundState(r + 1, stamp("nextSeq"), stamp("frontierSize"), stamp("seenSize"),
-      frontier, snap.loadReplaced(spark, "hosts", r), stamp("hostRows"),
+      frontier, snap.load(spark, "hosts", r), stamp("hostRows"),
       stamp("frontierDeadRows"), stamp("frontierTiers").toInt, seen, sketch,
       frontier.limit(0), 0L)
   }
@@ -773,11 +771,11 @@ object Crawler {
       // the round's counters, observed on this checkpoint (no job of their own)
       .observe(resultsObs, count(lit(1)).as("dispatched"),
         count(when(col("status") === "ok", 1)).as("ok"),
-        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
+        count(when(col("status").isin(Completed: _*), 1)).as("completed"),
         count(when(col("error").isin(TerminalErrors: _*), 1)).as("failed"),
         count(when(col("error") === "fetch_timeout", 1)).as("requeued"),
         count(when(col("error") === "retries_exhausted", 1)).as("exhausted"))
-      .localCheckpoint(true) // parse once; reused by links/doc_store/log
+      .localCheckpoint(true) // parse once; reused by links, fetches and postings
     (results, observedCounts(resultsObs, st.round, "results by status"))
   }
 
@@ -897,40 +895,36 @@ object Crawler {
         hostDelta(results.where(col("error") === "retries_exhausted"),
           "quarantined", lit(true))): _*)
 
-    // ---- lineage + docs-for-indexing (S7/S9: fetch_log + doc_store).
-    // fetch_log is the one record of each fetch's outcome (worker stats,
-    // reset's failures). part_id records which executor partition
-    // fetched/extracted the row (lineage only — never ordering).
-    val fetchLog = results.select(
+    // ---- the fetch record (S6/S7/S9, gcloud_crawler.py:555-590): one row
+    // per dispatched URL, the one record of each fetch's outcome (worker
+    // stats, reset's failures), with the page's title and text for
+    // indexing and snippets (null unless `ok`) and its raw body (null
+    // unless completed). part_id records which executor partition
+    // fetched/extracted the row (lineage only — never ordering). Written
+    // UNBUCKETED, straight from the checkpointed results — raw bodies are
+    // the round's biggest payload and a bucketing repartition would shuffle
+    // all of them every round; the point lookup (J6) still prunes via
+    // parquet min/max footer stats on the url column, and parquet's column
+    // pruning keeps the raw bodies out of every other reader.
+    val fetches = results.select(
       lit(round).as("round"), col("url"), col("host"), col("depth"),
       col("seq"), col("status"), spark_partition_id().as("part_id"), col("error"),
       when(col("status") === "ok",
         size(filter(col("spans"), s => s("kind") === "link")))
-        .otherwise(lit(0)).as("links_found"))
-
-    val docStore = results.where(col("status") === "ok").select(
-      lit(round).as("round"), col("url"),
-      coalesce(element_at(
+        .otherwise(lit(0)).as("links_found"),
+      when(col("status") === "ok", coalesce(element_at(
         transform(filter(col("spans"), s => s("kind") === "title"), s => s("text")), 1),
-        lit("")).as("title"),
-      concat_ws(" ", transform(
-        filter(col("spans"), s => s("text") =!= ""), s => s("text"))).as("text"))
-
-    // ---- raw-page store (S6, gcloud_crawler.py:555-590): every
-    // successfully fetched page keeps its raw body. Written UNBUCKETED,
-    // straight from the checkpointed results — raw bodies are the round's
-    // biggest payload and a bucketing repartition would shuffle all of
-    // them every round; the point lookup (J6) still prunes via parquet
-    // min/max footer stats on the url column.
-    val pages = results.where(col("status").isin("ok", "ok_non_html")).select(
-      lit(round).as("round"), col("url"), col("host"),
-      col("raw"), col("content_type"))
+        lit(""))).as("title"),
+      when(col("status") === "ok", concat_ws(" ", transform(
+        filter(col("spans"), s => s("text") =!= ""), s => s("text")))).as("text"),
+      when(col("status").isin(Completed: _*), col("raw")).as("raw"),
+      when(col("status").isin(Completed: _*), col("content_type")).as("content_type"))
 
     // ---- incremental inverted index (T8/S9, gcloud_indexer.py:43-62,
     // 356-366): postings for THIS round's docs only — idempotent on
     // (term, url) globally because seen-dedup admits each url once ever.
-    val postingsRows = SearchIndex.postings(
-      docStore.select("url", "title", "text")).withColumn("round", lit(round))
+    val postingsRows = SearchIndex.postings(fetches.where(col("status") === "ok")
+      .select("url", "title", "text")).withColumn("round", lit(round))
 
     // ---- round counters (CrawlState sizes, gcloud_master.py:686-688),
     // stamped in the SAME atomic manifest, so /status projections (§3.3)
@@ -951,48 +945,39 @@ object Crawler {
     val rs = RoundStats(round, nDispatched, nCompleted, n("failed"),
       n("requeued"), nAdds, next.frontierSize, next.seenSize)
 
-    val appended = scala.collection.mutable.Map.empty[String, DataFrame]
-    if (nAdmitted > 0 || st.pendingRows > 0)
-      appended += "seen" -> st.pending.select("url").unionByName(admitted.select("url"))
-    if (nDispatched > 0) appended += "fetch_log" -> fetchLog
-    if (nCompleted > 0) appended += "pages" -> pages
     // index-size stats (A4, gcloud_indexer.py:566-573): approx distinct
     // terms/docs of this round's postings DELTA, observed during the
     // postings write itself (zero extra pass) and recorded in the same
     // atomic manifest; Crawler.indexStats gives the exact cumulative
     // numbers on demand.
-    val idxObs = if (n("ok") > 0) Some(new Observation()) else None
-    idxObs.foreach { o =>
-      appended += "doc_store" -> docStore
-      appended += "postings" -> postingsRows.observe(o,
+    val idxObs = Option.when(n("ok") > 0)(new Observation())
+    val appended = Map.empty[String, DataFrame] ++
+      Option.when(nAdmitted > 0 || st.pendingRows > 0)(
+        "seen" -> st.pending.select("url").unionByName(admitted.select("url"))) ++
+      Option.when(nDispatched > 0)("fetches" -> fetches) ++
+      idxObs.map(o => "postings" -> postingsRows.observe(o,
         approx_count_distinct(col("term")).as("terms"),
         approx_count_distinct(col("url")).as("docs"),
-        count(lit(1)).as("postings"))
-    }
+        count(lit(1)).as("postings")))
     // every per-host delta comes from dispatched or injected rows, so
     // without either `hosts` is unchanged; round 0 writes it
     commitState(ctx.spark, ctx.snap, next,
       hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0,
-      counters = Some(rs), appended = appended.toMap,
-      // index stats from the observed postings write (see awaitObs): any
-      // failure degrades to stats-less meta — metrics must never abort a
-      // commit whose table writes succeeded
-      metaLate = () => idxObs.flatMap(o => awaitObs(o, 60)).map(m =>
-        Map("idx_new_terms_approx" -> m("terms").toString,
-          "idx_new_docs_approx" -> m("docs").toString,
-          "idx_new_postings" -> m("postings").toString))
-        .getOrElse(Map.empty[String, String]))
+      counters = Some(rs), appended = appended,
+      metaLate = () => idxObs.map(o => observedCounts(o, round, "postings written"))
+        .map(m => Map("idx_new_terms_approx" -> m("terms"), "idx_new_docs_approx" -> m("docs"),
+          "idx_new_postings" -> m("postings")).map { case (k, v) => k -> v.toString })
+        .getOrElse(Map.empty))
     rs
   }
 
   /** Commit state `st` as round `st.round` (T6), in one atomic manifest:
    * the one write path of a crawl state, for crawl rounds and resets alike.
    * Per-round write cost tracks what CHANGED, not accumulated table sizes:
-   *  - `hosts` is replaced, or CARRIED when `hostsChanged` is false: the
-   *    manifest points at the round that last wrote it, no data moves.
-   *    Its row count is observed during the write and stamped for the
-   *    next round's broadcast gates (`st.hostRows` is the fallback
-   *    over-bound, so the gates never under-estimate their build sides).
+   *  - `hosts` is replaced when `hostsChanged`, and otherwise not named:
+   *    the commit leaves it as it was, no data moves. Its row count is
+   *    observed during the write and stamped for the next round's
+   *    broadcast gates.
    *  - the FRONTIER is an LSM hybrid, physically host-hash bucketed (the
    *    rule's `bucket(N, host_hash)` partitioned priority frontier):
    *    `st.pending` appends as one delta tier, and the base is rewritten
@@ -1004,7 +989,7 @@ object Crawler {
    *    count what the stored frontier holds before this commit.
    *  - `replaced` and `appended` are the other tables written: `seen`
    *    appends its new urls, is replaced, or is left as it is, and a
-   *    crawl round appends its log tables.
+   *    crawl round appends its `fetches` and `postings`.
    *  - the meta stamps every [[StampKeys]] value of the committed state,
    *    the `counters` when present, and `metaLate`'s values; the blob is
    *    `st.sketch`.
@@ -1033,9 +1018,8 @@ object Crawler {
         counters.map(counterStamps).getOrElse(Map.empty) + ("snapshotFormat" -> SnapshotFormat),
       blobs = Map("seen_sketch" -> SeenSketch.serialize(st.sketch)),
       bucketed = Map("frontier" -> pmod(xxhash64(col("host")), lit(SnapshotTable.Buckets))),
-      carried = if (hostsChanged) Map.empty else Map("hosts" -> (r - 1)),
-      metaLate = () => Map("hostRows" -> (
-        if (hostsChanged) rowsOr(hostsObs, st.hostRows) else st.hostRows).toString) ++ metaLate())
+      metaLate = () => Map("hostRows" -> (if (hostsChanged)
+        observedCounts(hostsObs, r, "hosts written")("n") else st.hostRows).toString) ++ metaLate())
   }
 
   /** Run the crawl to completion (or maxRounds), committing one snapshot
@@ -1047,8 +1031,8 @@ object Crawler {
    * would duplicate result rows, inflating the arithmetic round counters
    * (nDispatched, frontierSize — potentially driving the loop guard
    * negative) and double-indexing the page. Validate untrusted corpora
-   * with [[duplicateDocIds]] before crawling; the engine does not pay a
-   * per-round distinct over the (100 TB) docs table to re-check it.
+   * before crawling; the engine does not pay a per-round distinct over
+   * the (100 TB) docs table to re-check it.
    *
    * `sketchThreshold`: seen-set size at which the broadcast sketch
    * prefilter engages in the admission anti-join (it is MAINTAINED from
@@ -1069,15 +1053,13 @@ object Crawler {
           stopRequested: () => Boolean = () => false): CrawlSummary = {
     val snap = new SnapshotTable(root)
     val ctx = RunCtx(spark, snap, docs.toDF(), policies.toDF(), cfg, sketchThreshold)
-    // restore (gcloud_master.py:274-318) or seed (:533-540). `seen` is a
-    // HYBRID table: O(admitted) appended per round (a 10^10 seen set must
-    // never be rewritten per round), with replace commits only at
-    // compactions/resets (SnapshotTable.loadHybrid); in memory it is the
-    // folded LSM.
+    // restore (gcloud_master.py:274-318) or seed (:533-540). `seen` is
+    // appended O(admitted) per round (a 10^10 seen set must never be
+    // rewritten per round), with replace commits only at forget resets;
+    // in memory it is the folded LSM.
     var state = snap.latestRound match {
       case Some(r) =>
-        val seen = snap.loadHybrid(spark, "seen", r)
-        load(spark, snap, r, SeenLsm(foldSeen(seen)), loadSketch(snap, r, seen, cfg))
+        load(spark, snap, r, SeenLsm(foldSeen(snap.load(spark, "seen", r))), loadSketch(snap, r))
       case None => inject(ctx, emptyState(spark, cfg), seedUrls)
     }
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
@@ -1098,13 +1080,6 @@ object Crawler {
     }
     CrawlSummary(state.round, stats.toSeq)
   }
-
-  /** doc_id-uniqueness validation for untrusted corpora (see run()'s
-   * invariant note): number of doc_ids appearing more than once. One
-   * hash-aggregation pass; run it once at ingestion, not per round. */
-  def duplicateDocIds(docs: Dataset[Doc]): Long =
-    docs.toDF().groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .where(col("n") > 1).count()
 
   /** The snapshot store at `root`, its latest committed round and that
    * round's meta, format-checked ([[roundMeta]]): every read of a
@@ -1142,7 +1117,7 @@ object Crawler {
    * ([[indexStatsHistory]]) observed for free during each postings write. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
     val (snap, r, _) = committed(root)
-    snap.loadAppendedOr(spark, "postings", r, PostingsDdl).agg(
+    snap.loadOr(spark, "postings", r, PostingsDdl).agg(
       countDistinct(col("term")).as("distinct_terms"),
       countDistinct(col("url")).as("indexed_docs"),
       count(lit(1)).as("postings_rows"))
@@ -1198,7 +1173,7 @@ object Crawler {
    * seq values (seq is the global admission order). */
   def recentlyAdded(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
     val (snap, r, _) = committed(root)
-    liveFrontier(spark, snap, r, snap.loadReplaced(spark, "hosts", r))
+    liveFrontier(spark, snap, r, snap.load(spark, "hosts", r))
       .orderBy(desc("seq")).limit(n)
       .select("url", "host", "depth", "seq")
   }
@@ -1208,14 +1183,35 @@ object Crawler {
    * predicate. */
   private def liveFrontier(spark: SparkSession, snap: SnapshotTable, r: Int,
                            hosts: DataFrame): DataFrame =
-    liveRows(snap.loadHybrid(spark, "frontier", r), hosts)
+    liveRows(snap.load(spark, "frontier", r), hosts)
+
+  /** `fetches` at committed round `r`: every fetch of the crawl, one row
+   * per dispatched URL per round (see [[commitRound]]). */
+  private[operators] def fetches(spark: SparkSession, snap: SnapshotTable, r: Int): DataFrame =
+    snap.loadOr(spark, "fetches", r, FetchesDdl)
+
+  /** The stored pages at committed round `r`: the completed fetches. */
+  private def pages(spark: SparkSession, snap: SnapshotTable, r: Int): DataFrame =
+    fetches(spark, snap, r).where(col("status").isin(Completed: _*))
+
+  /** The (url, text) of every `ok` page at committed round `r`, which the
+   * search snippets join for their result rows. Only `ok` rows: a URL's
+   * earlier timeout row would duplicate a result. */
+  private[operators] def pageTexts(spark: SparkSession, snap: SnapshotTable,
+                                   r: Int): DataFrame =
+    fetches(spark, snap, r).where(col("status") === "ok").select("url", "text")
+
+  /** The persisted postings at committed round `r`. */
+  private[operators] def postings(spark: SparkSession, snap: SnapshotTable,
+                                  r: Int): DataFrame =
+    snap.loadOr(spark, "postings", r, PostingsDdl).select("term", "url", "weight", "title")
 
   /** Raw-page point lookup (J6, /get_html — templates/app.py:807-904):
-   * exact url key against the pages store; the equality predicate reaches
+   * exact url key against the stored pages; the equality predicate reaches
    * the parquet scan (footer min/max pruning). */
   def getPage(spark: SparkSession, root: String, url: String): DataFrame = {
     val (snap, r, _) = committed(root)
-    snap.loadAppendedOr(spark, "pages", r, PagesDdl)
+    pages(spark, snap, r)
       .where(col("url") === url)
       .select("round", "url", "content_type", "raw")
   }
@@ -1225,28 +1221,23 @@ object Crawler {
   def checkUrl(spark: SparkSession, root: String, url: String): DataFrame = {
     val (snap, r, _) = committed(root)
     val needle = url.replaceFirst("^https?://", "").stripSuffix("/")
-    val pages = snap.loadAppendedOr(spark, "pages", r, PagesDdl)
-      .select("round", "url", "content_type")
-    pages.where(col("url") === url).withColumn("match_kind", lit("exact"))
+    val stored = pages(spark, snap, r).select("round", "url", "content_type")
+    stored.where(col("url") === url).withColumn("match_kind", lit("exact"))
       .unionByName(
-        pages.where(col("url") =!= url && col("url").contains(needle))
+        stored.where(col("url") =!= url && col("url").contains(needle))
           .withColumn("match_kind", lit("fuzzy")))
       .orderBy(col("match_kind"), col("url"))
   }
 
   /** Search the PERSISTED postings table (T8/S9 — no index recompute:
    * gcloud_indexer.py:271-327 snapshots, :356-366 appends) and attach a
-   * leading-text snippet (C8, :340) by joining doc_store for the k result
-   * rows only. */
+   * leading-text snippet (C8, :340) by joining the page texts for the k
+   * result rows only. */
   def searchStore(spark: SparkSession, root: String, query: String,
                   field: String = "content", k: Int = 10): DataFrame = {
     val (snap, r, _) = committed(root)
-    val postings = snap.loadAppendedOr(spark, "postings", r, PostingsDdl)
-      .select("term", "url", "weight", "title")
-    val top = SearchIndex.search(postings, query, field, k)
-    val docs = snap.loadAppendedOr(spark, "doc_store", r, DocStoreDdl)
-      .select("url", "text")
-    top.join(docs, Seq("url"), "left_outer")
+    val top = SearchIndex.search(postings(spark, snap, r), query, field, k)
+    top.join(pageTexts(spark, snap, r), Seq("url"), "left_outer")
       .withColumn("snippet",
         concat(substring(coalesce(col("text"), lit("")), 1, 200), lit("...")))
       .select("url", "score", "title", "snippet")
@@ -1255,14 +1246,14 @@ object Crawler {
 
   /** Per-worker (executor partition) processed/completed counters with the
    * round as heartbeat clock (A4/T7, gcloud_master.py:702-725): a
-   * group-by of `fetch_log` (wall-clock-free liveness: a worker partition
+   * group-by of `fetches` (wall-clock-free liveness: a worker partition
    * that appears in round r was alive in round r). */
   def workerStats(spark: SparkSession, root: String): DataFrame = {
     val (snap, r, _) = committed(root)
-    snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
+    fetches(spark, snap, r)
       .groupBy("part_id")
       .agg(count(lit(1)).as("processed"),
-        count(when(col("status").isin("ok", "ok_non_html"), 1)).as("completed"),
+        count(when(col("status").isin(Completed: _*), 1)).as("completed"),
         sum("links_found").as("links_found"), max("round").as("last_heartbeat_round"))
       .orderBy("part_id")
   }
@@ -1271,8 +1262,7 @@ object Crawler {
    * fetches in dispatch order. */
   def recentActivity(spark: SparkSession, root: String, n: Int = 5): DataFrame = {
     val (snap, r, _) = committed(root)
-    snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
-      .where(col("status").isin("ok", "ok_non_html"))
+    pages(spark, snap, r)
       .orderBy(desc("round"), desc("seq")).limit(n)
       .select("round", "url", "status")
   }
@@ -1285,7 +1275,7 @@ object Crawler {
    * the crawl's [[RoundState]]: read through [[load]], edited, and written
    * through [[commitState]] as a commit without counters.
    *
-   * The failed URLs are the `fetch_log` rows with a terminal error
+   * The failed URLs are the `fetches` rows with a terminal error
    * committed after the latest reset (the latest commit without counters).
    * Both modes clear the quarantine.
    *
@@ -1305,13 +1295,12 @@ object Crawler {
   def resetFailures(spark: SparkSession, root: String, cfg: CrawlConfig,
                     forget: Boolean = false): Long = {
     val (snap, r, _) = committed(root)
-    val seen = snap.loadHybrid(spark, "seen", r)
-    val st = load(spark, snap, r, SeenLsm(seen), loadSketch(snap, r, seen, cfg))
-    // each fetch_log directory holds one round, so the parquet reader
+    val st = load(spark, snap, r, SeenLsm(snap.load(spark, "seen", r)), loadSketch(snap, r))
+    // each fetches directory holds one round, so the parquet reader
     // skips the rounds up to the latest reset (-1: none) by footer stats
     val lastReset = (r to 0 by -1).find(i => roundStats(i, snap.meta(i)).isEmpty).getOrElse(-1)
     val (failed, n) = checkpointed(
-      snap.loadAppendedOr(spark, "fetch_log", r, FetchLogDdl)
+      fetches(spark, snap, r)
         .where(col("round") > lastReset && col("error").isin(TerminalErrors: _*))
         .groupBy("url")
         .agg(min(struct(col("seq"), col("host"), col("depth"))).as("m"))

@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
  */
 object SearchIndex {
 
-  /** doc_store(url, title, text) → postings(term, url, weight, title).
+  /** docs(url, title, text) → postings(term, url, weight, title).
    * Weight 2.0 for title tokens, 1.0 for body; title wins on overlap
    * (the reference indexes title first and appends body tokens only when
    * the url is not already posted for that term). */
-  def postings(docStore: DataFrame): DataFrame = {
+  def postings(docs: DataFrame): DataFrame = {
     // r6: one scan + one explode of the per-doc DISTINCT term union instead
     // of two explode branches unioned into a (term, url) groupBy SHUFFLE —
     // this runs once per crawl round (incremental index build), so the
@@ -33,7 +33,7 @@ object SearchIndex {
     // set — which is array_union(title-tokens, body-tokens) exploded with
     // an array_contains(title-tokens) weight; `first(title)` only ever saw
     // one url's (constant) title.
-    docStore.select(col("url"), col("title"),
+    docs.select(col("url"), col("title"),
         gf.tokenize(col("title")).as("tt_"),
         gf.tokenize(col("text")).as("bt_"))
       // coalesce: a null text column must only drop the BODY terms (the

@@ -71,7 +71,7 @@ class SearchService(val root: String) {
    * window keeps each request's top k. Scoring/ordering semantics are
    * identical to [[SearchIndex.search]] / [[Crawler.searchStore]]
    * (duplicate query terms score twice; ties break url-ascending; snippet
-   * joined from doc_store for the k result rows only). Returns the number
+   * joined from the page texts for the k result rows only). Returns the number
    * of requests processed; a request whose query matches nothing produces
    * no response rows and remains pending, exactly as before. */
   def processPending(spark: SparkSession, crawlRoot: String): Long = {
@@ -81,8 +81,7 @@ class SearchService(val root: String) {
     val nTodo = todo.count()
     if (nTodo == 0) return 0L
     val (snap, r, _) = Crawler.committed(crawlRoot)
-    val postings = snap.loadAppendedOr(spark, "postings", r, Crawler.PostingsDdl)
-      .select("term", "url", "weight", "title")
+    val postings = Crawler.postings(spark, snap, r)
 
     def scoredFor(field: String): DataFrame = {
       val qterms = todo.where(col("field") === field)
@@ -111,9 +110,7 @@ class SearchService(val root: String) {
     val ranked = scored.withColumn("rank", row_number().over(perReq).cast("long"))
       .join(broadcast(todo.select("req_id", "k")), Seq("req_id"))
       .where(col("rank") <= col("k"))
-    val docs = snap.loadAppendedOr(spark, "doc_store", r, Crawler.DocStoreDdl)
-      .select("url", "text")
-    ranked.join(docs, Seq("url"), "left_outer")
+    ranked.join(Crawler.pageTexts(spark, snap, r), Seq("url"), "left_outer")
       .withColumn("snippet",
         concat(substring(coalesce(col("text"), lit("")), 1, 200), lit("...")))
       .select("req_id", "rank", "url", "score", "title", "snippet")

@@ -16,17 +16,23 @@ import scala.jdk.CollectionConverters._
  * Layout:
  *   root/data/<table>/r00042/          parquet files for that round's version
  *   root/data/<table>/r00042/_schema.json   the directory's schema (see below)
- *   root/_manifests/r00042.json        { round, meta{...}, tables{name→path} }
+ *   root/blobs/<name>/r00042.bin       binary sidecars (the seen sketch)
+ *   root/_manifests/r00042.json        { round, meta{...}, kind{name→replace|append},
+ *                                        tables{name→path} }
  *
- * Three table kinds, by how a round's commit names them:
- *  - replaced (hosts, the per-host crawl state): the manifest points at
- *    one r<round> directory, possibly an earlier round's when the table
- *    is carried unchanged;
- *  - hybrid (frontier, seen): a replace base plus the append deltas
- *    committed after it ([[loadHybrid]]);
- *  - append (fetch_log, pages, doc_store, postings): one directory per
- *    round that wrote rows, read as the union of all rounds ≤ the loaded
- *    one.
+ * One load rule ([[load]]): a table at round r is the set of directories
+ * that the manifests of rounds ≤ r name for it, walking back from r to the
+ * latest commit that REPLACED it. A commit names only the tables it
+ * writes — a replace (a new base) or an append (one more directory on
+ * top) — and leaves every other table as it was. So a table written once
+ * and never again (`hosts` while no host changes), a replace base plus
+ * its append tiers (`frontier`, `seen`) and a table that only ever
+ * appends (`fetches`, `postings`) all read through the same walk. No
+ * directory is chosen by probing the disk: an orphan directory of a
+ * commit that never reached its manifest rename is invisible, even after
+ * a later commit of the same round number that does not rewrite it. The
+ * manifests of rounds [0, latestRound] must all exist; a missing one
+ * fails the load, naming it.
  *
  * Every directory a commit writes carries its schema in `_schema.json`
  * (Spark's file listing skips `_`-prefixed names), written before the
@@ -48,17 +54,13 @@ class SnapshotTable(val root: String) {
   private def rid(round: Int): String = f"r$round%05d"
 
   /**
-   * Commit one round. `carried` names replaced tables whose content is
-   * UNCHANGED since the given earlier round: no data is written — the
-   * manifest records a replace-kind entry pointing at the earlier round's
-   * directory (chains are flattened at commit time, so a table carried for
-   * 100 rounds still resolves in one hop). This is the Iceberg
-   * "re-manifest unchanged data files" move: per-round cost tracks what
-   * CHANGED, not the accumulated table sizes. `metaLate` is evaluated
-   * after the table writes but before the manifest rename — for metadata
-   * only observable once the writes ran (e.g. `Observation` metrics
-   * collected during a write), still inside the atomic commit. Meta keys
-   * and values containing `"` or `\` are rejected (see the class doc).
+   * Commit one round: `replaced` tables get a new base, `appended` tables
+   * one more directory, and every table the commit does not name keeps
+   * its state (see the class doc). `metaLate` is evaluated after the table
+   * writes but before the manifest rename — for metadata only observable
+   * once the writes ran (e.g. `Observation` metrics collected during a
+   * write), still inside the atomic commit. Meta keys and values
+   * containing `"` or `\` are rejected (see the class doc).
    */
   def commit(spark: SparkSession, round: Int,
              replaced: Map[String, DataFrame],
@@ -66,7 +68,6 @@ class SnapshotTable(val root: String) {
              meta: Map[String, String],
              blobs: Map[String, Array[Byte]] = Map.empty,
              bucketed: Map[String, org.apache.spark.sql.Column] = Map.empty,
-             carried: Map[String, Int] = Map.empty,
              metaLate: () => Map[String, String] = () => Map.empty): Unit = {
     SnapshotTable.checkMeta(meta)
     Files.createDirectories(manifestDir)
@@ -105,16 +106,12 @@ class SnapshotTable(val root: String) {
     // binary sidecars (e.g. the serialized seen-filter shards) are written
     // BEFORE the manifest rename, so a committed round always has them
     blobs.foreach { case (name, bytes) =>
-      val dir = Paths.get(root, "blobs", name)
-      Files.createDirectories(dir)
-      Files.write(dir.resolve(s"${rid(round)}.bin"), bytes)
+      val p = blobPath(name, round)
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes)
     }
-    val carriedPaths = carried.map { case (name, from) =>
-      name -> tables(from).getOrElse(name, s"data/$name/${rid(from)}")
-    }
-    val tablesJson = (all.keys.map(n => n -> s"data/$n/${rid(round)}") ++ carriedPaths)
-      .map { case (n, p) => s""""$n": "$p"""" }.mkString(",")
-    val kindJson = ((replaced.keys ++ carriedPaths.keys).map(n => s""""$n": "replace"""") ++
+    val tablesJson = all.keys.map(n => s""""$n": "data/$n/${rid(round)}"""").mkString(",")
+    val kindJson = (replaced.keys.map(n => s""""$n": "replace"""") ++
       appended.keys.map(n => s""""$n": "append"""")).mkString(",")
     val metaLateVals = metaLate()
     SnapshotTable.checkMeta(metaLateVals)
@@ -141,103 +138,68 @@ class SnapshotTable(val root: String) {
     if (rounds.isEmpty) None else Some(rounds.max)
   }
 
-  def meta(round: Int): Map[String, String] = {
-    val json = Files.readString(manifestDir.resolve(s"${rid(round)}.json"))
-    // manifest JSON is machine-written with string-only meta values
-    "\"([^\"]+)\": \"([^\"]*)\"".r.findAllMatchIn(
-      json.substring(json.indexOf("\"meta\""), json.indexOf("\"kind\""))
-    ).map(m => m.group(1) -> m.group(2)).toMap
+  /** Round `round`'s manifest, parsed once: its meta, and for each table
+   * it names the commit kind ("replace" | "append") and the root-relative
+   * directory. A missing manifest fails, naming it. */
+  private def manifest(round: Int): SnapshotTable.Manifest = {
+    val p = manifestDir.resolve(s"${rid(round)}.json")
+    if (!Files.exists(p)) throw new IllegalStateException(
+      s"snapshot $root has no manifest for round $round: $p is missing")
+    val json = Files.readString(p)
+    val Seq(m, k, t) = Seq("meta", "kind", "tables").map(s => json.indexOf(s""""$s""""))
+    // manifest JSON is machine-written with string-only values
+    def pairs(seg: String): Map[String, String] =
+      "\"([^\"]+)\": \"([^\"]*)\"".r.findAllMatchIn(seg)
+        .map(x => x.group(1) -> x.group(2)).toMap
+    SnapshotTable.Manifest(pairs(json.substring(m, k)), pairs(json.substring(k, t)),
+      pairs(json.substring(t)))
   }
+
+  def meta(round: Int): Map[String, String] = manifest(round).meta
 
   /** table → commit kind ("replace" | "append") recorded at that round. */
-  def kinds(round: Int): Map[String, String] = {
-    val json = Files.readString(manifestDir.resolve(s"${rid(round)}.json"))
-    val seg = json.substring(json.indexOf("\"kind\""), json.indexOf("\"tables\""))
-    "\"([^\"]+)\": \"([^\"]*)\"".r.findAllMatchIn(seg)
-      .map(m => m.group(1) -> m.group(2)).toMap.removed("kind")
+  def kinds(round: Int): Map[String, String] = manifest(round).kinds
+
+  /** Table `name` at `round`: the directories the manifests ≤ `round`
+   * name for it, back to its latest replace (see the class doc). A table
+   * no manifest names fails (see [[loadOr]]). */
+  def load(spark: SparkSession, name: String, round: Int): DataFrame = {
+    val d = dirs(name, round)
+    require(d.nonEmpty, s"no manifest at or before round $round names table $name")
+    readUnion(spark, d)
   }
 
-  /** table → root-relative data path recorded in that round's manifest
-   * (carried tables point at an EARLIER round's directory). */
-  def tables(round: Int): Map[String, String] = {
-    val p = manifestDir.resolve(s"${rid(round)}.json")
-    if (!Files.exists(p)) return Map.empty
-    val json = Files.readString(p)
-    val seg = json.substring(json.indexOf("\"tables\""))
-    "\"([^\"]+)\": \"([^\"]*)\"".r.findAllMatchIn(seg)
-      .map(m => m.group(1) -> m.group(2)).toMap.removed("tables")
+  /** [[load]], or an empty table with schema `ddl` when no manifest
+   * ≤ `round` names `name` — a legitimate state: a commit skips an empty
+   * append, so a crawl that never fetched a page names no `postings`. */
+  def loadOr(spark: SparkSession, name: String, round: Int, ddl: String): DataFrame = {
+    val d = dirs(name, round)
+    if (d.nonEmpty) readUnion(spark, d)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType.fromDDL(ddl))
   }
 
-  /**
-   * Hybrid table load (Iceberg-like): the table's state at `round` is the
-   * most recent REPLACE commit at or before it, plus every APPEND commit
-   * after that replace. Lets a monotonically-growing table (the URL-seen
-   * set) commit O(new rows) per round instead of rewriting O(table), while
-   * still supporting occasional compaction/shrink commits (reset-failures
-   * "forget" writes a replace). Rounds that do not mention the table
-   * contribute nothing.
-   */
-  def loadHybrid(spark: SparkSession, name: String, round: Int): DataFrame = {
-    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
-    var r = round
-    var done = false
-    while (r >= 0 && !done) {
-      val k = kinds(r).get(name)
-      if (k.isDefined) {
-        dirs += s"$root/${tables(r).getOrElse(name, s"data/$name/${rid(r)}")}"
-        if (k.contains("replace")) done = true
-      }
-      r -= 1
+  /** The directories of [[load]]'s rule, oldest first: walking back from
+   * `round`, every one a manifest names for `name`, up to and including
+   * the first replace. */
+  @scala.annotation.tailrec
+  private def dirs(name: String, round: Int, acc: List[String] = Nil): List[String] =
+    if (round < 0) acc
+    else {
+      val m = manifest(round)
+      val here = m.tables.get(name).map(p => s"$root/$p").toList ++ acc
+      if (m.kinds.get(name).contains("replace")) here else dirs(name, round - 1, here)
     }
-    require(dirs.nonEmpty, s"table $name has no commits at or before round $round")
-    readUnion(spark, dirs.distinct.toSeq)
-  }
 
-  /** Latest version of a replaced table at the given round — resolved
-   * through the manifest, so carried tables read the round that actually
-   * holds their data. */
-  def loadReplaced(spark: SparkSession, name: String, round: Int): DataFrame = {
-    val path = tables(round).getOrElse(name, s"data/$name/${rid(round)}")
-    readDir(spark, s"$root/$path")
-  }
+  /** Where [[commit]] writes the binary sidecar `name` of `round`. */
+  def blobPath(name: String, round: Int): Path =
+    Paths.get(root, "blobs", name, s"${rid(round)}.bin")
 
   /** Binary sidecar committed with the round, if any. */
   def loadBlob(name: String, round: Int): Option[Array[Byte]] = {
-    val p = Paths.get(root, "blobs", name, s"${rid(round)}.bin")
+    val p = blobPath(name, round)
     if (Files.exists(p)) Some(Files.readAllBytes(p)) else None
   }
-
-  /** Whether any round ≤ `round` appended data for the table. False is a
-   * legitimate state, not an error: empty appends are skipped at commit
-   * time, so a crawl that (say) never fetched a page has no postings/
-   * pages/doc_store directories at all. Read paths use this to return an
-   * empty schema-correct frame instead of failing. */
-  def hasAppends(name: String, round: Int): Boolean =
-    (0 to round).exists(r => Files.isDirectory(Paths.get(s"$root/data/$name/${rid(r)}")))
-
-  /** All appended versions of a table up to and including the round.
-   * Rounds that appended nothing write no directory (empty appends are
-   * skipped at commit time) and contribute nothing here. Check
-   * [[hasAppends]] first when "no round ever wrote this table" is a
-   * legitimate state for the caller (the require here guards against
-   * typo'd table names, not against empty tables). */
-  def loadAppended(spark: SparkSession, name: String, round: Int): DataFrame = {
-    val dirs = (0 to round).map(r => s"$root/data/$name/${rid(r)}")
-      .filter(d => Files.isDirectory(Paths.get(d)))
-    require(dirs.nonEmpty,
-      s"append table $name has no data at or before round $round " +
-        "(no round produced any rows for it)")
-    readUnion(spark, dirs)
-  }
-
-  /** [[loadAppended]] with a schema-carrying empty-frame fallback for
-   * tables no round has written yet (`ddl` is the table's schema). */
-  def loadAppendedOr(spark: SparkSession, name: String, round: Int,
-                     ddl: String): DataFrame =
-    if (hasAppends(name, round)) loadAppended(spark, name, round)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** One committed directory, read with its recorded schema (no inference
    * job); bucket partition columns are dropped. */
@@ -250,7 +212,7 @@ class SnapshotTable(val root: String) {
     if (df.columns.contains("p_bucket")) df.drop("p_bucket") else df
   }
 
-  /** Union of per-directory reads. Tier directories of one hybrid table can
+  /** Union of per-directory reads. Tier directories of one table can
    * differ in PHYSICAL layout — a bucketed tier has `p_bucket=N/`
    * partition dirs, while a zero-row bucketed write has none — and a
    * single multi-path `read.parquet(dirs…)` may reject that mix at
@@ -262,6 +224,10 @@ class SnapshotTable(val root: String) {
 }
 
 object SnapshotTable {
+  /** One parsed manifest (see [[SnapshotTable.manifest]]). */
+  private case class Manifest(meta: Map[String, String], kinds: Map[String, String],
+                              tables: Map[String, String])
+
   /** Physical bucket fan-out for bucketed tables. */
   val Buckets = 32
 
@@ -280,7 +246,7 @@ object SnapshotTable {
     }
 
   /** Bounded pool for concurrent commit writes (daemon threads: the pool
-   * must never keep a JVM alive). A crawl round commits up to 7 tables,
+   * must never keep a JVM alive). A crawl round commits up to 5 tables,
    * most of them a few hundred rows; 6 concurrent writes keep the cores
    * busy without queueing every write's job at once. The cluster-side
    * parallelism comes from Spark itself. */

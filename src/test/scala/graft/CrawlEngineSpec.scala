@@ -42,7 +42,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   def engineSchedule(root: String, lastRound: Int): Seq[(Int, String, String)] = {
     val snap = new SnapshotTable(root)
-    snap.loadAppended(spark, "fetch_log", lastRound)
+    snap.load(spark, "fetches", lastRound)
       .orderBy(col("round"), col("seq"))
       .select("round", "url", "status")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
@@ -50,7 +50,7 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   def engineSeen(root: String, lastRound: Int): Set[String] = {
     val snap = new SnapshotTable(root)
-    snap.loadHybrid(spark, "seen", lastRound)
+    snap.load(spark, "seen", lastRound)
       .collect().map(_.getString(0)).toSet
   }
 
@@ -74,19 +74,19 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(engineSeen(root, last) == oracleResult.seen.toSet)
 
     val snap = new SnapshotTable(root)
-    val byStatus = snap.loadAppended(spark, "fetch_log", last)
+    val byStatus = snap.load(spark, "fetches", last)
       .groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val oracleCompleted = oracleResult.completed.size
     assert(byStatus.getOrElse("ok", 0L) + byStatus.getOrElse("ok_non_html", 0L)
       == oracleCompleted)
 
-    val engineCounts = snap.loadReplaced(spark, "hosts", last).select("host", "cnt")
+    val engineCounts = snap.load(spark, "hosts", last).select("host", "cnt")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(engineCounts == oracleResult.hostCounts)
 
     // policy invariants observable in the lineage
-    val log = snap.loadAppended(spark, "fetch_log", last)
+    val log = snap.load(spark, "fetches", last)
     val disallowedHosts = policies.filter(!_.allow).map(_.host).toSet
     val robotsRows = log.where(col("status") === "skipped_robots")
       .select("host").collect().map(_.getString(0)).toSet
@@ -102,7 +102,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       s.completed, s.failed, s.requeued, s.admitted, s.frontierSize, s.seenSize))
     assert(counterRows.toSeq == wantCounters)
     assert(Crawler.recentActivity(spark, root).count() == 5)
-    // fetch_log's terminal errors are the oracle's terminal failures
+    // fetches' terminal errors are the oracle's terminal failures
     val terminal = log.where(col("error").isin(
       "http_404", "robots_disallowed", "quarantined_host", "retries_exhausted"))
       .select("url").collect().map(_.getString(0)).toSet
@@ -162,7 +162,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     runEngine(good.toString, maxRounds = 2)
     val r = new SnapshotTable(good.toString).latestRound.get
     // damaged copies of the committed state: the latest manifest's
-    // snapshotFormat rewritten to "1", and its seenSize or hostRows
+    // snapshotFormat rewritten to "2", and its seenSize or hostRows
     // stamp removed
     def damaged(tag: String)(edit: String => String): String = {
       val root = Files.createTempDirectory(s"graft-crawl-$tag").resolve("root")
@@ -180,8 +180,8 @@ class CrawlEngineSpec extends AnyFunSuite {
     def without(stamp: String)(manifest: String): String =
       manifest.replaceAll(s"\"$stamp\": \"\\d+\",?\\s*", "").replaceAll(",\\s*}", "}")
     val cases = Seq(
-      "snapshotFormat" -> damaged("format1")(
-        _.replace("\"snapshotFormat\": \"2\"", "\"snapshotFormat\": \"1\"")),
+      "snapshotFormat" -> damaged("format2")(
+        _.replace("\"snapshotFormat\": \"3\"", "\"snapshotFormat\": \"2\"")),
       "seenSize" -> damaged("noseen")(without("seenSize")),
       "hostRows" -> damaged("nohostrows")(without("hostRows")))
     cases.foreach { case (what, root) =>
@@ -247,7 +247,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // reset-failures clears the quarantine
     Crawler.resetFailures(spark, root, cfgQ)
     val snap = new SnapshotTable(root)
-    assert(snap.loadReplaced(spark, "hosts", s.rounds).where(col("quarantined")).count() == 0)
+    assert(snap.load(spark, "hosts", s.rounds).where(col("quarantined")).count() == 0)
   }
 
   test("mid-crawl seed injection stays oracle-exact (T5 config hot-reload)") {
@@ -304,11 +304,12 @@ class CrawlEngineSpec extends AnyFunSuite {
     val summary = runEngine(root)
     val last = summary.rounds - 1
     val snap = new SnapshotTable(root)
-    val log = snap.loadAppended(spark, "fetch_log", last)
+    val log = snap.load(spark, "fetches", last)
 
     // S6: every completed fetch has its raw page stored
     val nCompleted = log.where(col("status").isin("ok", "ok_non_html")).count()
-    assert(snap.loadAppended(spark, "pages", last).count() == nCompleted)
+    assert(log.where(col("status").isin("ok", "ok_non_html") && col("raw").isNotNull)
+      .count() == nCompleted)
 
     // J6: point lookup returns the exact raw bytes of the corpus doc
     val u = seeds.head
@@ -317,11 +318,12 @@ class CrawlEngineSpec extends AnyFunSuite {
     val chk = Crawler.checkUrl(spark, root, u).collect()
     assert(chk.exists(_.getAs[String]("match_kind") == "exact"))
 
-    // T8: persisted per-round postings == postings recomputed from doc_store
-    val docStore = snap.loadAppended(spark, "doc_store", last)
+    // T8: persisted per-round postings == postings recomputed from the
+    // ok pages' titles and texts
+    val docStore = log.where(col("status") === "ok")
     val want = SearchIndex.postings(docStore.select("url", "title", "text"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
-    val gotP = snap.loadAppended(spark, "postings", last)
+    val gotP = snap.load(spark, "postings", last)
       .select("term", "url", "weight")
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
     assert(gotP == want)
@@ -353,7 +355,7 @@ class CrawlEngineSpec extends AnyFunSuite {
     // persisted postings; per-round manifest deltas exist and their
     // posting counts (exact) sum to the table size
     val idx = Crawler.indexStats(spark, root).collect()(0)
-    val postingsAll = snap.loadAppended(spark, "postings", last)
+    val postingsAll = snap.load(spark, "postings", last)
     assert(idx.getAs[Long]("distinct_terms") ==
       postingsAll.select("term").distinct().count())
     assert(idx.getAs[Long]("indexed_docs") ==

@@ -55,7 +55,7 @@ class CrawlMainSpec extends AnyFunSuite {
       policies.toDS(), cfg, rootB)
     def sched(root: String) = {
       val snap = new SnapshotTable(root)
-      snap.loadAppended(spark, "fetch_log", snap.latestRound.get)
+      snap.load(spark, "fetches", snap.latestRound.get)
         .orderBy(col("round"), col("seq")).select("round", "url", "status")
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
     }

@@ -16,8 +16,8 @@ class JobBudgetSpec extends AnyFunSuite {
 
   /** Max jobs of any one round, and jobs of all eight rounds together
    * (the counts repeat exactly from run to run). */
-  val MaxJobsPerRound = 41
-  val TotalJobs = 221
+  val MaxJobsPerRound = 39
+  val TotalJobs = 209
 
   /** Jobs of a fresh crawl's seed injection: everything `run()` launches
    * before the first `stopRequested` poll. */

@@ -27,14 +27,14 @@ class ResetFailuresSpec extends AnyFunSuite {
       c, root, maxRounds, sketchThreshold)
   }
 
-  /** The open failures: fetch_log's terminal errors after the latest
+  /** The open failures: fetches' terminal errors after the latest
    * reset commit (the latest manifest without round counters). */
   def failedUrls(root: String): Set[String] = {
     val snap = new SnapshotTable(root)
     val last = snap.latestRound.get
     val lastReset = (last to 0 by -1).find(r => !snap.meta(r).contains("dispatched"))
       .getOrElse(-1)
-    snap.loadAppended(spark, "fetch_log", last)
+    snap.load(spark, "fetches", last)
       .where(col("round") > lastReset && col("error").isin(
         "http_404", "robots_disallowed", "quarantined_host", "retries_exhausted"))
       .select("url").collect().map(_.getString(0)).toSet
@@ -49,11 +49,11 @@ class ResetFailuresSpec extends AnyFunSuite {
     val r = snap.latestRound.get
     val m = snap.meta(r)
     def stamp(k: String): Long = m(k).toLong
-    val hosts = snap.loadReplaced(spark, "hosts", r)
-    val frontier = snap.loadHybrid(spark, "frontier", r)
+    val hosts = snap.load(spark, "hosts", r)
+    val frontier = snap.load(spark, "frontier", r)
     val counts = Seq(
       "frontierSize" -> Crawler.liveRows(frontier, hosts).count(),
-      "seenSize" -> snap.loadHybrid(spark, "seen", r).count(),
+      "seenSize" -> snap.load(spark, "seen", r).count(),
       "hostRows" -> hosts.count())
     counts.foreach { case (k, rows) =>
       assert(stamp(k) == rows, s"round $r: stamp $k is ${stamp(k)}, the table holds $rows rows")
@@ -61,6 +61,17 @@ class ResetFailuresSpec extends AnyFunSuite {
     val maxSeq = frontier.agg(max("seq")).collect()(0)
     assert(maxSeq.isNullAt(0) || maxSeq.getLong(0) <= stamp("nextSeq"),
       s"round $r: nextSeq ${stamp("nextSeq")} is below the frontier's max seq ${maxSeq.get(0)}")
+  }
+
+  /** A copy of the crawl state at `root`, under a new directory. */
+  def copyOf(root: String, tag: String): String = {
+    import scala.jdk.CollectionConverters._
+    val from = java.nio.file.Paths.get(root)
+    val to = Files.createTempDirectory(s"graft-rf-$tag").resolve("root")
+    scala.util.Using.resource(Files.walk(from)) { paths =>
+      paths.iterator().asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    }
+    to.toString
   }
 
   def statusRows(root: String): Seq[Crawler.RoundStats] =
@@ -74,9 +85,9 @@ class ResetFailuresSpec extends AnyFunSuite {
     runEngine(rootA, sketchThreshold = Long.MaxValue) // plain anti-join
     runEngine(rootB, sketchThreshold = 0L)            // bloom prefilter always on
     val a = new SnapshotTable(rootA); val b = new SnapshotTable(rootB)
-    val sa = a.loadAppended(spark, "fetch_log", a.latestRound.get)
+    val sa = a.load(spark, "fetches", a.latestRound.get)
       .orderBy("round", "seq").select("round", "url", "status").collect().toSeq
-    val sb = b.loadAppended(spark, "fetch_log", b.latestRound.get)
+    val sb = b.load(spark, "fetches", b.latestRound.get)
       .orderBy("round", "seq").select("round", "url", "status").collect().toSeq
     assert(sa == sb)
   }
@@ -87,9 +98,9 @@ class ResetFailuresSpec extends AnyFunSuite {
     runEngine(rootA, sketchThreshold = 0L)
     runEngine(rootB, cfg.copy(seenSketch = "cuckoo"), sketchThreshold = 0L)
     val a = new SnapshotTable(rootA); val b = new SnapshotTable(rootB)
-    val sa = a.loadAppended(spark, "fetch_log", a.latestRound.get)
+    val sa = a.load(spark, "fetches", a.latestRound.get)
       .orderBy("round", "seq").select("round", "url").collect().toSeq
-    val sb = b.loadAppended(spark, "fetch_log", b.latestRound.get)
+    val sb = b.load(spark, "fetches", b.latestRound.get)
       .orderBy("round", "seq").select("round", "url").collect().toSeq
     assert(sa == sb)
   }
@@ -117,7 +128,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     // the actual table
     val snapRq = new SnapshotTable(root)
     assert(st.getAs[Long]("seen_size") ==
-      snapRq.loadHybrid(spark, "seen", snapRq.latestRound.get).count())
+      snapRq.load(spark, "seen", snapRq.latestRound.get).count())
 
     val resetRound = new SnapshotTable(root).latestRound.get
     val resumed = runEngine(root) // resume
@@ -125,7 +136,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     assert(statusRows(root) == crawled.stats ++ resumed.stats)
     val snap = new SnapshotTable(root)
     val last = snap.latestRound.get
-    val after = snap.loadAppended(spark, "fetch_log", last)
+    val after = snap.load(spark, "fetches", last)
       .where(col("round") > resetRound)
     // every reopened URL was re-dispatched
     val redispatched = after.select("url").collect().map(_.getString(0)).toSet
@@ -155,7 +166,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     val snap = new SnapshotTable(root)
     val failed0 = failedUrls(root)
     assert(failed0.nonEmpty, "need terminal failures in the first 3 rounds")
-    val seenBefore = snap.loadHybrid(spark, "seen", snap.latestRound.get)
+    val seenBefore = snap.load(spark, "seen", snap.latestRound.get)
       .collect().map(_.getString(0)).toSet
     assert(failed0.subsetOf(seenBefore))
 
@@ -163,7 +174,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     assert(reopened == failed0.size)
     assertStampsMatchTables(root)
     val rAfter = snap.latestRound.get
-    val seenAfter = snap.loadHybrid(spark, "seen", rAfter)
+    val seenAfter = snap.load(spark, "seen", rAfter)
       .collect().map(_.getString(0)).toSet
     assert(seenAfter == seenBefore -- failed0)
     // the reset commit stamps seenSize like crawl rounds do, so the /status
@@ -183,8 +194,8 @@ class ResetFailuresSpec extends AnyFunSuite {
     // deterministic admission-gate check: a synthetic re-proposal of every
     // forgotten URL passes the full gate (sketch prefilter + exact seen
     // anti-join + domain + cap) — the deletable-seen semantics in one step
-    val hostCounts = snap.loadReplaced(spark, "hosts", rAfter).select("host", "cnt")
-    val seenDf = snap.loadHybrid(spark, "seen", rAfter)
+    val hostCounts = snap.load(spark, "hosts", rAfter).select("host", "cnt")
+    val seenDf = snap.load(spark, "seen", rAfter)
     import spark.implicits._
     val reproposed = failed0.toSeq.sorted.zipWithIndex.toDF("url", "idx")
       .select(col("url"), graft.functions.gf.url_policy_host(col("url")).as("host"),
@@ -199,7 +210,7 @@ class ResetFailuresSpec extends AnyFunSuite {
     // later pages' links and re-crawled
     runEngine(root, c, sketchThreshold = 0L)
     val last = snap.latestRound.get
-    val readmitted = snap.loadAppended(spark, "fetch_log", last)
+    val readmitted = snap.load(spark, "fetches", last)
       .where(col("round") > rAfter).select("url")
       .collect().map(_.getString(0)).toSet
     assert(failed0.intersect(readmitted).nonEmpty,
@@ -214,10 +225,69 @@ class ResetFailuresSpec extends AnyFunSuite {
     runEngine(rootA, c, sketchThreshold = 0L)
     runEngine(rootB, sketchThreshold = Long.MaxValue)
     val a = new SnapshotTable(rootA); val b = new SnapshotTable(rootB)
-    val sa = a.loadAppended(spark, "fetch_log", a.latestRound.get)
+    val sa = a.load(spark, "fetches", a.latestRound.get)
       .orderBy("round", "seq").select("round", "url").collect().toSeq
-    val sb = b.loadAppended(spark, "fetch_log", b.latestRound.get)
+    val sb = b.load(spark, "fetches", b.latestRound.get)
       .orderBy("round", "seq").select("round", "url").collect().toSeq
     assert(sa == sb)
+  }
+
+  test("a crashed round's orphan directories stay invisible to a reset and to the rounds after it") {
+    // JobBudgetSpec's 400-doc scenario
+    val c = cfg.copy(maxRetries = 3)
+    def crawl(root: String, maxRounds: Int): Unit =
+      runEngine(root, c, maxRounds, sketchThreshold = 100000L)
+    val base = Files.createTempDirectory("graft-rf-crash").resolve("root").toString
+    crawl(base, 3) // rounds 0-2
+    val (clean, crashed) = (copyOf(base, "clean"), copyOf(base, "crashed"))
+    // round 3 runs on one copy and dies between its table writes and its
+    // manifest rename: every directory and blob it wrote is left behind
+    crawl(crashed, 4)
+    Files.delete(java.nio.file.Paths.get(crashed, "_manifests", "r00003.json"))
+    // the reset commits round 3 on both copies, and writes no `fetches`
+    val reopened = Crawler.resetFailures(spark, clean, c)
+    assert(reopened > 0, "fixture must have failures by round 2")
+    assert(Crawler.resetFailures(spark, crashed, c) == reopened)
+    def fetchRows(root: String, r: Int, completed: Boolean = false): Seq[String] = {
+      val f = new SnapshotTable(root).load(spark, "fetches", r)
+      (if (completed) f.where(col("status").isin("ok", "ok_non_html")) else f)
+        .select("round", "seq", "url", "status", "error", "raw")
+        .collect().map(_.toString).sorted.toSeq
+    }
+    def processed(root: String): Long =
+      Crawler.workerStats(spark, root).agg(sum("processed")).collect()(0).getLong(0)
+    assert(fetchRows(crashed, 3) == fetchRows(clean, 3))
+    assert(fetchRows(crashed, 3, completed = true) == fetchRows(clean, 3, completed = true))
+    assert(processed(crashed) == processed(clean))
+    // two rounds later, the schedules still agree
+    crawl(clean, 6)
+    crawl(crashed, 6)
+    def schedule(root: String): Seq[(Int, String, String)] =
+      new SnapshotTable(root).load(spark, "fetches", 5)
+        .orderBy("round", "seq").select("round", "url", "status")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
+    assert(schedule(crashed) == schedule(clean))
+  }
+
+  test("a committed round without a readable seen sketch fails a resume and a reset, naming the blob") {
+    val base = Files.createTempDirectory("graft-rf-blob").resolve("root").toString
+    runEngine(base, maxRounds = 2)
+    val blob = new SnapshotTable(base).blobPath("seen_sketch", 1)
+    Seq[(String, java.nio.file.Path => Unit)](
+      "missing" -> (p => Files.delete(p)),
+      "unreadable" -> (p => Files.write(p, Array[Byte](1, 2, 3)))).foreach { case (what, damage) =>
+      val calls = Seq[(String, String => Any)](
+        "run" -> (root => runEngine(root)),
+        "resetFailures" -> (root => Crawler.resetFailures(spark, root, cfg)))
+      calls.foreach { case (name, call) =>
+        val root = copyOf(base, s"blob-$what")
+        val p = java.nio.file.Paths.get(root).resolve(java.nio.file.Paths.get(base).relativize(blob))
+        damage(p)
+        val e = intercept[IllegalStateException](call(root))
+        assert(e.getMessage.contains(p.toString) && e.getMessage.contains(what),
+          s"$name on a $what sketch blob: ${e.getMessage}")
+        assert(new SnapshotTable(root).latestRound.contains(1))
+      }
+    }
   }
 }

@@ -956,18 +956,16 @@ object Crawler {
         "seen" -> st.pending.select("url").unionByName(admitted.select("url"))) ++
       Option.when(nDispatched > 0)("fetches" -> fetches) ++
       idxObs.map(o => "postings" -> postingsRows.observe(o,
-        approx_count_distinct(col("term")).as("terms"),
-        approx_count_distinct(col("url")).as("docs"),
-        count(lit(1)).as("postings")))
+        approx_count_distinct(col("term")).as("idx_new_terms_approx"),
+        approx_count_distinct(col("url")).as("idx_new_docs_approx"),
+        count(lit(1)).as("idx_new_postings")))
     // every per-host delta comes from dispatched or injected rows, so
     // without either `hosts` is unchanged; round 0 writes it
     commitState(ctx.spark, ctx.snap, next,
       hostsChanged = round == 0 || nDispatched > 0 || st.pendingRows > 0,
       counters = Some(rs), appended = appended,
-      metaLate = () => idxObs.map(o => observedCounts(o, round, "postings written"))
-        .map(m => Map("idx_new_terms_approx" -> m("terms"), "idx_new_docs_approx" -> m("docs"),
-          "idx_new_postings" -> m("postings")).map { case (k, v) => k -> v.toString })
-        .getOrElse(Map.empty))
+      metaLate = () => idxObs.map(o => observedCounts(o, round, "postings written")
+        .map { case (k, v) => k -> v.toString }).getOrElse(Map.empty))
     rs
   }
 
@@ -1117,7 +1115,7 @@ object Crawler {
    * ([[indexStatsHistory]]) observed for free during each postings write. */
   def indexStats(spark: SparkSession, root: String): DataFrame = {
     val (snap, r, _) = committed(root)
-    snap.loadOr(spark, "postings", r, PostingsDdl).agg(
+    postings(spark, snap, r).agg(
       countDistinct(col("term")).as("distinct_terms"),
       countDistinct(col("url")).as("indexed_docs"),
       count(lit(1)).as("postings_rows"))
@@ -1187,7 +1185,7 @@ object Crawler {
 
   /** `fetches` at committed round `r`: every fetch of the crawl, one row
    * per dispatched URL per round (see [[commitRound]]). */
-  private[operators] def fetches(spark: SparkSession, snap: SnapshotTable, r: Int): DataFrame =
+  private def fetches(spark: SparkSession, snap: SnapshotTable, r: Int): DataFrame =
     snap.loadOr(spark, "fetches", r, FetchesDdl)
 
   /** The stored pages at committed round `r`: the completed fetches. */
